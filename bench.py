@@ -261,32 +261,6 @@ def run_hints_ab_bench(
     )
 
 
-def run_cache_ab_bench(cores: int, rows_list: list[int], reps: int = 3) -> dict:
-    """Interleaved A/B of the eager signature-cache materialization (round-5
-    action-probe finding): eager ON runs one dedicated cache-fill job before
-    the pairs action; OFF lets the ~10 concurrent AQE stage-jobs first-compute
-    the cache and serialize on per-block locks."""
-    from mhap_spark.config import PRESET_SCALE, hints_default_for_rows
-
-    result: dict = {"cores": cores, "reps": reps, "sizes": {}}
-    for rows in rows_list:
-        base = PRESET_SCALE.with_overrides(
-            no_broadcast_hints=hints_default_for_rows(rows)
-        )
-        sub = run_cfg_ab_bench(
-            cores,
-            [rows],
-            {
-                "eager_on": base,
-                "eager_off": base.with_overrides(eager_signature_cache=False),
-            },
-            reps=reps,
-            tag="cache",
-        )
-        result["sizes"].update(sub["sizes"])
-    return result
-
-
 def run_cfg_ab_bench(
     cores: int, rows_list: list[int], variants: dict, reps: int = 3,
     tag: str = "ab",
@@ -962,6 +936,8 @@ def stage_scaling_bench(rows: int, lo: int = 8, hi: int = 32, reps: int = 2) -> 
 
 
 def main() -> None:
+    from mhap_spark.session import default_cores
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--pipeline-only", action="store_true")
     ap.add_argument("--stages-only", action="store_true")
@@ -971,9 +947,6 @@ def main() -> None:
     ap.add_argument("--stage-scaling", action="store_true")
     ap.add_argument("--hints-ab", action="store_true",
                     help="interleaved no-broadcast-hints ON/OFF A/B")
-    ap.add_argument("--cache-ab", action="store_true",
-                    help="interleaved A/B of eager signature-cache "
-                    "materialization (round-5 action-probe finding)")
     ap.add_argument("--index-growth", action="store_true",
                     help="streaming probe latency vs index size, flat vs band layout")
     ap.add_argument("--ab-rows", type=str, default="20000,300000",
@@ -985,7 +958,7 @@ def main() -> None:
                     help="timed pipeline reps (min reported)")
     ap.add_argument("--hints", choices=["auto", "on", "off"], default="auto",
                     help="force no_broadcast_hints instead of the size rule")
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int, default=default_cores())
     ap.add_argument("--master-str", default=None,
                     help="explicit master for --pipeline-only (e.g. "
                     "local-cluster[4,8,16384] for real executor JVMs)")
@@ -1075,11 +1048,6 @@ def main() -> None:
     if args.hints_ab:
         rows_list = [int(x) for x in args.ab_rows.split(",") if x]
         print(json.dumps(run_hints_ab_bench(args.cores, rows_list, reps=args.reps)))
-        return
-
-    if args.cache_ab:
-        rows_list = [int(x) for x in args.ab_rows.split(",") if x]
-        print(json.dumps(run_cache_ab_bench(args.cores, rows_list, reps=args.reps)))
         return
 
     if args.index_growth:

@@ -48,13 +48,14 @@ BENCH_NAMES = [
 
 
 def main() -> None:
+    from mhap_spark.session import default_cores
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--queries", type=str, default=None)
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--plans", type=str, default=None)
     ap.add_argument("--noop", action="store_true")
-    ap.add_argument("--cores", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int, default=default_cores())
     args = ap.parse_args()
 
     import __spark_entry__ as entrymod

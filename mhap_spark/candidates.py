@@ -9,16 +9,15 @@ HAVING filter.  Pair-order dedup (``src < dst``, :199-219) is a predicate.
 Skew handling (north rule "salted repartition + hash-join + groupBy with
 explicit skew mitigation for hot bands"):
 
-* a map-side-combinable count pre-pass sizes every bucket BEFORE any list is
-  collected, so a mega-bucket can never materialize;
-* buckets larger than ``max_bucket_size`` are dropped and accounted in a
-  metrics row — the scale analog of the reference's popular-k-mer noise
-  suppression (mhap/sketch/FrequencyCounts.java:171-186);
-* pair generation offers two physical strategies (bench-selected):
-  - ``join``: salted self-equi-join on the band key — hot buckets are salted
-    on the left and replicated on the right so no single task owns a hot key;
-  - ``grouped``: collect bucket members (bounded by the cap) and emit pairs
-    with two JVM-side explodes — one shuffle fewer, best when caps are tight.
+* a window count sizes every bucket BEFORE any list is collected, so a
+  mega-bucket can never materialize;
+* buckets larger than ``max_bucket_size`` are dropped (pairs mode) or
+  salted (star mode) and counted in the funnel metrics — the scale analog
+  of the reference's popular-k-mer noise suppression
+  (mhap/sketch/FrequencyCounts.java:171-186);
+* both modes emit from one window over the band_hash exchange: pairs mode
+  collects each eligible bucket and double-explodes it, star mode emits
+  linear hub edges.
 """
 
 from __future__ import annotations
@@ -46,17 +45,24 @@ def bucket_sizes(bands: DataFrame) -> DataFrame:
     )
 
 
-def _funnel_exprs(cfg: MhapConfig) -> list:
-    """Aggregate expressions for the funnel metrics (shared by the standalone
-    bucket_stats query and the zero-extra-job Observation path).
+def _funnel_exprs(cfg: MhapConfig, is_hub=None) -> list:
+    """Aggregate expressions for the funnel metrics, evaluated as an
+    Observation on the plan that sizes the buckets (zero extra jobs).
+
+    ``is_hub`` selects exactly one row per bucket: over one-row-per-bucket
+    input (``bucket_sizes``) it is omitted (every row counts); over the
+    window output of the pairs/star plans it is ``image_id == bucket min``,
+    so the aggregates equal the one-row-per-bucket values.
 
     ``candidate_pairs_generated`` counts emitted edges exactly: C(n,2) per
-    eligible bucket in pairs modes, n−1 per bucket in star mode — where
+    eligible bucket in pairs mode, n−1 per bucket in star mode — where
     star-salt counts oversize buckets too (salted emission still produces
     exactly n−1 edges per bucket: members minus sub-hubs, plus sub-hub
     chain links; the global min is always its own sub-bucket's hub).
     ``n_buckets_capped`` counts over-cap buckets in every mode — dropped in
     pairs/star-drop, salted in star-salt."""
+    if is_hub is None:
+        is_hub = F.lit(True)
     star = cfg.candidate_mode == "star"
     per_bucket = (
         F.col("bucket_size") - 1
@@ -69,106 +75,53 @@ def _funnel_exprs(cfg: MhapConfig) -> list:
         else F.col("bucket_size").between(2, cfg.max_bucket_size)
     )
     return [
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum(F.when(F.col("bucket_size") > cfg.max_bucket_size, 1).otherwise(0)).alias(
-            "n_buckets_capped"
-        ),
+        F.count(F.when(is_hub, 1)).alias("n_buckets"),
+        F.sum(
+            F.when(is_hub & (F.col("bucket_size") > cfg.max_bucket_size), 1)
+            .otherwise(0)
+        ).alias("n_buckets_capped"),
         F.max("bucket_size").alias("max_bucket_size_seen"),
-        F.sum(F.when(counted, per_bucket).otherwise(0)).alias(
+        F.sum(F.when(is_hub & counted, per_bucket).otherwise(0)).alias(
             "candidate_pairs_generated"
         ),
     ]
 
 
-def bucket_stats(sizes: DataFrame, cfg: MhapConfig) -> DataFrame:
-    """One-row funnel metrics (mirrors the reference's stderr stats,
-    mhap/main/MhapMain.java:572-590).  Candidate count is mode-aware:
-    C(n,2) per bucket in "pairs" mode, n−1 in "star" mode.
+def _pairs_grouped_onepass(
+    bands: DataFrame, cfg: MhapConfig, funnel_obs: Observation | None = None
+) -> DataFrame:
+    """Pairs-mode emission: bucket sizing via a window count over the SAME
+    exchange the collect_list groupBy uses, so the upstream plan (for an
+    unpersisted signature source, the whole Arrow sketch kernel) is
+    evaluated once.  The mega-bucket discipline holds: the count is
+    computed without collecting any list (WindowExec sorts, spills, and
+    never materializes a bucket), over-cap buckets are filtered BEFORE
+    collect_list, and the groupBy reuses the window's hash partitioning so
+    no second exchange appears.  Pairs are emitted by a double explode
+    inside whole-stage codegen.
 
-    Prefer passing ``funnel_obs`` to candidate_pairs: the same metrics then
-    ride the pairs job as an Observation — zero extra jobs/scans."""
-    return sizes.agg(*_funnel_exprs(cfg))
+    ``funnel_obs`` rides the window output the way star mode's does: the
+    bucket min is added to the same window only when metrics are requested,
+    and hub rows (image_id == min, one per bucket) carry the per-bucket
+    sums — pinned exact against ``bucket_sizes`` by tests/test_engine_parity.py."""
+    from pyspark.sql import Window
 
-
-def _eligible_bands(bands: DataFrame, sizes: DataFrame, cfg: MhapConfig) -> DataFrame:
-    ok = sizes.filter(
-        (F.col("bucket_size") >= 2) & (F.col("bucket_size") <= cfg.max_bucket_size)
-    )
-    # bucket-stats side scales with the bucket count — never broadcast
-    return bands.join(scaled(ok, cfg), ["band_hash"]).select(
-        "image_id", "band_hash", "bucket_size"
-    )
-
-
-def _pairs_grouped(eligible: DataFrame) -> DataFrame:
-    """collect_list (bounded by the cap) + double explode — zero extra shuffle
-    beyond the groupBy; pairs are emitted inside whole-stage codegen."""
-    grouped = eligible.groupBy("band_hash").agg(
-        F.collect_list("image_id").alias("ids")
+    w = Window.partitionBy("band_hash")
+    sized = bands.withColumn("bucket_size", F.count(F.lit(1)).over(w))
+    if funnel_obs is not None:
+        sized = sized.withColumn("hub", F.min("image_id").over(w)).observe(
+            funnel_obs, *_funnel_exprs(cfg, F.col("image_id") == F.col("hub"))
+        )
+    grouped = (
+        sized.where(F.col("bucket_size").between(2, cfg.max_bucket_size))
+        .groupBy("band_hash")
+        .agg(F.collect_list("image_id").alias("ids"))
     )
     return (
         grouped.select(F.explode("ids").alias("src"), "ids")
         .select("src", F.explode("ids").alias("dst"))
         .where(F.col("src") < F.col("dst"))
     )
-
-
-def _pairs_grouped_onepass(bands: DataFrame, cfg: MhapConfig) -> DataFrame:
-    """Single-subtree grouped pair emission (round-6 optimization, guide
-    §2.4): bucket sizing via a window count over the SAME exchange the
-    collect_list groupBy uses, instead of a separate ``bucket_sizes``
-    aggregation joined back onto a second copy of ``bands``.
-
-    Why it matters: the two-subtree form evaluates the upstream plan twice —
-    for an unpersisted signature source (the ops-layer MinHash/doc queries)
-    that re-runs the whole Arrow sketch kernel, which the round-6 plan
-    audit measured as 2 MapInPandas executions per query.  The window form
-    keeps the mega-bucket discipline intact: the count is computed without
-    collecting any list (WindowExec sorts, spills, and never materializes a
-    bucket), over-cap buckets are filtered BEFORE collect_list, and the
-    groupBy reuses the window's hash partitioning so no second exchange
-    appears.  Output is identical to ``_pairs_grouped`` over
-    ``_eligible_bands`` (same eligible set, same pair emission)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("band_hash")
-    eligible = bands.withColumn(
-        "bucket_size", F.count(F.lit(1)).over(w)
-    ).where(F.col("bucket_size").between(2, cfg.max_bucket_size))
-    return _pairs_grouped(eligible)
-
-
-def _pairs_join(eligible: DataFrame, cfg: MhapConfig, hot_threshold: int) -> DataFrame:
-    """Salted self-equi-join.  Cold buckets join on the bare band key; hot
-    buckets (size > hot_threshold) get the classic skew treatment: the left
-    side carries salt = pmod(hash(id), S), the right side is replicated to
-    every salt, so each unordered pair is produced exactly once and no task
-    owns an entire hot bucket."""
-    s = cfg.salt_buckets
-    cold = eligible.filter(F.col("bucket_size") <= hot_threshold)
-    hot = eligible.filter(F.col("bucket_size") > hot_threshold)
-
-    cold_pairs = (
-        cold.alias("l")
-        .join(
-            cold.select("image_id", "band_hash").alias("r"),
-            ["band_hash"],
-        )
-        .where(F.col("l.image_id") < F.col("r.image_id"))
-        .select(F.col("l.image_id").alias("src"), F.col("r.image_id").alias("dst"))
-    )
-
-    hot_l = hot.withColumn("salt", F.pmod(F.xxhash64("image_id"), F.lit(s)))
-    hot_r = hot.select("image_id", "band_hash").withColumn(
-        "salt", F.explode(F.sequence(F.lit(0), F.lit(s - 1)).cast("array<long>"))
-    )
-    hot_pairs = (
-        hot_l.alias("l")
-        .join(hot_r.alias("r"), ["band_hash", "salt"])
-        .where(F.col("l.image_id") < F.col("r.image_id"))
-        .select(F.col("l.image_id").alias("src"), F.col("r.image_id").alias("dst"))
-    )
-    return cold_pairs.unionByName(hot_pairs)
 
 
 def _pairs_star(
@@ -217,24 +170,8 @@ def _pairs_star(
         F.min("image_id").over(w).alias("src"),
     )
     if funnel_obs is not None:
-        is_hub = F.col("image_id") == F.col("src")
-        star_salt = cfg.oversize_star == "salt"
-        counted = (
-            F.col("bucket_size") >= 2
-            if star_salt
-            else F.col("bucket_size").between(2, cfg.max_bucket_size)
-        )
         sized = sized.observe(
-            funnel_obs,
-            F.sum(F.when(is_hub, 1).otherwise(0)).alias("n_buckets"),
-            F.sum(
-                F.when(is_hub & (F.col("bucket_size") > cfg.max_bucket_size), 1)
-                .otherwise(0)
-            ).alias("n_buckets_capped"),
-            F.max("bucket_size").alias("max_bucket_size_seen"),
-            F.sum(
-                F.when(is_hub & counted, F.col("bucket_size") - 1).otherwise(0)
-            ).alias("candidate_pairs_generated"),
+            funnel_obs, *_funnel_exprs(cfg, F.col("image_id") == F.col("src"))
         )
     if cfg.oversize_star != "salt":
         return (
@@ -301,7 +238,7 @@ def probe_candidates(
     are matched against the indexed table with no pair-order pruning.
 
     Returns (probe_id, index_id, votes ≥ gate).  The indexed side's bucket
-    sizes are capped exactly like the self-join path.
+    sizes are capped exactly like the pairs-mode path.
 
     ``funnel_obs`` (optional) rides the INDEX side's bucket sizes — in probe
     mode ``candidate_pairs_generated`` therefore counts both-stored bucket
@@ -328,8 +265,6 @@ def probe_candidates(
 def candidate_pairs(
     signatures: DataFrame,
     cfg: MhapConfig,
-    strategy: str = "grouped",
-    hot_threshold: int = 64,
     funnel_obs: Observation | None = None,
     keep_oversize_flag: bool = False,
 ) -> DataFrame:
@@ -360,7 +295,7 @@ def candidate_pairs(
     if cfg.min_store_shingles > 0:
         if cfg.candidate_mode == "star":
             raise ValueError(
-                "min_store_shingles applies to pairs/join candidate modes; "
+                "min_store_shingles applies to pairs candidate mode; "
                 "star-mode hub emission has no probe/store asymmetry"
             )
         stored = signatures.where(
@@ -403,32 +338,9 @@ def candidate_pairs(
             )
             .select(*cols)
         )
-    if strategy == "grouped" and funnel_obs is None:
-        # fast path: no funnel metrics requested → bucket sizing rides the
-        # collect_list exchange as a window count (one evaluation of the
-        # signature subtree; see _pairs_grouped_onepass).  The funnel path
-        # keeps the standalone sizes aggregation because the Observation's
-        # per-bucket metrics are defined over one-row-per-bucket input.
-        pairs = _pairs_grouped_onepass(bands, cfg)
-        return (
-            pairs.groupBy("src", "dst")
-            .agg(F.count(F.lit(1)).alias("votes"))
-            .filter(F.col("votes") >= F.lit(cfg.min_band_matches()))
-        )
-    sizes = bucket_sizes(bands)
-    if funnel_obs is not None:
-        sizes = sizes.observe(funnel_obs, *_funnel_exprs(cfg))
-    eligible = _eligible_bands(bands, sizes, cfg)
-    if strategy == "grouped":
-        pairs = _pairs_grouped(eligible)
-        gate = cfg.min_band_matches()
-    elif strategy == "join":
-        pairs = _pairs_join(eligible, cfg, hot_threshold)
-        gate = cfg.min_band_matches()
-    else:
-        raise ValueError(f"unknown candidate strategy {strategy!r}")
+    pairs = _pairs_grouped_onepass(bands, cfg, funnel_obs=funnel_obs)
     return (
         pairs.groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("votes"))
-        .filter(F.col("votes") >= F.lit(gate))
+        .filter(F.col("votes") >= F.lit(cfg.min_band_matches()))
     )

@@ -72,7 +72,7 @@ class MhapConfig:
     #        suppression analog, mhap/sketch/FrequencyCounts.java:171-186);
     #        a cluster larger than cap × (minority-bucket fan-out) can then
     #        FRAGMENT — measured in tests/test_star_mode.py.
-    # Pairs/join modes always drop oversize buckets: C(n,2) emission on a
+    # Pairs mode always drops oversize buckets: C(n,2) emission on a
     # mega-bucket is quadratic and no salting fixes that.
     oversize_star: str = "salt"
     num_bands: int = 0               # bands used for bucketing; 0 = all
@@ -93,32 +93,6 @@ class MhapConfig:
                                      # operating point (DNA's τ=0.78 identity ≈
                                      # jaccard 0.0095, too loose for near-dup
                                      # images; 0 disables)
-    # one-bit MinHash Hamming prefilter (mhap/sketch/MinHashBitSketch.java:31-92):
-    # signature-slot LSBs packed into longs at sketch time; candidate pairs
-    # whose packed-bit Hamming distance exceeds prefilter_max_hamming() are
-    # dropped BEFORE the wide bottom-k arrays are joined.  The bound is
-    # derived from the effective jaccard gate with a prefilter_margin_sd
-    # binomial safety margin, so a true pair is dropped with probability
-    # ≲ Φ(−margin) (≈1e-9 at 6σ).  Only filters usefully when the jaccard
-    # gate is ≳0.25 (else the bound exceeds the random-pair mean n/2).
-    #
-    # Deliberately OFF in every preset, by measurement (round-3): at the
-    # flagship star-mode operating point the votes≥2-of-128-bands gate
-    # already leaves a 96%-pure candidate pool (8k-row probe: 21,107
-    # candidates → 20,224 verified; max observed pair Hamming 286 vs bound
-    # 313 at j=0.04), so the prefilter would cut ZERO rows while adding two
-    # narrow joins.  It earns its keep only for tight direct gates
-    # (min_jaccard ≳ 0.25) on pairs-mode candidate pools — the regime
-    # tests/test_prefilter.py measures a 15% join-input cut in.
-    #
-    # Caveat with tf-idf weighting (repeat_weight ≥ 0): bitsig LSBs come
-    # from WEIGHTED slots, whose match probability is the weighted jaccard —
-    # the bound assumes that tracks the plain bottom-k jaccard the verify
-    # gate measures.  Holds empirically at the default 6σ margin
-    # (tests/test_prefilter.py::test_prefilter_preserves_output_with_freq_
-    # weighting); lower margins with weighting are on the user.
-    bit_prefilter: bool = False
-    prefilter_margin_sd: float = 6.0
 
     # min-length load filter (mhap/main/MhapMain.java:79-81 minOlapLength
     # analog): rows whose TOTAL shingle count (multiset, duplicates kept —
@@ -133,8 +107,8 @@ class MhapConfig:
     # in the band index but still PROBE it, so a
     # (short, long) pair is found via the long row's index entry while
     # (short, short) pairs are skipped — the reference's asymmetric
-    # index-size/recall trade.  0 disables (symmetric index).  Pairs/join
-    # modes only; star mode's hub emission has no probe/store asymmetry.
+    # index-size/recall trade.  0 disables (symmetric index).  Pairs
+    # mode only; star mode's hub emission has no probe/store asymmetry.
     min_store_shingles: int = 0
 
     # --- clustering ---
@@ -166,17 +140,6 @@ class MhapConfig:
     # stays for unknown-scale callers, where OOM-safety beats small-corpus
     # speed.
     no_broadcast_hints: bool = True
-    # True (default): when the pipeline runs WITHOUT a checkpoint store, the
-    # persisted signature cache is materialized by one dedicated job before
-    # the pairs/CC action.  That action otherwise launches ~10 independent
-    # AQE stage-jobs (one per Exchange over the signature cache) whose plans
-    # all contain the uncomputed Arrow kernel; concurrent first-compute of
-    # the same cache blocks serializes on per-block locks while occupying
-    # every task slot with waiters (tools/action_probe.py, round 5: the
-    # ten-job wave ran 34 s at 32c for ~10.5 s of kernel work).  False keeps
-    # the old fully-lazy behavior (A/B'd by bench.py --cache-ab).
-    eager_signature_cache: bool = True
-    salt_buckets: int = 8            # salt fan-out for hot-band pair generation
 
     def band_count(self) -> int:
         return band_count_for(self.num_hashes, self.rows_per_band, self.num_bands)
@@ -187,29 +150,11 @@ class MhapConfig:
         mhap/impl/MinHashSearch.java:204)."""
         return max(1, -(-self.num_min_matches // self.rows_per_band))
 
-    def effective_min_jaccard(self) -> float:
-        """The binding stage-2 jaccard gate: max of the direct gate and the
-        jaccard implied by the identity threshold (inverse Mash transform,
-        mhap/sketch/BottomOverlapSketch.java:391-395: τ = exp(ln(2j/(1+j))/k)
-        ⇒ j = τᵏ/(2−τᵏ))."""
-        tk = self.threshold ** self.k
-        return max(self.min_jaccard, tk / (2.0 - tk))
-
-    def prefilter_max_hamming(self) -> int:
-        """Accept bound for the one-bit sketch prefilter: a pair with slot
-        agreement ≥ j mismatches each LSB w.p. (1−j)/2, so mismatch count is
-        ≲ Binomial(n, (1−j)/2); bound = mean + margin·σ_max (σ_max = √n/2)."""
-        import math
-
-        j = self.effective_min_jaccard()
-        n = self.num_hashes
-        return int(n * (1.0 - j) / 2.0 + self.prefilter_margin_sd * math.sqrt(n) / 2.0)
-
     # knobs that change the physical plan but provably not the output
-    # (byte-identical A/B on record: BENCH/HINTS_AB_raw.json, CACHE_AB_raw) —
+    # (byte-identical A/B on record: BENCH/HINTS_AB_raw.json) —
     # excluded from config_hash so toggling them between a write and a
     # resume does not silently invalidate checkpoints and recompute stages
-    _EXECUTION_ONLY_KNOBS = ("no_broadcast_hints", "eager_signature_cache")
+    _EXECUTION_ONLY_KNOBS = ("no_broadcast_hints",)
 
     def config_hash(self) -> str:
         """Stable hash of all semantic knobs — keys checkpoint manifests.

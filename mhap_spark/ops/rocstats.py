@@ -182,7 +182,7 @@ def pair_confusion_with_rescue(
     Here the alignment is replaced by the engine's own stage-2 verify run
     at a LOOSER gate: fp-classified pairs are re-scored with bottom-k
     Jaccard (threshold = ``rescue_threshold``, default 0.9·cfg.threshold;
-    min_jaccard and the bit prefilter disabled so only the identity gate
+    min_jaccard disabled so only the identity gate
     binds) and pairs passing it move out of fp.  Output adds
     ``fp_rescued`` and ``ppv_rescued`` = tp_eff / (tp_eff + fp_final)
     with tp_eff = tp + fp_rescued, alongside the unrescued metrics."""
@@ -194,9 +194,7 @@ def pair_confusion_with_rescue(
     base = pair_confusion(found, truth, max_cluster_members, _parts=parts)
     _ids, _f_all, f, t = parts
     fp_pairs = f.join(t, ["src", "dst"], "left_anti")
-    loose = cfg.with_overrides(
-        threshold=rescue_threshold, min_jaccard=0.0, bit_prefilter=False
-    )
+    loose = cfg.with_overrides(threshold=rescue_threshold, min_jaccard=0.0)
     rescued = verified_pairs(
         fp_pairs.withColumn("votes", F.lit(1)), signatures, loose
     )

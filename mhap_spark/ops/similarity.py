@@ -203,8 +203,9 @@ def _block_cos_pairs_pdf(pdf, min_cos: float):
     tests/test_ops.py::test_block_cos_kernel_bit_exact.
 
     Row chunking bounds the (rows × block) scratch matrix; pair emission is
-    upper-triangle in ascending-id order, matching ``l.id < r.id`` (UTF-8
-    byte order equals code-point order, so string ids sort identically)."""
+    upper-triangle in ascending-id order with equal ids masked, matching
+    ``l.id < r.id`` (UTF-8 byte order equals code-point order, so string
+    ids sort identically)."""
     import pandas as pd
 
     ids_raw = pdf["id"].to_numpy()
@@ -223,6 +224,8 @@ def _block_cos_pairs_pdf(pdf, min_cos: float):
             acc += X[lo:hi, k][:, None] * X[:, k][None, :]
         cos = acc / (nrm[lo:hi][:, None] * nrm[None, :])
         m = (cos >= min_cos) & (col_j > np.arange(lo, hi)[:, None])
+        # a block may hold a duplicated id: never pair it with itself
+        m &= ids[lo:hi, None] != ids[None, :]
         r, c = np.nonzero(m)
         srcs.append(ids[r + lo])
         dsts.append(ids[c])

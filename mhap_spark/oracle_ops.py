@@ -134,8 +134,8 @@ def round_half_up(x: float, ndigits: int = 6) -> float:
 
 # ---------------------------------------------------------------------------
 # ops/dedup.minhash_lsh_doc_pairs replica: char-k-gram shingles →
-# weighted MinHash → band buckets → all-pairs votes ≥ gate ("pairs" mode,
-# "grouped" strategy — every bucket of size in [2, cap] emits all pairs).
+# weighted MinHash → band buckets → all-pairs votes ≥ gate ("pairs" mode —
+# every bucket of size in [2, cap] emits all pairs).
 # ---------------------------------------------------------------------------
 
 

@@ -41,7 +41,6 @@ def run_pipeline(
     input_df: DataFrame,
     cfg: MhapConfig,
     store: CheckpointStore | None = None,
-    candidate_strategy: str = "grouped",
     input_key: str | None = None,
 ) -> dict[str, DataFrame]:
     """Returns {"signatures", "pairs", "clusters"} DataFrames plus
@@ -87,13 +86,13 @@ def run_pipeline(
             # set — without a checkpoint the Arrow kernel would re-run per
             # consumer; cache is the in-memory stand-in for checkpoint A
             signatures = signatures.persist()
-            if cfg.eager_signature_cache:
-                # materialize the cache with ONE dedicated job before the
-                # big downstream action — otherwise its ~10 concurrent AQE
-                # stage-jobs first-compute the same cache blocks and
-                # serialize on per-block locks (see config.py, measured by
-                # tools/action_probe.py round 5)
-                signatures.count()
+            # materialize the cache with ONE dedicated job before the big
+            # downstream action — otherwise its ~10 concurrent AQE
+            # stage-jobs first-compute the same cache blocks and serialize
+            # on per-block locks while occupying every task slot with
+            # waiters (tools/action_probe.py, round 5: the ten-job wave ran
+            # 34 s at 32c for ~10.5 s of kernel work)
+            signatures.count()
 
     # --- stage B: candidate + verified pairs --------------------------------
     funnel_obs: Observation | None = None
@@ -110,7 +109,7 @@ def run_pipeline(
             cfg.candidate_mode == "star" and cfg.oversize_star == "salt"
         )
         cands = candidate_pairs(
-            signatures, cfg, strategy=candidate_strategy, funnel_obs=funnel_obs,
+            signatures, cfg, funnel_obs=funnel_obs,
             keep_oversize_flag=track_purity,
         )
         if track_purity:
@@ -181,14 +180,13 @@ def _main() -> None:
     # given — a 512 argparse default silently replaced preset 2's 256 and
     # preset 3's 768, so the advertised operating points never ran
     ap.add_argument("--num-hashes", type=int, default=None)
-    ap.add_argument("--strategy", default="grouped", choices=["grouped", "join"])
     ap.add_argument(
         "--min-store-shingles",
         type=int,
         default=0,
         help="store filter (mhap/main/MhapMain.java:79 --min-store-length): "
         "rows below this shingle count probe the band index but are not "
-        "stored in it; 0 = symmetric index (pairs/join modes only)",
+        "stored in it; 0 = symmetric index (pairs mode only)",
     )
     ap.add_argument(
         "--m4-out",
@@ -255,7 +253,7 @@ def _main() -> None:
         print(f"auto filter_cutoff={cfg.filter_cutoff:.3e}")
     store = CheckpointStore(args.checkpoint_dir) if args.checkpoint_dir else None
     out = run_pipeline(
-        spark, df, cfg, store=store, candidate_strategy=args.strategy,
+        spark, df, cfg, store=store,
         input_key=f"rows={args.rows},seed={args.seed},images={int(not args.no_images)}",
     )
     n_pairs = out["pairs"].count()

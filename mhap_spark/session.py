@@ -7,15 +7,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """Local-mode core count: ``$SPARK_GRAFT_CPUS`` when it is a number,
+    else the host's CPU count (a fixed fallback oversubscribes small hosts)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS", "")
+    return int(env) if env.isdigit() else (os.cpu_count() or 1)
+
+
 def build_session(
     app: str = "mhap_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra: dict | None = None,
 ) -> SparkSession:
-    cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cores}]"
-    n_cores = int(cores) if cores.isdigit() else 32
+    n_cores = default_cores()
+    master = master or f"local[{n_cores}]"
     if master.startswith("local[") and master[6:-1].isdigit():
         n_cores = int(master[6:-1])
     elif master.startswith("local-cluster["):

@@ -64,113 +64,21 @@ def jaccard_to_identity_col(jaccard, k: int):
     )
 
 
-def bottom_k_jaccard_col(a, b):
-    """Bottom-k Jaccard as a pure JVM column expression over two ascending
-    distinct int64 arrays — algebraically identical to the merge loop in
-    mhap/sketch/BottomOverlapSketch.java:304-364: with k = min(|a|,|b|) and
-    u_k = the k smallest elements of the distinct union, score =
-    |{x ∈ u_k : x ∈ a ∩ b}| / k.  Whole-stage-codegen'd; no Python workers
-    in the verify path (they oversubscribe cores against the JVM join threads).
-
-    Ordering note: array_sort compares SIGNED int64 while the kernel selected
-    the bottom-k in unsigned uint64 order — consistent only because every
-    GRAFT-HASH-1 shingle hash is 63-bit (fmix64 then >>1, hashing.py spec), so
-    the two orders coincide; pinned by tests/test_hashing.py's <2^63 asserts
-    (a full-64-bit hash spec would silently change which u_k this picks)."""
-    k = F.least(F.size(a), F.size(b))
-    u_k = F.slice(F.array_sort(F.array_union(a, b)), 1, k)
-    inter = F.array_intersect(a, b)
-    hits = F.size(F.array_intersect(u_k, inter))
-    return F.when(k > 0, hits.cast("double") / k.cast("double")).otherwise(F.lit(0.0))
-
-
-def hamming_prefilter(
-    candidates: DataFrame, signatures: DataFrame, cfg: MhapConfig
-) -> DataFrame:
-    """Gate candidate pairs on one-bit-sketch Hamming distance BEFORE the
-    wide bottom-k arrays are joined (mhap/sketch/MinHashBitSketch.java:31-92
-    + the index's early distance cut, mhap/sketch/BitVectorIndex.java:88-117).
-
-    The bitsig column is ~num_hashes/8 bytes vs ~8·ordered_sketch_size bytes
-    for bottomk (64 B vs 12 KiB at the default config), so pairs rejected
-    here never pull the 12 KiB arrays through the verify shuffle.  The bound
-    (cfg.prefilter_max_hamming) is conservative — see MhapConfig — so
-    surviving-verified output is unchanged w.h.p."""
-    bs = signatures.select("image_id", "bitsig")
-    # corpus-scaled side: never broadcast (see verify_pairs)
-    joined = (
-        candidates.join(
-            scaled(bs.select(
-                F.col("image_id").alias("src"), F.col("bitsig").alias("bs_src")
-            ), cfg),
-            "src",
-        )
-        .join(
-            scaled(bs.select(
-                F.col("image_id").alias("dst"), F.col("bitsig").alias("bs_dst")
-            ), cfg),
-            "dst",
-        )
-    )
-    hamming = F.aggregate(
-        F.zip_with("bs_src", "bs_dst", lambda a, b: F.bit_count(a.bitwiseXOR(b))),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    return (
-        joined.withColumn("bit_hamming", hamming)
-        .where(F.col("bit_hamming") <= F.lit(cfg.prefilter_max_hamming()))
-        .select(*candidates.columns)
-    )
-
-
 def verified_pairs(
-    candidates: DataFrame,
-    signatures: DataFrame,
-    cfg: MhapConfig,
-    impl: str = "arrow",
-    prune: bool = False,
+    candidates: DataFrame, signatures: DataFrame, cfg: MhapConfig
 ) -> DataFrame:
     """(src, dst, votes) ⋈ bottomk×2 → (src, dst, votes, jaccard, score) with
     score ≥ threshold.  Two shuffle joins against the (much wider) signature
     table; Catalyst prunes signatures to (image_id, bottomk) at the scan.
+    Shuffle compression tames the array redundancy: sorted small-magnitude
+    int64 arrays compress ~10× under lz4.
 
-    ``prune``: semi-join the wide bottom-k table down to ids that actually
-    appear in a candidate pair before the joins — lossless (cannot change
-    the join result; identity pinned in tests/test_engine_parity.py).  OFF
-    by default, by measurement (tools/verify_bytes_probe.py, round 4): on
-    the bench corpus 98.2% of rows appear in ≥1 candidate (star-mode band
-    collisions put even singleton-cluster rows into shared buckets), so the
-    semi-join cut 1.8% of array bytes while ADDING a distinct + semi-join —
-    net shuffle-write +5.6% WORSE (230.4 → 243.3 MB at 100k rows).  Worth turning
-    ON only for corpora where most rows never reach a candidate pair (tight
-    vote gates / low dup density).  Note shuffle compression already tames
-    the array redundancy: the naive 2 × 100k × 12 KiB ≈ 2.4 GB ships as
-    230 MB lz4 — sorted small-magnitude int64 arrays compress ~10×.
-
-    With cfg.bit_prefilter, candidates first pass the narrow packed-bit
-    Hamming gate (hamming_prefilter) so fewer rows reach the wide joins.
-
-    impl "arrow" (default since round 6): the vectorized pandas-UDF kernel
-    (bottom_k_jaccard_batch's searchsorted/rank form) — measured 1.8–2.8×
-    faster than the JVM expression on interleaved 100k-row A/Bs
-    (jvm 6.4–7.8 s vs arrow 3.5–4.2 s per verify pass in quiet windows,
-    identical outputs; the pre-round-6 "no Python in verify" stance
-    predates the vectorized kernel, whose per-pair cost is ~6× below the
-    array_sort/array_union expression chain).  jaccard = integer hits /
-    integer k in BOTH impls, so the values are bit-identical — pinned by
-    tests/test_engine_parity.py::test_verified_pairs_arrow_impl_equals_jvm.
-    impl "jvm": the builtin array expressions, kept for cross-validation."""
-    if cfg.bit_prefilter and "bitsig" in signatures.columns:
-        candidates = hamming_prefilter(candidates, signatures, cfg)
+    jaccard comes from the vectorized Arrow kernel (bottom_k_jaccard_batch's
+    searchsorted/rank form), measured 1.8–2.8× faster than the equivalent
+    builtin array-expression chain on interleaved 100k-row A/Bs.  It is
+    integer hits / integer k, bit-identical to that JVM expression, which
+    tests/test_engine_parity.py keeps as the kernel's reference."""
     bk = signatures.select("image_id", "bottomk")
-    if prune:
-        pair_ids = (
-            candidates.select(F.col("src").alias("image_id"))
-            .union(candidates.select(F.col("dst").alias("image_id")))
-            .distinct()
-        )
-        bk = bk.join(pair_ids, "image_id", "left_semi")
     # shuffle_hash hints: the bottom-k side is one wide array row per corpus
     # row (≈5 KB each — 14+ GB at 3M rows), but Catalyst's byte estimate for
     # array columns can come in under the broadcast threshold; at 3M rows AQE
@@ -192,20 +100,16 @@ def verified_pairs(
         )
     )
 
-    if impl == "jvm":
-        jaccard = bottom_k_jaccard_col(F.col("bk_src"), F.col("bk_dst"))
-    else:
+    @F.pandas_udf(DoubleType())
+    def jacc(a: pd.Series, b: pd.Series) -> pd.Series:
+        return pd.Series(bottom_k_jaccard_batch(a.tolist(), b.tolist()))
 
-        @F.pandas_udf(DoubleType())
-        def jacc(a: pd.Series, b: pd.Series) -> pd.Series:
-            return pd.Series(bottom_k_jaccard_batch(a.tolist(), b.tolist()))
-
-        # asNondeterministic: the accept gate filters on a score derived
-        # from this column, and the optimizer otherwise duplicates the UDF
-        # around the pushed filter — two ArrowEvalPython nodes, every pair
-        # scored twice (guide §4.4; verified in the round-6 plan audit).
-        # The function is pure, so results are unchanged.
-        jaccard = jacc.asNondeterministic()("bk_src", "bk_dst")
+    # asNondeterministic: the accept gate filters on a score derived from
+    # this column, and the optimizer otherwise duplicates the UDF around the
+    # pushed filter — two ArrowEvalPython nodes, every pair scored twice
+    # (verified in the round-6 plan audit).  The function is
+    # pure, so results are unchanged.
+    jaccard = jacc.asNondeterministic()("bk_src", "bk_dst")
 
     scored = joined.withColumn("jaccard", jaccard).withColumn(
         "score", jaccard_to_identity_col(F.col("jaccard"), cfg.k)

@@ -5,13 +5,14 @@ clusters) at identical configs — SURVEY.md §5.2 kernel/candidate/stage-2 rows
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from mhap_spark import oracle
 from mhap_spark.config import MhapConfig
 from mhap_spark.freq import FreqTable, df_ratio_table
 from mhap_spark.minhash import compute_signatures
 from mhap_spark.candidates import candidate_pairs
-from mhap_spark.verify import verified_pairs
+from mhap_spark.verify import jaccard_to_identity_col, verified_pairs
 from mhap_spark.cluster import connected_components
 from mhap_spark.synth import INPUT_SCHEMA_DDL, corpus_to_rows, generate_corpus
 
@@ -75,19 +76,41 @@ def test_signatures_match_oracle_bitexact(corpus, oracle_state, engine_sigs):
         assert np.array_equal(got_bk, bottoms_o[i]), img
 
 
-@pytest.mark.parametrize("strategy", ["grouped", "join"])
-def test_candidates_match_oracle(spark, corpus, oracle_state, engine_sigs, strategy):
+def test_candidates_match_oracle(spark, corpus, oracle_state, engine_sigs):
     _, _, sigs_o, bottoms_o = oracle_state
     sig_df, _ = engine_sigs
     got = {
         (r["src"], r["dst"]): r["votes"]
-        for r in candidate_pairs(sig_df, CFG, strategy=strategy).collect()
+        for r in candidate_pairs(sig_df, CFG).collect()
     }
     want_rows = oracle.find_pairs(
         corpus["image_id"], sigs_o, bottoms_o, CFG.with_overrides(threshold=-1.0, min_jaccard=-1.0)
     )
     want = {(a, b): v for a, b, v, *_ in want_rows}
     assert got == want
+
+
+@pytest.mark.parametrize("cap", [512, 4])
+def test_pairs_mode_funnel_is_exact(spark, engine_sigs, cap):
+    """The pairs-mode funnel Observation rides the single window plan: hub
+    rows (image_id == bucket min) carry the per-bucket sums, so every metric
+    equals the one-row-per-bucket aggregate over ``bucket_sizes`` — with and
+    without over-cap buckets — and requesting it leaves the pairs unchanged."""
+    from pyspark.sql import Observation
+
+    from mhap_spark.candidates import _funnel_exprs, bucket_sizes, exploded_bands
+
+    sig_df, _ = engine_sigs
+    cfg = CFG.with_overrides(max_bucket_size=cap)
+    obs = Observation()
+    with_obs = {tuple(r) for r in candidate_pairs(sig_df, cfg, funnel_obs=obs).collect()}
+    funnel = dict(obs.get)
+    want = bucket_sizes(exploded_bands(sig_df)).agg(*_funnel_exprs(cfg)).first().asDict()
+    assert funnel == want
+    assert want["candidate_pairs_generated"] > 0
+    if cap < CFG.max_bucket_size:
+        assert want["n_buckets_capped"] > 0, "fixture must produce over-cap buckets"
+    assert with_obs == {tuple(r) for r in candidate_pairs(sig_df, cfg).collect()}
 
 
 def test_verified_pairs_match_oracle(spark, corpus, oracle_state, engine_sigs):
@@ -109,23 +132,6 @@ def test_verified_pairs_match_oracle(spark, corpus, oracle_state, engine_sigs):
         assert got[k][0] == want[k][0]
         assert got[k][1] == pytest.approx(want[k][1], abs=1e-12)
         assert got[k][2] == pytest.approx(want[k][2], abs=1e-9)
-
-
-def test_verified_pairs_prune_is_lossless(spark, corpus, engine_sigs):
-    """prune=True semi-joins the wide bottom-k table to candidate ids before
-    the verify joins — it must be invisible in the output (it is a plan
-    optimization, measured in tools/verify_bytes_probe.py)."""
-    sig_df, _ = engine_sigs
-    cands = candidate_pairs(sig_df, CFG)
-    base = {
-        (r["src"], r["dst"]): (r["votes"], r["jaccard"], r["score"])
-        for r in verified_pairs(cands, sig_df, CFG, prune=False).collect()
-    }
-    pruned = {
-        (r["src"], r["dst"]): (r["votes"], r["jaccard"], r["score"])
-        for r in verified_pairs(cands, sig_df, CFG, prune=True).collect()
-    }
-    assert base == pruned
 
 
 def test_connected_components_matches_union_find(spark):
@@ -257,8 +263,6 @@ def test_freq_edge_configs_no_crash(spark, input_df):
     division by idf_scale−1 = 0), cutoff=0 anchors the idf span at the
     rarest observed ratio (not log(x/0)).  Engine and oracle mirror both
     guards, so signatures stay bit-exact."""
-    from pyspark.sql import functions as F
-
     from mhap_spark.minhash import compute_signatures as _sigs
 
     for over in ({"idf_scale": 1.0}, {"filter_cutoff": 0.0}):
@@ -456,20 +460,46 @@ def test_minhash_stream_dedup_identical():
         assert np.array_equal(got[i], solo[0]), f"row {i} diverged"
 
 
+def bottom_k_jaccard_col(a, b):
+    """Bottom-k Jaccard as a pure JVM column expression over two ascending
+    distinct int64 arrays — the reference for the Arrow kernel, algebraically
+    identical to the merge loop in mhap/sketch/BottomOverlapSketch.java:304-364:
+    with k = min(|a|,|b|) and u_k = the k smallest elements of the distinct
+    union, score = |{x ∈ u_k : x ∈ a ∩ b}| / k.
+
+    Ordering note: array_sort compares SIGNED int64 while the kernel selected
+    the bottom-k in unsigned uint64 order — consistent only because every
+    GRAFT-HASH-1 shingle hash is 63-bit (fmix64 then >>1, hashing.py spec), so
+    the two orders coincide; pinned by tests/test_hashing.py's <2^63 asserts."""
+    k = F.least(F.size(a), F.size(b))
+    u_k = F.slice(F.array_sort(F.array_union(a, b)), 1, k)
+    inter = F.array_intersect(a, b)
+    hits = F.size(F.array_intersect(u_k, inter))
+    return F.when(k > 0, hits.cast("double") / k.cast("double")).otherwise(F.lit(0.0))
+
+
 def test_verified_pairs_arrow_impl_equals_jvm(spark, corpus, oracle_state, engine_sigs):
-    """The vectorized Arrow jaccard kernel (round-6 rewrite of
-    bottom_k_jaccard_batch) must produce value-identical verified pairs to
-    the JVM expression path — jaccard is integer hits / integer k, so the
-    two implementations share every bit."""
+    """The vectorized Arrow jaccard kernel behind verified_pairs must
+    produce value-identical verified pairs to the JVM array-expression
+    reference (bottom_k_jaccard_col) under the same accept gate — jaccard
+    is integer hits / integer k, so the two share every bit."""
     sig_df, _ = engine_sigs
     cands = candidate_pairs(sig_df, CFG)
+    bk = sig_df.select("image_id", "bottomk")
+    jvm_df = (
+        cands.join(bk.select(F.col("image_id").alias("src"), F.col("bottomk").alias("a")), "src")
+        .join(bk.select(F.col("image_id").alias("dst"), F.col("bottomk").alias("b")), "dst")
+        .withColumn("jaccard", bottom_k_jaccard_col(F.col("a"), F.col("b")))
+        .withColumn("score", jaccard_to_identity_col(F.col("jaccard"), CFG.k))
+        .where((F.col("score") >= CFG.threshold) & (F.col("jaccard") >= CFG.min_jaccard))
+    )
     jvm = {
         (r["src"], r["dst"]): (r["votes"], r["jaccard"], r["score"])
-        for r in verified_pairs(cands, sig_df, CFG, impl="jvm").collect()
+        for r in jvm_df.collect()
     }
     arrow = {
         (r["src"], r["dst"]): (r["votes"], r["jaccard"], r["score"])
-        for r in verified_pairs(cands, sig_df, CFG, impl="arrow").collect()
+        for r in verified_pairs(cands, sig_df, CFG).collect()
     }
     assert jvm == arrow
     assert jvm, "fixture must verify at least one pair"

@@ -4,6 +4,7 @@ brute-force python oracles on tiny frames."""
 import math
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -592,3 +593,14 @@ def test_block_cos_kernel_bit_exact(spark):
     assert new.keys() == old.keys()
     for k in old:
         assert new[k] == old[k], (k, new[k], old[k])
+
+    # a block holding a duplicated id emits no self-pair (the join above
+    # requires l.id < r.id); each copy still pairs with the other ids
+    from mhap_spark.ops.similarity import _block_cos_pairs_pdf
+
+    v = [1.0, 0.0]
+    dup = _block_cos_pairs_pdf(
+        pd.DataFrame({"id": [7, 5, 5], "vec": [v, v, v], "norm": [1.0] * 3}), 0.5
+    )
+    assert not (dup["src"] == dup["dst"]).any()
+    assert sorted(zip(dup["src"], dup["dst"])) == [(5, 7), (5, 7)]

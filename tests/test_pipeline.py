@@ -1,6 +1,8 @@
 """End-to-end pipeline tests: recall vs planted truth (EstimateROC analog,
 SURVEY.md §5.2), resume-from-checkpoint semantics, and per-row invariants."""
 
+import os
+
 import numpy as np
 import pytest
 
@@ -205,18 +207,28 @@ def test_image_stats_handles_bad_rows(spark):
 
 
 def test_config_hash_ignores_execution_only_knobs():
-    """no_broadcast_hints / eager_signature_cache change the physical plan
-    but provably not the output (BENCH/HINTS_AB_raw.json, CACHE_AB_raw) —
-    toggling them between a checkpoint write and a resume must NOT
-    invalidate the manifest (the CLI auto-derives the hint default from
-    --rows, so one logical run can see both values)."""
+    """no_broadcast_hints changes the physical plan but provably not the
+    output (BENCH/HINTS_AB_raw.json) — toggling it between a checkpoint
+    write and a resume must NOT invalidate the manifest (the CLI
+    auto-derives the hint default from --rows, so one logical run can see
+    both values)."""
     cfg = MhapConfig()
-    toggled = cfg.with_overrides(
-        no_broadcast_hints=not cfg.no_broadcast_hints,
-        eager_signature_cache=not cfg.eager_signature_cache,
-    )
+    toggled = cfg.with_overrides(no_broadcast_hints=not cfg.no_broadcast_hints)
     assert cfg.config_hash() == toggled.config_hash()
     assert cfg.config_hash() != cfg.with_overrides(num_hashes=cfg.num_hashes + 1).config_hash()
+
+
+def test_default_cores_follows_host(monkeypatch):
+    """Without a numeric SPARK_GRAFT_CPUS, build_session and bench.py size
+    local mode to the host's CPU count; a numeric value still wins."""
+    from mhap_spark.session import default_cores
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cores() == os.cpu_count()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cores() == 3
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "*")
+    assert default_cores() == os.cpu_count()
 
 
 def test_plain_tf_mode_skips_freq_table(spark, input_df, monkeypatch):

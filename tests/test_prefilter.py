@@ -1,24 +1,11 @@
-"""One-bit MinHash Hamming prefilter (mhap/sketch/MinHashBitSketch.java:31-92
-analog): must cut stage-2 join input without changing verified output."""
+"""One-bit MinHash sketch (mhap/sketch/MinHashBitSketch.java:31-92 analog):
+the packed ``bitsig`` column the ``mhap_signatures`` contract hashes, plus the
+min-length load filter."""
 
 import numpy as np
-import pytest
 
-from mhap_spark.candidates import candidate_pairs
 from mhap_spark.config import MhapConfig
 from mhap_spark.minhash import compute_signatures, pack_bitsig
-from mhap_spark.synth import INPUT_SCHEMA_DDL, corpus_to_rows, generate_corpus
-from mhap_spark.verify import hamming_prefilter, verified_pairs
-
-# a config where the jaccard gate binds tight enough for the bound to filter:
-# the one-bit sketch has σ(ĵ) = 1/√n ≈ 0.044 at 512 bits, so it can only
-# separate candidates when the verify gate is well above the candidate-pool
-# similarity floor — the near-dup image regime (j ≥ 0.5), not loose gates.
-# measured on this corpus: 15.2% of stage-2 join input cut, verified output
-# exactly preserved (margin 4σ ⇒ per-pair miss probability ~3e-5 in ĵ noise)
-CFG = MhapConfig(
-    num_hashes=512, min_jaccard=0.7, bit_prefilter=True, prefilter_margin_sd=4.0
-)
 
 
 def test_pack_bitsig_layout():
@@ -35,8 +22,8 @@ def test_pack_bitsig_layout():
 
 
 def test_bitsig_hamming_tracks_jaccard():
-    """Expected packed-bit Hamming ≈ num_hashes·(1−J)/2 — the estimator the
-    bound in MhapConfig.prefilter_max_hamming assumes."""
+    """Expected packed-bit Hamming ≈ num_hashes·(1−J)/2: the one-bit sketch
+    estimates slot agreement."""
     rng = np.random.default_rng(11)
     n = 4096
     for j in (0.0, 0.5, 0.9):
@@ -47,63 +34,6 @@ def test_bitsig_hamming_tracks_jaccard():
         ham = bin(int.from_bytes((pa ^ pb).tobytes(), "little")).count("1")
         expect = n * (1 - j) / 2
         assert abs(ham - expect) < 5 * np.sqrt(n) / 2, (j, ham, expect)
-
-
-def test_prefilter_preserves_verified_pairs_and_reduces_join(spark):
-    corpus = generate_corpus(800, seed=13)
-    df = spark.createDataFrame(corpus_to_rows(corpus), INPUT_SCHEMA_DDL).repartition(8)
-    sigs = compute_signatures(df, CFG, None).persist()
-    cands = candidate_pairs(sigs, CFG).persist()
-    n_cands = cands.count()
-    assert n_cands > 0
-
-    survivors = hamming_prefilter(cands, sigs, CFG).count()
-    cut_frac = (n_cands - survivors) / n_cands
-    assert cut_frac >= 0.05, f"prefilter cut only {cut_frac:.1%} of candidates"
-
-    off = CFG.with_overrides(bit_prefilter=False)
-    got_on = {
-        (r["src"], r["dst"]) for r in verified_pairs(cands, sigs, CFG).collect()
-    }
-    got_off = {
-        (r["src"], r["dst"]) for r in verified_pairs(cands, sigs, off).collect()
-    }
-    assert got_on == got_off, (
-        f"prefilter changed verified output: only_on={got_on - got_off} "
-        f"only_off={got_off - got_on}"
-    )
-    sigs.unpersist()
-    cands.unpersist()
-
-
-def test_prefilter_preserves_output_with_freq_weighting(spark):
-    """With tf-idf weighting active the bitsig LSBs come from WEIGHTED
-    MinHash slots, whose agreement probability is the weighted jaccard —
-    which can sit below the plain bottom-k jaccard the verify gate measures
-    (round-2 ADVICE).  The shipped bound assumes the two track each other;
-    this pins that assumption empirically at the default 6σ margin: verified
-    output must be identical with the prefilter on, weighting enabled."""
-    from mhap_spark.freq import FreqTable
-
-    cfg = MhapConfig(num_hashes=512, min_jaccard=0.7, bit_prefilter=True)
-    corpus = generate_corpus(800, seed=13)
-    df = spark.createDataFrame(corpus_to_rows(corpus), INPUT_SCHEMA_DDL).repartition(8)
-    freq = FreqTable.compute(df, cfg)
-    assert len(freq.keys) > 0, "weighting must actually be active"
-    sigs = compute_signatures(df, cfg, freq).persist()
-    cands = candidate_pairs(sigs, cfg).persist()
-    got_on = {
-        (r["src"], r["dst"]) for r in verified_pairs(cands, sigs, cfg).collect()
-    }
-    off = cfg.with_overrides(bit_prefilter=False)
-    got_off = {
-        (r["src"], r["dst"]) for r in verified_pairs(cands, sigs, off).collect()
-    }
-    assert got_on == got_off, (
-        f"weighted prefilter changed output: dropped={got_off - got_on}"
-    )
-    sigs.unpersist()
-    cands.unpersist()
 
 
 def test_min_shingles_load_filter(spark):
