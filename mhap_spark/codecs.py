@@ -182,7 +182,7 @@ def avi_parse(data: bytes) -> tuple[str, int, int, list[bytes]]:
     walk(12, 8 + struct.unpack("<I", data[4:8])[0])
     assert fourcc is not None, "no video stream header"
     want = b"%02d" % vids_idx
-    frames = [p for pfx, p in tagged if pfx == want]
+    frames = [p for stream, p in tagged if stream == want]
     fmt = _FOURCC_TO_FMT.get(fourcc, fourcc.decode("latin1").strip().lower())
     return fmt, w, h, frames
 

@@ -122,8 +122,10 @@ def df_ratio_table(
     markers share the mapInPandas scan and the (shingle_hash, is_marker)
     shuffle; the marker aggregate is broadcast back as the ratio denominator
     (no second scan of the corpus for the count — round-1 VERDICT fix).
-    Pass a persisted ``counts`` (see FreqTable.compute) to guarantee the
-    kernel executes exactly once across the two aggregate branches.  When
+    A caller-supplied ``counts`` must already be persisted (FreqTable.compute,
+    the only such caller, persists it): the eager ``n_docs`` collect below
+    and the returned ratio plan each read it, so an unpersisted ``counts``
+    would run the scan and kernel twice.  When
     self-built (counts=None) the counts are persisted here for the same
     reason — otherwise the marker branch and the ratio branch would each
     re-run the full scan + Arrow kernel (round-2 ADVICE fix); the retained

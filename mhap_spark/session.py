@@ -14,6 +14,22 @@ def default_cores() -> int:
     return int(env) if env.isdigit() else (os.cpu_count() or 1)
 
 
+def default_driver_memory() -> str:
+    """``spark.driver.memory``: ``$SPARK_GRAFT_DRIVER_MEM`` when set, else
+    half the host's RAM (``MemTotal`` in /proc/meminfo) capped at 32g — a
+    fixed 32g asks for more heap than small hosts have.  32g when
+    /proc/meminfo is unreadable."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "32g"
+    return f"{max(1, min(32 * 1024, kb // 2048))}m"
+
+
 def build_session(
     app: str = "mhap_spark",
     master: str | None = None,
@@ -47,7 +63,7 @@ def build_session(
         # growth, ×cores tasks) — OOMs a bounded executor heap outright.
         # 2048 matches the Arrow batch size and keeps peak build ~25 MiB.
         .config("spark.sql.inMemoryColumnarStorage.batchSize", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", default_driver_memory())
         # local-mode artifact: executors ARE the driver process, so work that
         # a cluster keeps executor-side (e.g. localCheckpoint block
         # materialization in the CC loop) counts against driver.maxResultSize;

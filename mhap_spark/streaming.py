@@ -15,8 +15,11 @@ hold in executor state at web scale.
 
 from __future__ import annotations
 
+import glob
+import math
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mhap_spark.candidates import candidate_pairs, probe_candidates
@@ -43,13 +46,15 @@ def _has_committed_data(path: str) -> bool:
 
 
 class BandIndex:
-    """Band-partitioned inverted index for the streaming ``-q`` mode — the
-    10^12-row layout that streaming.py previously only described in prose.
+    """Inverted band index for the streaming ``-q`` mode — the 10^12-row
+    layout.
 
-    Layout: ``band_index/batch_id=N/pfx=P/*.parquet`` holding EXPLODED
-    ``(band_hash, image_id)`` rows, pfx = pmod(band_hash, n_prefix).  Each
-    micro-batch overwrites its own ``batch_id=N`` subtree (idempotent under
-    foreachBatch retries, same discipline as the signature table).
+    Layout: ``band_index/batch_id=N/*.parquet`` holding EXPLODED
+    ``(band_hash, image_id)`` rows, written straight from the micro-batch's
+    persisted signatures: one compact write per batch, one part file per
+    sketch partition, no subdirectories.  Each micro-batch overwrites its
+    own ``batch_id=N`` directory (idempotent under foreachBatch retries,
+    same discipline as the signature table).
 
     Probe physical shape — the point of the layout: the accumulated index
     is the enormous side, so it must NEVER be shuffled per batch.  The
@@ -59,41 +64,40 @@ class BandIndex:
     columns plus work proportional to the collision set, not to the index.
     Contrast the flat path (candidates.probe_candidates over the re-read
     signature table): it re-explodes and re-shuffles the ENTIRE index twice
-    per batch (bucket sizes + the match join) — the measured round-4
-    per-batch bottleneck.  Bucket-size capping stays exact: every index row
-    of a probed band survives the semi-join, so sizes computed on the
-    surviving subset equal the true bucket sizes for all probed bands.
+    per batch (bucket sizes + the match join).  Bucket-size capping stays
+    exact: every index row of a probed band survives the semi-join, so
+    sizes computed on the surviving subset equal the true bucket sizes for
+    all probed bands.
 
-    On a real cluster the remaining scan term parallelizes across
-    executors and prunes by ``pfx`` for narrow probes; bench.py
-    --index-growth measures how per-batch latency tracks index growth in
-    both layouts."""
+    An index in the earlier layout, which split every batch into per-prefix
+    partition directories (``batch_id=N/<col>=P/``), cannot take new
+    batches: Spark's partition discovery rejects a table that mixes both
+    layouts, so construction raises ``ValueError`` before any write."""
 
-    def __init__(self, path: str, n_prefix: int = 64):
+    def __init__(self, path: str):
         self.path = path
-        self.n_prefix = n_prefix
+        # partition subdirectories under a batch mean the old layout: fail
+        # before the first micro-batch writes anything
+        nested = sorted(glob.glob(os.path.join(path, "batch_id=*", "*=*", "")))
+        if nested:
+            raise ValueError(
+                f"band index {path} uses the old prefix-partitioned layout "
+                f"({os.path.relpath(nested[0], path)}); the compact layout "
+                "keeps part files directly under batch_id=N — rebuild the "
+                "index from the signature table"
+            )
 
     def append(self, sigs: DataFrame, batch_id: int) -> None:
-        bands = sigs.select(
-            "image_id", F.explode("bands").alias("band_hash")
-        ).withColumn("pfx", F.pmod(F.col("band_hash"), F.lit(self.n_prefix)))
-        bands.write.mode("overwrite").partitionBy("pfx").parquet(
-            os.path.join(self.path, f"batch_id={batch_id}")
-        )
+        sigs.select("image_id", F.explode("bands").alias("band_hash")).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(self.path, f"batch_id={batch_id}"))
 
     def probe(
-        self,
-        probe_sigs: DataFrame,
-        cfg: MhapConfig,
-        batch_id: int,
-        narrow_probe: bool = False,
+        self, probe_sigs: DataFrame, cfg: MhapConfig, batch_id: int
     ) -> DataFrame | None:
         """(probe_id, index_id, votes ≥ gate) against batches strictly
         earlier than ``batch_id`` — same semantics as
-        candidates.probe_candidates on the accumulated signatures.
-        ``narrow_probe=True`` additionally prunes index partition
-        directories to the probe's pfx set (worth it for lookup-style
-        probes whose band count ≪ n_prefix)."""
+        candidates.probe_candidates on the accumulated signatures."""
         spark = probe_sigs.sparkSession
         if not _has_committed_data(self.path):
             return None
@@ -101,30 +105,13 @@ class BandIndex:
             spark.read.option("basePath", self.path)
             .parquet(self.path)
             .where(F.col("batch_id") < F.lit(batch_id))
+            .select("band_hash", F.col("image_id").alias("index_id"))
         )
         probe = probe_sigs.select(
             F.col("image_id").alias("probe_id"),
             F.explode("bands").alias("band_hash"),
         )
         keys = probe.select("band_hash").distinct()
-        if narrow_probe:
-            # lookup-style probes (single items, tiny batches) touch fewer
-            # prefixes than exist — push the literal pfx set into the scan
-            # so whole partition DIRECTORIES are pruned before any IO.  One
-            # bounded driver action (≤ n_prefix ints); wide batches hit
-            # every prefix (batch_rows × n_bands ≫ n_prefix) and should
-            # leave this off.
-            pfx_list = [
-                r["pfx"]
-                for r in keys.select(
-                    F.pmod(F.col("band_hash"), F.lit(self.n_prefix)).alias("pfx")
-                )
-                .distinct()
-                .collect()
-            ]
-            if len(pfx_list) < self.n_prefix:
-                idx = idx.where(F.col("pfx").isin(pfx_list))
-        idx = idx.select("band_hash", F.col("image_id").alias("index_id"))
         # map-side semi filter: broadcast the (bounded) probe band set, scan
         # the (unbounded) index — collision rows only survive
         relevant = idx.join(F.broadcast(keys), ["band_hash"]).persist()
@@ -160,12 +147,22 @@ class IncrementalDedup:
     Directory layout under ``base_dir``: ``signatures/batch_id=N/``
     (accumulated signature table, one partition dir per micro-batch),
     ``matches/batch_id=N/`` (verified duplicate pairs per batch),
-    ``_stream_checkpoint/`` (Spark streaming offsets).
+    ``keep/batch_id=N/`` (with ``keep_manifest``), ``band_index/batch_id=N/``
+    (with ``band_index``), ``_stream_checkpoint/`` (Spark streaming offsets).
 
-    Duplicate coverage is complete (round-1 ADVICE fix): pairs WITHIN a
-    micro-batch are found by running the batch's own signatures through
-    stage-1 candidate generation, and pairs ACROSS batches by probing
-    against the accumulated index — union of both feeds one verify pass.
+    Duplicate coverage is complete: pairs WITHIN a micro-batch are found by
+    running the batch's own signatures through stage-1 candidate
+    generation, and pairs ACROSS batches by probing against the accumulated
+    index — union of both feeds one verify pass.
+
+    Each micro-batch is read and sketched once.  ``process_batch`` persists
+    the batch (unless the caller already cached it, in which case it is
+    used as is and left cached), counts it, and sketches it on
+    ``ceil(rows / spark.sql.execution.arrow.maxRecordsPerBatch)``
+    coalesced partitions, so a small batch is one full Arrow batch in one
+    task instead of many near-empty ones.  The recurrence guard and the
+    keep manifest read the batch's ids from the same cache, and the band
+    index is written from the persisted signatures.
 
     Writes are idempotent under foreachBatch retries: every batch overwrites
     its own ``batch_id=N`` partition directory, so a replayed batch replaces
@@ -175,17 +172,15 @@ class IncrementalDedup:
     memory as a list of per-batch persisted slices (each the re-read of its
     own committed partition, so lineage stays one file scan per slice and
     nothing is ever copied): the probe then reads the index from block cache
-    instead of re-scanning the whole signature parquet every batch — the
-    measured per-batch bottleneck (BENCH/BASELINE.md round 4).  Durability
-    is unchanged (parquet partitions remain the source of truth; on restart
-    the existing table is loaded as one slice) and the retry guard is
-    unchanged (slices strictly earlier than the current batch_id).  Sized
-    for hot-window deployments; at 10^12 rows use ``band_index=True``
-    (BandIndex — the band-partitioned layout whose probe never shuffles
-    the index; measured vs flat in BENCH/BASELINE.md round 5).  The two
-    flags are mutually exclusive (the band probe never reads the slice
-    cache, so pinning slices would only leak storage memory);
-    ``band_index`` wins when both are passed."""
+    instead of re-scanning the whole signature parquet every batch.
+    Durability is unchanged (parquet partitions remain the source of truth;
+    on restart the existing table is loaded as one slice) and the retry
+    guard is unchanged (slices strictly earlier than the current batch_id).
+    Sized for hot-window deployments; at 10^12 rows use ``band_index=True``
+    (BandIndex — the compact inverted band index whose probe never
+    shuffles the index).  The two flags are mutually exclusive (the band
+    probe never reads the slice cache, so pinning slices would only leak
+    storage memory); ``band_index`` wins when both are passed."""
 
     def __init__(
         self,
@@ -259,13 +254,14 @@ class IncrementalDedup:
         # source + idempotent batch_id overwrite deliver) — the
         # dst-in-this-batch classification below reads an id recurring in a
         # LATER batch as an intra-batch match and would mis-orient that
-        # pair's drop.  Cost: one re-read of the batch's just-written
-        # matches partition + one tiny per-batch write — off by default so
-        # the benched probe path is unchanged.
+        # pair's drop, so process_batch rejects such a batch before any
+        # write.  Cost: a scan of earlier batches' ids for that guard, one
+        # re-read of the batch's just-written matches partition and one
+        # tiny per-batch write — off by default.
         self.keep_manifest = keep_manifest
         self.keep_path = os.path.join(base_dir, "keep")
-        # band_index=True: cross-batch probing goes through the
-        # band-partitioned inverted index (BandIndex) instead of re-reading
+        # band_index=True: cross-batch probing goes through the compact
+        # inverted band index (BandIndex) instead of re-reading
         # and re-shuffling the whole signature table — the 10^12-row layout.
         # The signature table remains the source of truth for the verify
         # arrays (pruned to matched ids only).
@@ -326,100 +322,30 @@ class IncrementalDedup:
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        sigs = compute_signatures(batch_df, self.cfg, self.freq).persist()
-
-        # intra-batch duplicates: stage 1 over the batch's own signatures
-        cands = candidate_pairs(sigs, self.cfg)
-        both = sigs.select("image_id", "bottomk")
-
-        if self.bindex is not None:
-            # cross-batch duplicates via the band-partitioned index: the
-            # index side is scanned, never shuffled (see BandIndex.probe);
-            # verify arrays come from the signature table PRUNED to matched
-            # ids, so the wide bottom-k rows of unmatched index entries
-            # never move either
-            found = self.bindex.probe(sigs, self.cfg, batch_id)
-            if found is not None:
-                cands = cands.unionByName(
-                    found.select(
-                        F.col("probe_id").alias("src"),
-                        F.col("index_id").alias("dst"),
-                        "votes",
-                    )
-                )
-                matched_ids = found.select(
-                    F.col("index_id").alias("image_id")
-                ).distinct()
-                indexed = spark.read.parquet(self.sig_path).where(
-                    F.col("batch_id") < F.lit(batch_id)
-                )
-                # fetch the matched index arrays with a PUSHED-DOWN id
-                # filter when the match set is lookup-sized: ``found`` is
-                # already materialized (localCheckpoint in probe), so
-                # listing its distinct index ids is a cheap local job, and
-                # an In(image_id, …) predicate reaches the parquet
-                # row-group stats — on an image_id-sorted/bucketed
-                # signature table the verify side then reads a handful of
-                # row groups instead of scanning the whole table per batch.
-                # The cap tracks the parquet In-pushdown threshold: above
-                # it Spark pushes only a min/max range (no pruning for
-                # spread ids), so wider batches take the semi-join, which
-                # never holds the id set on the driver.
-                cap = self.id_pushdown_cap
-                if cap is None:
-                    cap = int(
-                        spark.conf.get(
-                            "spark.sql.parquet.pushdown.inFilterThreshold", "10"
-                        )
-                    )
-                ids = [
-                    r["image_id"] for r in matched_ids.limit(cap + 1).collect()
-                ]
-                if len(ids) <= cap:
-                    # ≤ cap rows under limit(cap+1) ⇒ this IS the full set
-                    hit = (
-                        indexed.where(F.col("image_id").isin(ids)) if ids else None
-                    )
-                else:
-                    hit = indexed.join(matched_ids, "image_id", "left_semi")
-                if hit is not None:
-                    both = both.unionByName(hit.select("image_id", "bottomk"))
-        else:
-            indexed = self._indexed(spark, batch_id)
-            if indexed is not None:
-                # cross-batch duplicates: probe vs the accumulated index
-                cands = cands.unionByName(
-                    probe_candidates(sigs, indexed, self.cfg).select(
-                        F.col("probe_id").alias("src"),
-                        F.col("index_id").alias("dst"),
-                        "votes",
-                    )
-                )
-                both = both.unionByName(indexed.select("image_id", "bottomk"))
-
-        matches = verified_pairs(cands, both, self.cfg)
-        matches.write.mode("overwrite").parquet(
-            os.path.join(self.match_path, f"batch_id={batch_id}")
-        )
-        if self.keep_manifest:
-            # round-6 (round-5 ADVICE): the keep manifest's documented
-            # precondition — image_id unique across the stream's lifetime —
-            # must fail LOUDLY: an id recurring in a later batch would be
-            # classified as an intra-batch match below and its pair's drop
-            # decision mis-oriented, silently violating first-arrival-wins.
-            # One cheap left-semi count per batch, only when the manifest is
-            # enabled (the benched probe path is unchanged).
-            if _has_committed_data(self.sig_path):
+        # read the micro-batch once: the row count, the recurrence guard,
+        # the sketch and the keep manifest all scan this cache.  A batch the
+        # caller already cached is used as is and stays cached afterwards.
+        owned = batch_df.storageLevel == StorageLevel.NONE
+        if owned:
+            batch_df = batch_df.persist()
+        sigs = None
+        try:
+            n_rows = batch_df.count()
+            batch_ids = batch_df.select("image_id")
+            if self.keep_manifest and _has_committed_data(self.sig_path):
+                # the keep manifest's documented precondition — image_id
+                # unique across the stream's lifetime — must fail LOUDLY: an
+                # id recurring in a later batch would be classified as an
+                # intra-batch match below and its pair's drop decision
+                # mis-oriented, silently violating first-arrival-wins.
+                # Checked before any write, so a rejected batch leaves
+                # nothing on disk.
                 earlier_ids = (
                     spark.read.parquet(self.sig_path)
                     .where(F.col("batch_id") < F.lit(batch_id))
                     .select("image_id")
                 )
-                n_recur = (
-                    batch_df.select("image_id")
-                    .join(earlier_ids, "image_id", "left_semi")
-                    .count()
-                )
+                n_recur = batch_ids.join(earlier_ids, "image_id", "left_semi").count()
                 if n_recur:
                     raise ValueError(
                         f"keep_manifest precondition violated: {n_recur} "
@@ -427,47 +353,134 @@ class IncrementalDedup:
                         "earlier batches; ids must be unique across the "
                         "stream's lifetime for first-arrival-wins decisions"
                     )
-            # classify each match by whether dst is in THIS batch: pairs-mode
-            # intra-batch matches are canonical src < dst (drop dst), while
-            # cross-batch probe matches carry the probe row in src and the
-            # earlier-indexed row in dst (drop src).  Read the matches back
-            # from the partition just written — one small file scan instead
-            # of recomputing the verify plan
-            m = spark.read.parquet(
+            # one sketch task per full Arrow batch: a micro-batch spread over
+            # many small partitions pays the fixed per-task UDF cost on each
+            # (coalesce never raises the partition count)
+            arrow_rows = int(
+                spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+            )
+            n_parts = max(1, math.ceil(n_rows / arrow_rows)) if arrow_rows > 0 else 1
+            sigs = compute_signatures(
+                batch_df.coalesce(n_parts), self.cfg, self.freq
+            ).persist()
+
+            # intra-batch duplicates: stage 1 over the batch's own signatures
+            cands = candidate_pairs(sigs, self.cfg)
+            both = sigs.select("image_id", "bottomk")
+
+            if self.bindex is not None:
+                # cross-batch duplicates via the band index: the index side
+                # is scanned, never shuffled (see BandIndex.probe); verify
+                # arrays come from the signature table PRUNED to matched
+                # ids, so the wide bottom-k rows of unmatched index entries
+                # never move either
+                found = self.bindex.probe(sigs, self.cfg, batch_id)
+                if found is not None:
+                    cands = cands.unionByName(
+                        found.select(
+                            F.col("probe_id").alias("src"),
+                            F.col("index_id").alias("dst"),
+                            "votes",
+                        )
+                    )
+                    matched_ids = found.select(
+                        F.col("index_id").alias("image_id")
+                    ).distinct()
+                    indexed = spark.read.parquet(self.sig_path).where(
+                        F.col("batch_id") < F.lit(batch_id)
+                    )
+                    # fetch the matched index arrays with a PUSHED-DOWN id
+                    # filter when the match set is lookup-sized: ``found``
+                    # is already materialized (localCheckpoint in probe), so
+                    # listing its distinct index ids is a cheap local job,
+                    # and an In(image_id, …) predicate reaches the parquet
+                    # row-group stats — on an image_id-sorted/bucketed
+                    # signature table the verify side then reads a handful
+                    # of row groups instead of scanning the whole table per
+                    # batch.  The cap tracks the parquet In-pushdown
+                    # threshold: above it Spark pushes only a min/max range
+                    # (no pruning for spread ids), so wider batches take the
+                    # semi-join, which never holds the id set on the driver.
+                    cap = self.id_pushdown_cap
+                    if cap is None:
+                        cap = int(
+                            spark.conf.get(
+                                "spark.sql.parquet.pushdown.inFilterThreshold", "10"
+                            )
+                        )
+                    ids = [
+                        r["image_id"] for r in matched_ids.limit(cap + 1).collect()
+                    ]
+                    if len(ids) <= cap:
+                        # ≤ cap rows under limit(cap+1) ⇒ this IS the full set
+                        hit = (
+                            indexed.where(F.col("image_id").isin(ids))
+                            if ids
+                            else None
+                        )
+                    else:
+                        hit = indexed.join(matched_ids, "image_id", "left_semi")
+                    if hit is not None:
+                        both = both.unionByName(hit.select("image_id", "bottomk"))
+            else:
+                indexed = self._indexed(spark, batch_id)
+                if indexed is not None:
+                    # cross-batch duplicates: probe vs the accumulated index
+                    cands = cands.unionByName(
+                        probe_candidates(sigs, indexed, self.cfg).select(
+                            F.col("probe_id").alias("src"),
+                            F.col("index_id").alias("dst"),
+                            "votes",
+                        )
+                    )
+                    both = both.unionByName(indexed.select("image_id", "bottomk"))
+
+            matches = verified_pairs(cands, both, self.cfg)
+            matches.write.mode("overwrite").parquet(
                 os.path.join(self.match_path, f"batch_id={batch_id}")
             )
-            batch_ids = batch_df.select("image_id")
-            dst_in_batch = batch_ids.withColumnRenamed("image_id", "dst")
-            drops = (
-                m.join(dst_in_batch, "dst", "left_semi")
-                .select(F.col("dst").alias("image_id"))
-                .unionByName(
-                    m.join(dst_in_batch, "dst", "left_anti").select(
-                        F.col("src").alias("image_id")
-                    )
+            if self.keep_manifest:
+                # classify each match by whether dst is in THIS batch:
+                # pairs-mode intra-batch matches are canonical src < dst
+                # (drop dst), while cross-batch probe matches carry the
+                # probe row in src and the earlier-indexed row in dst (drop
+                # src).  Read the matches back from the partition just
+                # written — one small file scan instead of recomputing the
+                # verify plan
+                m = spark.read.parquet(
+                    os.path.join(self.match_path, f"batch_id={batch_id}")
                 )
-                .distinct()
+                dst_in_batch = batch_ids.withColumnRenamed("image_id", "dst")
+                drops = (
+                    m.join(dst_in_batch, "dst", "left_semi")
+                    .select(F.col("dst").alias("image_id"))
+                    .unionByName(
+                        m.join(dst_in_batch, "dst", "left_anti").select(
+                            F.col("src").alias("image_id")
+                        )
+                    )
+                    .distinct()
+                )
+                # one left join, not anti+union: the drops subtree (parquet
+                # re-read + classification joins) would otherwise execute
+                # twice
+                keep = batch_ids.join(
+                    drops.withColumn("keep", F.lit(False)), "image_id", "left"
+                ).select("image_id", F.coalesce("keep", F.lit(True)).alias("keep"))
+                keep.write.mode("overwrite").parquet(
+                    os.path.join(self.keep_path, f"batch_id={batch_id}")
+                )
+            sigs.write.mode("overwrite").parquet(
+                os.path.join(self.sig_path, f"batch_id={batch_id}")
             )
-            # one left join, not anti+union: the drops subtree (parquet
-            # re-read + classification joins) would otherwise execute twice
-            keep = batch_ids.join(
-                drops.withColumn("keep", F.lit(False)), "image_id", "left"
-            ).select("image_id", F.coalesce("keep", F.lit(True)).alias("keep"))
-            keep.write.mode("overwrite").parquet(
-                os.path.join(self.keep_path, f"batch_id={batch_id}")
-            )
-        sigs.write.mode("overwrite").parquet(
-            os.path.join(self.sig_path, f"batch_id={batch_id}")
-        )
-        sigs.unpersist()
-        if self.bindex is not None:
-            self.bindex.append(
-                spark.read.parquet(self.sig_path).where(
-                    F.col("batch_id") == F.lit(batch_id)
-                ),
-                batch_id,
-            )
-        self._append_cache(spark, batch_id)
+            if self.bindex is not None:
+                self.bindex.append(sigs, batch_id)
+            self._append_cache(spark, batch_id)
+        finally:
+            if sigs is not None:
+                sigs.unpersist()
+            if owned:
+                batch_df.unpersist()
 
     def start(self, stream_df: DataFrame, trigger_available_now: bool = True):
         writer = (

@@ -231,6 +231,23 @@ def test_default_cores_follows_host(monkeypatch):
     assert default_cores() == os.cpu_count()
 
 
+def test_default_driver_memory_follows_host(monkeypatch):
+    """Without SPARK_GRAFT_DRIVER_MEM the driver heap is half the host's RAM
+    (MemTotal), at most 32g — never more than the host has; a set value
+    still wins."""
+    from mhap_spark.session import default_driver_memory
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    got = default_driver_memory()
+    assert got.endswith("m")
+    assert int(got[:-1]) == min(32 * 1024, total_kb // 2048)
+    assert int(got[:-1]) * 1024 < total_kb
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert default_driver_memory() == "3g"
+
+
 def test_plain_tf_mode_skips_freq_table(spark, input_df, monkeypatch):
     """repeat_weight ≥ 1.0 is plain-tf weighting: batch_weights never reads
     the df table, so the pipeline must not spend a full corpus-stats pass

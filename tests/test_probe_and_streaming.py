@@ -355,9 +355,100 @@ def test_streaming_band_index_equivalent(spark, tmp_path):
     banded = run(str(tmp_path / "banded"), banded=True, retry_at=2)
     assert flat == banded
     assert any(flat[k] for k in flat)  # the comparison is not vacuous
-    # the layout really is band-partitioned: batch_id=N/pfx=P directories
+    # compact layout: part files directly under batch_id=N, no subdirectories
     bi = os.path.join(str(tmp_path / "banded"), "band_index", "batch_id=0")
-    assert any(d.startswith("pfx=") for d in os.listdir(bi))
+    entries = os.listdir(bi)
+    assert any(f.startswith("part-") for f in entries)
+    assert not any(os.path.isdir(os.path.join(bi, d)) for d in entries)
+
+
+def test_band_index_rejects_prefix_partitioned_layout(spark, tmp_path):
+    """An index written in the old layout (each batch split into per-prefix
+    partition directories) cannot take compact batches — Spark's partition
+    discovery rejects the mix — so construction must fail before any write."""
+    from pyspark.sql import functions as F
+
+    from mhap_spark.streaming import BandIndex
+
+    base = str(tmp_path / "d")
+    old_batch = os.path.join(base, "band_index", "batch_id=0")
+    spark.range(8).select(
+        F.col("id").alias("band_hash"),
+        F.col("id").cast("string").alias("image_id"),
+        F.pmod("id", F.lit(4)).alias("prefix"),
+    ).write.partitionBy("prefix").parquet(old_batch)
+    with pytest.raises(ValueError, match="prefix-partitioned layout"):
+        BandIndex(os.path.join(base, "band_index"))
+    with pytest.raises(ValueError, match="prefix-partitioned layout"):
+        IncrementalDedup(base, CFG, band_index=True)
+    assert not os.path.exists(os.path.join(base, "signatures"))
+
+
+def test_band_index_capped_bucket_adversary(spark, tmp_path):
+    """A planted cluster larger than max_bucket_size makes index-side buckets
+    that the probe must drop exactly as the flat probe_candidates path does:
+    every index row of a probed band survives the broadcast semi-join, so
+    the capped bucket sizes are the true ones."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    cfg = CFG.with_overrides(max_bucket_size=8)
+    corpus = generate_corpus(150, seed=23, with_images=False, mega_cluster=30)
+    rows = corpus_to_rows(corpus)
+    # spread the planted cluster over every batch
+    rows = [rows[j] for j in np.random.default_rng(23).permutation(len(rows))]
+    chunks = [rows[i * 50 : (i + 1) * 50] for i in range(3)]
+
+    def run(base, banded):
+        sink = IncrementalDedup(base, cfg, band_index=banded)
+        for k, chunk in enumerate(chunks):
+            sink.process_batch(spark.createDataFrame(chunk, INPUT_SCHEMA_DDL), k)
+        return {
+            k: {
+                (r["src"], r["dst"])
+                for r in spark.read.parquet(
+                    os.path.join(base, "matches", f"batch_id={k}")
+                ).collect()
+            }
+            for k in range(len(chunks))
+        }
+
+    banded_dir = str(tmp_path / "banded")
+    flat = run(str(tmp_path / "flat"), banded=False)
+    assert run(banded_dir, banded=True) == flat
+    # not vacuous: the last batch has matches and probes index buckets
+    # above the cap
+    last = len(chunks) - 1
+    assert flat[last]
+    bi = spark.read.parquet(os.path.join(banded_dir, "band_index"))
+    probed = bi.where(F.col("batch_id") == last).select("band_hash").distinct()
+    biggest = (
+        bi.where(F.col("batch_id") < last)
+        .join(probed, "band_hash", "left_semi")
+        .groupBy("band_hash")
+        .count()
+        .agg(F.max("count"))
+        .first()[0]
+    )
+    assert biggest > cfg.max_bucket_size
+
+
+def test_process_batch_leaves_caller_cache_alone(spark, tmp_path):
+    """process_batch persists an uncached micro-batch only for its own
+    duration, and never unpersists a batch the caller cached."""
+    from pyspark import StorageLevel
+
+    rows = corpus_to_rows(generate_corpus(60, seed=9))
+    sink = IncrementalDedup(str(tmp_path / "d"), CFG)
+    cached = spark.createDataFrame(rows[:30], INPUT_SCHEMA_DDL).persist()
+    sink.process_batch(cached, 0)
+    assert cached.is_cached
+    assert cached.storageLevel != StorageLevel.NONE
+    cached.unpersist()
+    plain = spark.createDataFrame(rows[30:], INPUT_SCHEMA_DDL)
+    sink.process_batch(plain, 1)
+    assert not plain.is_cached
+    assert plain.storageLevel == StorageLevel.NONE
 
 
 def test_band_index_id_pushdown_equivalent(spark, tmp_path):
@@ -406,41 +497,6 @@ def test_band_index_id_pushdown_equivalent(spark, tmp_path):
         .toString()
     )
     assert "PushedFilters: [In(image_id" in plan, plan[:2000]
-
-
-def test_band_index_narrow_probe_prunes_and_matches(spark, tmp_path):
-    """narrow_probe=True (pfx partition pruning for lookup-style probes)
-    must return exactly the wide-probe result; the pruned plan's pfx
-    filter actually engages when the probe touches < n_prefix prefixes."""
-    from mhap_spark.minhash import compute_signatures
-    from mhap_spark.streaming import BandIndex
-
-    corpus = generate_corpus(120, seed=17)
-    rows = corpus_to_rows(corpus)
-    bi = BandIndex(str(tmp_path / "bi"))
-    sig_path = str(tmp_path / "sigs")
-    sigs = compute_signatures(
-        spark.createDataFrame(rows[:100], INPUT_SCHEMA_DDL), CFG, None
-    )
-    sigs.write.mode("overwrite").parquet(os.path.join(sig_path, "batch_id=0"))
-    bi.append(spark.read.parquet(sig_path), 0)
-
-    # a 2-row probe: 2 × 128 bands = 256 hashes over 64 prefixes — wide
-    # enough to usually hit all, so ALSO check a 1-band-ish narrow case by
-    # semantics only: equality of results is the contract either way
-    probe = compute_signatures(
-        spark.createDataFrame(rows[100:102], INPUT_SCHEMA_DDL), CFG, None
-    ).persist()
-    wide = {
-        (r["probe_id"], r["index_id"], r["votes"])
-        for r in bi.probe(probe, CFG, 1).collect()
-    }
-    narrow = {
-        (r["probe_id"], r["index_id"], r["votes"])
-        for r in bi.probe(probe, CFG, 1, narrow_probe=True).collect()
-    }
-    probe.unpersist()
-    assert wide == narrow
 
 
 def test_band_index_disables_slice_cache(tmp_path):
@@ -493,15 +549,19 @@ def test_incremental_dedup_rejects_star_mode(tmp_path):
 
 
 def test_keep_manifest_rejects_recurring_ids(spark, tmp_path):
-    """round-6 ADVICE guard: keep_manifest's documented precondition
-    (image_id unique across the stream) must fail loudly — an id recurring
-    in a later batch would silently mis-orient that pair's drop decision."""
-    import pytest
-
+    """keep_manifest's documented precondition (image_id unique across the
+    stream) must fail loudly — an id recurring in a later batch would
+    silently mis-orient that pair's drop decision — and before any write,
+    so the rejected batch leaves nothing on disk (flat and band index)."""
     corpus = generate_corpus(60, seed=9)
     rows = corpus_to_rows(corpus)
     df = spark.createDataFrame(rows, INPUT_SCHEMA_DDL)
-    sink = IncrementalDedup(str(tmp_path / "d"), CFG, keep_manifest=True)
-    sink.process_batch(df, 0)
-    with pytest.raises(ValueError, match="keep_manifest precondition"):
-        sink.process_batch(df, 1)  # same ids again in a later batch
+    for banded in (False, True):
+        base = str(tmp_path / f"d{int(banded)}")
+        sink = IncrementalDedup(base, CFG, keep_manifest=True, band_index=banded)
+        sink.process_batch(df, 0)
+        with pytest.raises(ValueError, match="keep_manifest precondition"):
+            sink.process_batch(df, 1)  # same ids again in a later batch
+        for sub in ("matches", "keep", "signatures", "band_index"):
+            assert not os.path.exists(os.path.join(base, sub, "batch_id=1")), sub
+        assert os.path.isdir(os.path.join(base, "keep", "batch_id=0"))
