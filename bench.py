@@ -549,7 +549,7 @@ def run_streaming_bench(
     ``base_rows`` signature index (batch 0), then run ``n_batches``
     micro-batches of ``batch_rows`` new rows through the exact foreachBatch
     function (IncrementalDedup.process_batch: sketch → intra-batch stage 1 →
-    probe vs accumulated index → one verify → idempotent writes).  Reports
+    band-index probe → one verify → idempotent writes).  Reports
     per-batch seconds and rows/s against the accumulated index."""
     import shutil
     import tempfile
@@ -569,8 +569,8 @@ def run_streaming_bench(
         shuffle_partitions=max(cores, 8),
     )
     base_dir = tempfile.mkdtemp(prefix="bench_stream_")
-    corpus = generate_corpus(  # 2× n_batches: uncached leg then cached leg
-        base_rows + 2 * n_batches * batch_rows, seed=42, with_images=False
+    corpus = generate_corpus(
+        base_rows + n_batches * batch_rows, seed=42, with_images=False
     )
     rows_all = corpus_to_rows(corpus)
 
@@ -587,28 +587,18 @@ def run_streaming_bench(
     sink.process_batch(base_df, 0)
     seed_s = round(time.time() - t0, 2)
 
-    def run_batches(active_sink, first_k):
-        batch_s, match_counts = [], []
-        for k in range(first_k, first_k + n_batches):
-            lo = base_rows + (k - 1) * batch_rows
-            bdf = spark.createDataFrame(
-                rows_all[lo : lo + batch_rows], INPUT_SCHEMA_DDL
-            ).repartition(max(cores, 8))
-            t0 = time.time()
-            active_sink.process_batch(bdf, k)
-            batch_s.append(round(time.time() - t0, 2))
-            match_counts.append(
-                spark.read.parquet(f"{active_sink.match_path}/batch_id={k}").count()
-            )
-        return batch_s, match_counts
-
-    batch_s, match_counts = run_batches(sink, 1)
-
-    # cached-index leg: same accumulated table (now n_batches larger — the
-    # comparison slightly FAVORS the uncached leg), probe served from the
-    # block-cached slices instead of a full parquet re-scan per batch
-    sink_c = IncrementalDedup(base_dir, cfg, freq, cache_index=True)
-    cached_s, cached_matches = run_batches(sink_c, n_batches + 1)
+    batch_s, match_counts = [], []
+    for k in range(1, n_batches + 1):
+        lo = base_rows + (k - 1) * batch_rows
+        bdf = spark.createDataFrame(
+            rows_all[lo : lo + batch_rows], INPUT_SCHEMA_DDL
+        ).repartition(max(cores, 8))
+        t0 = time.time()
+        sink.process_batch(bdf, k)
+        batch_s.append(round(time.time() - t0, 2))
+        match_counts.append(
+            spark.read.parquet(f"{sink.match_path}/batch_id={k}").count()
+        )
 
     out = {
         "cores": cores,
@@ -619,124 +609,10 @@ def run_streaming_bench(
         "batch_s_min": min(batch_s),
         "batch_rows_per_sec": round(batch_rows / min(batch_s), 1),
         "matches_per_batch": match_counts,
-        "cached_batch_s": cached_s,
-        "cached_batch_s_min": min(cached_s),
-        "cached_batch_rows_per_sec": round(batch_rows / min(cached_s), 1),
-        "cached_matches_per_batch": cached_matches,
     }
     spark.stop()
     shutil.rmtree(base_dir, ignore_errors=True)
     return out
-
-
-def run_index_growth_bench(
-    cores: int,
-    sizes: tuple[int, int] = (300_000, 1_000_000),
-    batch_rows: int = 2_000,
-    reps: int = 3,
-) -> dict:
-    """Round-5 VERDICT task 2 evidence: per-batch PROBE latency as the
-    accumulated index grows, flat layout (probe_candidates re-explodes and
-    re-shuffles the whole signature table per batch) vs the band-partitioned
-    inverted index (BandIndex.probe: broadcast probe side, index scanned but
-    never shuffled).  Seeds the index once at sizes[0] (batch 0) and tops it
-    up to sizes[1] (batch 1), then times the same probe batch against each
-    prefix of the index in both layouts (warm, min-of-N, interleaved)."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from mhap_spark.candidates import probe_candidates
-    from mhap_spark.config import PRESET_SCALE
-    from mhap_spark.freq import FreqTable
-    from mhap_spark.minhash import compute_signatures
-    from mhap_spark.session import build_session
-    from mhap_spark.streaming import BandIndex
-    from mhap_spark.synth import INPUT_SCHEMA_DDL, corpus_to_rows, generate_corpus
-
-    cfg = PRESET_SCALE.with_overrides(candidate_mode="pairs")
-    spark = build_session(
-        f"bench_idx_growth_{cores}",
-        master=f"local[{cores}]",
-        shuffle_partitions=max(cores, 8),
-    )
-    base_dir = tempfile.mkdtemp(prefix="bench_idx_growth_")
-    sig_path = os.path.join(base_dir, "signatures")
-    bindex = BandIndex(os.path.join(base_dir, "band_index"))
-    lo, hi = sizes
-    corpus = generate_corpus(hi + batch_rows, seed=42, with_images=False)
-    rows_all = corpus_to_rows(corpus)
-
-    freq = None
-    seed_s = {}
-    for k, (a, b) in enumerate([(0, lo), (lo, hi)]):
-        t0 = time.time()
-        df = spark.createDataFrame(rows_all[a:b], INPUT_SCHEMA_DDL).repartition(
-            max(cores * 2, 8)
-        )
-        if freq is None:
-            freq = FreqTable.compute(df, cfg)  # frozen corpus stats
-        sigs = compute_signatures(df, cfg, freq)
-        sigs.write.mode("overwrite").parquet(
-            os.path.join(sig_path, f"batch_id={k}")
-        )
-        bindex.append(
-            spark.read.parquet(sig_path).where(F.col("batch_id") == F.lit(k)), k
-        )
-        seed_s[f"seed_to_{b}"] = round(time.time() - t0, 2)
-
-    probe_sigs = compute_signatures(
-        spark.createDataFrame(
-            rows_all[hi : hi + batch_rows], INPUT_SCHEMA_DDL
-        ).repartition(max(cores, 8)),
-        cfg,
-        freq,
-    ).persist()
-    probe_sigs.count()
-
-    def flat_probe(upto: int):
-        indexed = spark.read.parquet(sig_path).where(F.col("batch_id") < F.lit(upto))
-        return probe_candidates(probe_sigs, indexed, cfg)
-
-    def band_probe(upto: int):
-        return bindex.probe(probe_sigs, cfg, upto)
-
-    result: dict = {
-        "cores": cores, "sizes": list(sizes), "batch_rows": batch_rows,
-        "seed_s": seed_s, "legs": {},
-    }
-    counts: dict[tuple, tuple] = {}
-    for upto, size in ((1, lo), (2, hi)):
-        for name, fn in (("flat", flat_probe), ("band", band_probe)):
-            times = []
-            for r in range(reps + 1):  # +1 warm (plan/codegen, uncounted)
-                t0 = time.time()
-                df = fn(upto)
-                agg = df.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.coalesce(F.sum("votes"), F.lit(0)).alias("v"),
-                ).first()
-                if r > 0:
-                    times.append(round(time.time() - t0, 2))
-            counts[(name, size)] = (int(agg["n"]), int(agg["v"]))
-            result["legs"][f"{name}_{size}"] = {
-                "probe_s_min": min(times), "probe_s": times,
-                "n_pairs": int(agg["n"]),
-            }
-    for size in sizes:  # layouts must agree exactly (count + vote mass)
-        assert counts[("flat", size)] == counts[("band", size)], counts
-    f_lo = result["legs"][f"flat_{lo}"]["probe_s_min"]
-    f_hi = result["legs"][f"flat_{hi}"]["probe_s_min"]
-    b_lo = result["legs"][f"band_{lo}"]["probe_s_min"]
-    b_hi = result["legs"][f"band_{hi}"]["probe_s_min"]
-    result["flat_growth_x"] = round(f_hi / f_lo, 2) if f_lo else None
-    result["band_growth_x"] = round(b_hi / b_lo, 2) if b_lo else None
-    result["band_speedup_at_hi"] = round(f_hi / b_hi, 2) if b_hi else None
-    probe_sigs.unpersist()
-    spark.stop()
-    shutil.rmtree(base_dir, ignore_errors=True)
-    return result
 
 
 def run_query_bench(sf_dir: str, cores: int) -> dict:
@@ -947,8 +823,6 @@ def main() -> None:
     ap.add_argument("--stage-scaling", action="store_true")
     ap.add_argument("--hints-ab", action="store_true",
                     help="interleaved no-broadcast-hints ON/OFF A/B")
-    ap.add_argument("--index-growth", action="store_true",
-                    help="streaming probe latency vs index size, flat vs band layout")
     ap.add_argument("--ab-rows", type=str, default="20000,300000",
                     help="comma-separated corpus sizes for --hints-ab")
     ap.add_argument("--rows", type=int, default=PIPELINE_ROWS)
@@ -1048,10 +922,6 @@ def main() -> None:
     if args.hints_ab:
         rows_list = [int(x) for x in args.ab_rows.split(",") if x]
         print(json.dumps(run_hints_ab_bench(args.cores, rows_list, reps=args.reps)))
-        return
-
-    if args.index_growth:
-        print(json.dumps(run_index_growth_bench(args.cores, reps=args.reps)))
         return
 
     t_all = time.time()

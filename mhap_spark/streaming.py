@@ -4,8 +4,8 @@ The reference is strictly batch (SURVEY.md §2.10); its closest feature is the
 ``-q`` mode that streams query files against an indexed set
 (mhap/main/MhapMain.java:511-541).  This module expresses that incrementally:
 new rows arrive as a stream, each micro-batch is sketched, probed against the
-accumulated signature table, and appended to it — so duplicate detection runs
-continuously as data lands.
+band index of every earlier batch, and appended to it — so duplicate
+detection runs continuously as data lands.
 
 ``foreachBatch`` is the right tool (not stateful streaming operators): the
 probe is a batch join against a large, growing table — exactly what
@@ -22,7 +22,7 @@ import os
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from mhap_spark.candidates import candidate_pairs, probe_candidates
+from mhap_spark.candidates import candidate_pairs
 from mhap_spark.config import MhapConfig
 from mhap_spark.freq import FreqTable
 from mhap_spark.minhash import compute_signatures
@@ -62,12 +62,9 @@ class BandIndex:
     10k-row batches) are BROADCAST into a map-side hash semi-join against
     the index scan: per-batch cost is one columnar scan of two int64
     columns plus work proportional to the collision set, not to the index.
-    Contrast the flat path (candidates.probe_candidates over the re-read
-    signature table): it re-explodes and re-shuffles the ENTIRE index twice
-    per batch (bucket sizes + the match join).  Bucket-size capping stays
-    exact: every index row of a probed band survives the semi-join, so
-    sizes computed on the surviving subset equal the true bucket sizes for
-    all probed bands.
+    Bucket-size capping stays exact: every index row of a probed band
+    survives the semi-join, so sizes computed on the surviving subset equal
+    the true bucket sizes for all probed bands.
 
     An index in the earlier layout, which split every batch into per-prefix
     partition directories (``batch_id=N/<col>=P/``), cannot take new
@@ -142,18 +139,21 @@ class BandIndex:
 
 
 class IncrementalDedup:
-    """foreachBatch sink: sketch → probe vs indexed signatures → append.
+    """foreachBatch sink: sketch → probe vs the band index → append.
 
     Directory layout under ``base_dir``: ``signatures/batch_id=N/``
     (accumulated signature table, one partition dir per micro-batch),
+    ``band_index/batch_id=N/`` (the BandIndex of those signatures),
     ``matches/batch_id=N/`` (verified duplicate pairs per batch),
-    ``keep/batch_id=N/`` (with ``keep_manifest``), ``band_index/batch_id=N/``
-    (with ``band_index``), ``_stream_checkpoint/`` (Spark streaming offsets).
+    ``keep/batch_id=N/`` (with ``keep_manifest``), ``_stream_checkpoint/``
+    (Spark streaming offsets).
 
     Duplicate coverage is complete: pairs WITHIN a micro-batch are found by
     running the batch's own signatures through stage-1 candidate
-    generation, and pairs ACROSS batches by probing against the accumulated
-    index — union of both feeds one verify pass.
+    generation, and pairs ACROSS batches by probing the band index of all
+    earlier batches — union of both feeds one verify pass.  The signature
+    table is the source of truth for the verify arrays, semi-joined down to
+    the index ids the probe matched.
 
     Each micro-batch is read and sketched once.  ``process_batch`` persists
     the batch (unless the caller already cached it, in which case it is
@@ -166,32 +166,27 @@ class IncrementalDedup:
 
     Writes are idempotent under foreachBatch retries: every batch overwrites
     its own ``batch_id=N`` partition directory, so a replayed batch replaces
-    its previous (possibly partial) output instead of appending duplicates.
+    its previous (possibly partial) output instead of appending duplicates,
+    and the probe and verify read only batches strictly earlier than the
+    current one.
 
-    ``cache_index=True`` additionally pins the accumulated index in executor
-    memory as a list of per-batch persisted slices (each the re-read of its
-    own committed partition, so lineage stays one file scan per slice and
-    nothing is ever copied): the probe then reads the index from block cache
-    instead of re-scanning the whole signature parquet every batch.
-    Durability is unchanged (parquet partitions remain the source of truth;
-    on restart the existing table is loaded as one slice) and the retry
-    guard is unchanged (slices strictly earlier than the current batch_id).
-    Sized for hot-window deployments; at 10^12 rows use ``band_index=True``
-    (BandIndex — the compact inverted band index whose probe never
-    shuffles the index).  The two flags are mutually exclusive (the band
-    probe never reads the slice cache, so pinning slices would only leak
-    storage memory); ``band_index`` wins when both are passed."""
+    ``band_index`` is accepted for compatibility with callers that still
+    pass it; the band index is the only cross-batch path, so only ``True``
+    is valid."""
 
     def __init__(
         self,
         base_dir: str,
         cfg: MhapConfig,
         freq: FreqTable | None = None,
-        cache_index: bool = False,
-        band_index: bool = False,
-        id_pushdown_cap: int | None = None,
+        band_index: bool = True,
         keep_manifest: bool = False,
     ):
+        if not band_index:
+            raise ValueError(
+                "IncrementalDedup probes the band index for every cross-batch "
+                "match; band_index=False is not supported"
+            )
         if cfg.candidate_mode == "star":
             # star emission is hub-mediated: members connect only THROUGH the
             # bucket hub, and the transitive edges are closed by the batch
@@ -208,12 +203,12 @@ class IncrementalDedup:
             )
         if cfg.min_store_shingles > 0:
             # the asymmetric store filter is a batch-index concept: applying
-            # it intra-batch but probing the UNFILTERED accumulated table
+            # it intra-batch but probing the UNFILTERED band index
             # cross-batch would report a (short, short) duplicate iff the
             # two rows arrived in different micro-batches — output depending
             # on arrival batching, the same contract violation star mode is
             # rejected for.  Implementing it needs an n_shingles filter on
-            # the index side of both probe paths; until then, reject loudly.
+            # the index side of the probe; until then, reject loudly.
             raise ValueError(
                 "IncrementalDedup does not support min_store_shingles: the "
                 "store filter would apply intra-batch but not to the "
@@ -223,21 +218,6 @@ class IncrementalDedup:
         self.base_dir = base_dir
         self.cfg = cfg
         self.freq = freq
-        # band-index verify side: matched ids at or below this count are
-        # pushed into the signature scan as an In filter (row-group pruning);
-        # above it the left-semi join applies (no driver-side id set).
-        # None (default) derives the cap from the session's
-        # spark.sql.parquet.pushdown.inFilterThreshold — ABOVE that
-        # threshold Spark rewrites the pushed predicate to a min/max RANGE
-        # filter, which cannot prune ids spread across the table, so a
-        # bigger cap would ship ids to the driver for no pruning in return
-        self.id_pushdown_cap = id_pushdown_cap
-        # the band-index probe never reads the signature-slice cache, so
-        # pinning a per-batch slice every micro-batch would grow executor
-        # storage memory linearly with stream lifetime for zero benefit —
-        # the flags are mutually exclusive and band_index wins
-        self.cache_index = cache_index and not band_index
-        self._slices: list[tuple[int, DataFrame]] = []  # (batch_id, persisted df)
         self.sig_path = os.path.join(base_dir, "signatures")
         self.match_path = os.path.join(base_dir, "matches")
         # keep_manifest=True: additionally write ``keep/batch_id=N`` with the
@@ -260,65 +240,7 @@ class IncrementalDedup:
         # tiny per-batch write — off by default.
         self.keep_manifest = keep_manifest
         self.keep_path = os.path.join(base_dir, "keep")
-        # band_index=True: cross-batch probing goes through the compact
-        # inverted band index (BandIndex) instead of re-reading
-        # and re-shuffling the whole signature table — the 10^12-row layout.
-        # The signature table remains the source of truth for the verify
-        # arrays (pruned to matched ids only).
-        self.bindex = (
-            BandIndex(os.path.join(base_dir, "band_index")) if band_index else None
-        )
-
-    def _indexed(self, spark: SparkSession, batch_id: int) -> DataFrame | None:
-        """Accumulated signatures of batches STRICTLY EARLIER than
-        ``batch_id`` (a retried batch must not probe its own half-written
-        partition), from block cache when ``cache_index`` is on."""
-        if not _has_committed_data(self.sig_path):
-            return None
-        if not self.cache_index:
-            return spark.read.parquet(self.sig_path).where(
-                F.col("batch_id") < F.lit(batch_id)
-            )
-        if not self._slices:  # restart: adopt the existing table as one slice
-            # the retry guard must be baked in HERE, not just at probe time:
-            # on crash-replay the current batch's old partition already exists
-            # on disk, and persisting it into the boot slice would serve its
-            # stale rows alongside the fresh per-batch slice added after the
-            # overwrite (duplicate index entries / FileNotFound on eviction)
-            boot = (
-                spark.read.parquet(self.sig_path)
-                .where(F.col("batch_id") < F.lit(batch_id))
-                .persist()
-            )
-            boot.count()
-            self._slices.append((-1, boot))
-        # every slice is already batch-pure: the boot slice (bid=-1) bakes
-        # its `< batch_id` filter in at adoption, and each per-batch slice
-        # holds only its own batch's rows — so selecting bid < batch_id
-        # (which the -1 boot always satisfies) needs no re-filtering
-        live = [df for bid, df in self._slices if bid < batch_id]
-        if not live:  # first-batch retry on a fresh dir: no earlier batches
-            return None
-        out = live[0]
-        for df in live[1:]:
-            out = out.unionByName(df)
-        return out
-
-    def _append_cache(self, spark: SparkSession, batch_id: int) -> None:
-        if not self.cache_index:
-            return
-        for i, (bid, df) in enumerate(self._slices):  # replace on retry
-            if bid == batch_id:
-                df.unpersist()
-                del self._slices[i]
-                break
-        s = (
-            spark.read.parquet(self.sig_path)
-            .where(F.col("batch_id") == F.lit(batch_id))
-            .persist()
-        )
-        s.count()
-        self._slices.append((batch_id, s))
+        self.bindex = BandIndex(os.path.join(base_dir, "band_index"))
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -367,73 +289,28 @@ class IncrementalDedup:
             # intra-batch duplicates: stage 1 over the batch's own signatures
             cands = candidate_pairs(sigs, self.cfg)
             both = sigs.select("image_id", "bottomk")
-
-            if self.bindex is not None:
-                # cross-batch duplicates via the band index: the index side
-                # is scanned, never shuffled (see BandIndex.probe); verify
-                # arrays come from the signature table PRUNED to matched
-                # ids, so the wide bottom-k rows of unmatched index entries
-                # never move either
-                found = self.bindex.probe(sigs, self.cfg, batch_id)
-                if found is not None:
-                    cands = cands.unionByName(
-                        found.select(
-                            F.col("probe_id").alias("src"),
-                            F.col("index_id").alias("dst"),
-                            "votes",
-                        )
+            # cross-batch duplicates via the band index: the index side is
+            # scanned, never shuffled (see BandIndex.probe); verify arrays
+            # come from the signature table semi-joined to the matched ids,
+            # so the wide bottom-k rows of unmatched index entries never
+            # move and no id set is held on the driver
+            found = self.bindex.probe(sigs, self.cfg, batch_id)
+            if found is not None:
+                cands = cands.unionByName(
+                    found.select(
+                        F.col("probe_id").alias("src"),
+                        F.col("index_id").alias("dst"),
+                        "votes",
                     )
-                    matched_ids = found.select(
-                        F.col("index_id").alias("image_id")
-                    ).distinct()
-                    indexed = spark.read.parquet(self.sig_path).where(
-                        F.col("batch_id") < F.lit(batch_id)
-                    )
-                    # fetch the matched index arrays with a PUSHED-DOWN id
-                    # filter when the match set is lookup-sized: ``found``
-                    # is already materialized (localCheckpoint in probe), so
-                    # listing its distinct index ids is a cheap local job,
-                    # and an In(image_id, …) predicate reaches the parquet
-                    # row-group stats — on an image_id-sorted/bucketed
-                    # signature table the verify side then reads a handful
-                    # of row groups instead of scanning the whole table per
-                    # batch.  The cap tracks the parquet In-pushdown
-                    # threshold: above it Spark pushes only a min/max range
-                    # (no pruning for spread ids), so wider batches take the
-                    # semi-join, which never holds the id set on the driver.
-                    cap = self.id_pushdown_cap
-                    if cap is None:
-                        cap = int(
-                            spark.conf.get(
-                                "spark.sql.parquet.pushdown.inFilterThreshold", "10"
-                            )
-                        )
-                    ids = [
-                        r["image_id"] for r in matched_ids.limit(cap + 1).collect()
-                    ]
-                    if len(ids) <= cap:
-                        # ≤ cap rows under limit(cap+1) ⇒ this IS the full set
-                        hit = (
-                            indexed.where(F.col("image_id").isin(ids))
-                            if ids
-                            else None
-                        )
-                    else:
-                        hit = indexed.join(matched_ids, "image_id", "left_semi")
-                    if hit is not None:
-                        both = both.unionByName(hit.select("image_id", "bottomk"))
-            else:
-                indexed = self._indexed(spark, batch_id)
-                if indexed is not None:
-                    # cross-batch duplicates: probe vs the accumulated index
-                    cands = cands.unionByName(
-                        probe_candidates(sigs, indexed, self.cfg).select(
-                            F.col("probe_id").alias("src"),
-                            F.col("index_id").alias("dst"),
-                            "votes",
-                        )
-                    )
-                    both = both.unionByName(indexed.select("image_id", "bottomk"))
+                )
+                matched_ids = found.select(
+                    F.col("index_id").alias("image_id")
+                ).distinct()
+                indexed = spark.read.parquet(self.sig_path).where(
+                    F.col("batch_id") < F.lit(batch_id)
+                )
+                hit = indexed.join(matched_ids, "image_id", "left_semi")
+                both = both.unionByName(hit.select("image_id", "bottomk"))
 
             matches = verified_pairs(cands, both, self.cfg)
             matches.write.mode("overwrite").parquet(
@@ -473,9 +350,7 @@ class IncrementalDedup:
             sigs.write.mode("overwrite").parquet(
                 os.path.join(self.sig_path, f"batch_id={batch_id}")
             )
-            if self.bindex is not None:
-                self.bindex.append(sigs, batch_id)
-            self._append_cache(spark, batch_id)
+            self.bindex.append(sigs, batch_id)
         finally:
             if sigs is not None:
                 sigs.unpersist()

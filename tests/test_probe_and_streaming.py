@@ -5,12 +5,14 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from mhap_spark.candidates import candidate_pairs, probe_candidates
 from mhap_spark.config import MhapConfig
 from mhap_spark.minhash import compute_signatures
 from mhap_spark.streaming import IncrementalDedup, read_image_stream
 from mhap_spark.synth import INPUT_SCHEMA_DDL, corpus_to_rows, generate_corpus
+from mhap_spark.verify import verified_pairs
 
 CFG = MhapConfig(num_hashes=128, min_jaccard=0.2)
 
@@ -60,8 +62,6 @@ def test_min_store_shingles_filter(spark):
     pairs survive while (short, short) pairs are skipped; with the filter
     disabled-by-threshold (0 or below every row) the asymmetric path must
     reproduce the symmetric self-join exactly."""
-    import pyspark.sql.functions as F
-
     corpus = generate_corpus(300, seed=21)
     sigs = compute_signatures(_df(spark, corpus, 0, 300).repartition(4), CFG, None)
     sigs = sigs.persist()
@@ -218,59 +218,11 @@ def test_streaming_retry_idempotent(spark, tmp_path):
     assert m2.count() == n_matches
 
 
-def test_streaming_cached_index_equivalent(spark, tmp_path):
-    """cache_index=True must produce byte-identical per-batch matches to the
-    uncached path on the same batch sequence — including a mid-stream
-    restart (new sink adopting the existing parquet as its boot slice) and
-    a replayed batch (cache slice replaced, not duplicated)."""
-    corpus = generate_corpus(160, seed=11)
-    rows = corpus_to_rows(corpus)
-    chunks = [rows[i * 40 : (i + 1) * 40] for i in range(4)]
-
-    def run(base, cached, restart_at=None, retry_at=None, crash_replay_at=None):
-        sink = IncrementalDedup(base, CFG, cache_index=cached)
-        for k, chunk in enumerate(chunks):
-            if restart_at == k:  # simulate driver restart: fresh sink object
-                sink = IncrementalDedup(base, CFG, cache_index=cached)
-            bdf = spark.createDataFrame(chunk, INPUT_SCHEMA_DDL)
-            sink.process_batch(bdf, k)
-            if retry_at == k:
-                sink.process_batch(bdf, k)  # foreachBatch replay
-            if crash_replay_at == k:
-                # crash AFTER the batch's partition committed but before the
-                # streaming offset did: driver restarts (fresh sink, empty
-                # cache) and foreachBatch replays the SAME batch — its stale
-                # partition is already on disk and must not be adopted into
-                # the boot slice (round-4 ADVICE high)
-                sink = IncrementalDedup(base, CFG, cache_index=cached)
-                sink.process_batch(bdf, k)
-        out = {}
-        for k in range(len(chunks)):
-            m = spark.read.parquet(os.path.join(base, "matches", f"batch_id={k}"))
-            out[k] = {(r["src"], r["dst"]) for r in m.collect()}
-        for _, df in getattr(sink, "_slices", []):
-            df.unpersist()
-        return out
-
-    plain = run(str(tmp_path / "plain"), cached=False)
-    cached = run(str(tmp_path / "cached"), cached=True, restart_at=2, retry_at=3)
-    assert plain == cached
-    assert any(plain[k] for k in plain)  # the comparison is not vacuous
-    # crash-replay of batch 1 (partition exists pre-restart) + first-batch
-    # retry on a fresh dir (live=[] must mean "no earlier batches", not crash)
-    replayed = run(
-        str(tmp_path / "replayed"), cached=True, retry_at=0, crash_replay_at=1
-    )
-    assert plain == replayed
-
-
 def test_windowed_event_counts_with_watermark(spark, tmp_path):
     """Streamed watermarked hourly counts must equal the batch groupBy on
     the same files (availableNow drains everything, so no row is actually
     late — this pins the plan shape and the append-mode emission)."""
     import datetime as dt
-
-    from pyspark.sql import functions as F
 
     from mhap_spark.streaming import windowed_event_counts
 
@@ -328,35 +280,79 @@ def test_windowed_event_counts_with_watermark(spark, tmp_path):
     assert len(got) >= len(want) - 3 * n_types
 
 
+def _reference_matches(spark, chunks, cfg):
+    """Per-batch matches the sink must write, computed without the band
+    index: stage 1 on the batch's own signatures plus probe_candidates
+    against the signatures of every earlier batch, then one verify."""
+    earlier, out, cached = None, {}, []
+    for k, chunk in enumerate(chunks):
+        sigs = compute_signatures(
+            spark.createDataFrame(chunk, INPUT_SCHEMA_DDL), cfg, None
+        ).persist()
+        cached.append(sigs)
+        cands = candidate_pairs(sigs, cfg)
+        both = sigs
+        if earlier is not None:
+            cands = cands.unionByName(
+                probe_candidates(sigs, earlier, cfg).select(
+                    F.col("probe_id").alias("src"),
+                    F.col("index_id").alias("dst"),
+                    "votes",
+                )
+            )
+            both = sigs.unionByName(earlier)
+        out[k] = {
+            (r["src"], r["dst"]) for r in verified_pairs(cands, both, cfg).collect()
+        }
+        earlier = both
+    for sigs in cached:
+        sigs.unpersist()
+    return out
+
+
+def _sink_matches(spark, base, k_batches):
+    return {
+        k: {
+            (r["src"], r["dst"])
+            for r in spark.read.parquet(
+                os.path.join(base, "matches", f"batch_id={k}")
+            ).collect()
+        }
+        for k in range(k_batches)
+    }
+
+
 def test_streaming_band_index_equivalent(spark, tmp_path):
-    """band_index=True (band-partitioned inverted index, broadcast-probe,
-    index side never shuffled) must produce the same per-batch matches as
-    the flat path (probe_candidates over the re-read signature table) —
-    including a batch replay (idempotent batch_id=N overwrite of the band
-    index subtree)."""
+    """The band-index sink must write the reference's per-batch matches
+    through a fresh sink in mid-stream, a replayed batch, a replayed first
+    batch on a fresh directory, and a crash after commit followed by a
+    fresh-sink replay (each batch overwrites its own batch_id=N dirs)."""
     corpus = generate_corpus(160, seed=13)
     rows = corpus_to_rows(corpus)
     chunks = [rows[i * 40 : (i + 1) * 40] for i in range(4)]
 
-    def run(base, banded, retry_at=None):
-        sink = IncrementalDedup(base, CFG, band_index=banded)
-        for k, chunk in enumerate(chunks):
-            bdf = spark.createDataFrame(chunk, INPUT_SCHEMA_DDL)
+    # the sink keeps no state beyond its directories, so one run can take
+    # every scenario in turn
+    base = str(tmp_path / "banded")
+    sink = IncrementalDedup(base, CFG, keep_manifest=True)
+    for k, chunk in enumerate(chunks):
+        bdf = spark.createDataFrame(chunk, INPUT_SCHEMA_DDL)
+        if k == 2:  # driver restart: fresh sink object
+            sink = IncrementalDedup(base, CFG, keep_manifest=True)
+        sink.process_batch(bdf, k)
+        if k in (0, 3):
+            sink.process_batch(bdf, k)  # foreachBatch replay
+        if k == 1:
+            # crash AFTER the batch's partitions committed but before the
+            # streaming offset did: the driver restarts and foreachBatch
+            # replays the SAME batch over its own stale partitions
+            sink = IncrementalDedup(base, CFG, keep_manifest=True)
             sink.process_batch(bdf, k)
-            if retry_at == k:
-                sink.process_batch(bdf, k)  # foreachBatch replay
-        out = {}
-        for k in range(len(chunks)):
-            m = spark.read.parquet(os.path.join(base, "matches", f"batch_id={k}"))
-            out[k] = {(r["src"], r["dst"]) for r in m.collect()}
-        return out
-
-    flat = run(str(tmp_path / "flat"), banded=False)
-    banded = run(str(tmp_path / "banded"), banded=True, retry_at=2)
-    assert flat == banded
-    assert any(flat[k] for k in flat)  # the comparison is not vacuous
+    want = _reference_matches(spark, chunks, CFG)
+    assert _sink_matches(spark, base, len(chunks)) == want
+    assert any(want[k] for k in want)  # the comparison is not vacuous
     # compact layout: part files directly under batch_id=N, no subdirectories
-    bi = os.path.join(str(tmp_path / "banded"), "band_index", "batch_id=0")
+    bi = os.path.join(base, "band_index", "batch_id=0")
     entries = os.listdir(bi)
     assert any(f.startswith("part-") for f in entries)
     assert not any(os.path.isdir(os.path.join(bi, d)) for d in entries)
@@ -366,8 +362,6 @@ def test_band_index_rejects_prefix_partitioned_layout(spark, tmp_path):
     """An index written in the old layout (each batch split into per-prefix
     partition directories) cannot take compact batches — Spark's partition
     discovery rejects the mix — so construction must fail before any write."""
-    from pyspark.sql import functions as F
-
     from mhap_spark.streaming import BandIndex
 
     base = str(tmp_path / "d")
@@ -380,17 +374,16 @@ def test_band_index_rejects_prefix_partitioned_layout(spark, tmp_path):
     with pytest.raises(ValueError, match="prefix-partitioned layout"):
         BandIndex(os.path.join(base, "band_index"))
     with pytest.raises(ValueError, match="prefix-partitioned layout"):
-        IncrementalDedup(base, CFG, band_index=True)
+        IncrementalDedup(base, CFG)
     assert not os.path.exists(os.path.join(base, "signatures"))
 
 
 def test_band_index_capped_bucket_adversary(spark, tmp_path):
     """A planted cluster larger than max_bucket_size makes index-side buckets
-    that the probe must drop exactly as the flat probe_candidates path does:
-    every index row of a probed band survives the broadcast semi-join, so
-    the capped bucket sizes are the true ones."""
+    that the probe must drop exactly as probe_candidates does: every index
+    row of a probed band survives the broadcast semi-join, so the capped
+    bucket sizes are the true ones."""
     import numpy as np
-    from pyspark.sql import functions as F
 
     cfg = CFG.with_overrides(max_bucket_size=8)
     corpus = generate_corpus(150, seed=23, with_images=False, mega_cluster=30)
@@ -399,27 +392,16 @@ def test_band_index_capped_bucket_adversary(spark, tmp_path):
     rows = [rows[j] for j in np.random.default_rng(23).permutation(len(rows))]
     chunks = [rows[i * 50 : (i + 1) * 50] for i in range(3)]
 
-    def run(base, banded):
-        sink = IncrementalDedup(base, cfg, band_index=banded)
-        for k, chunk in enumerate(chunks):
-            sink.process_batch(spark.createDataFrame(chunk, INPUT_SCHEMA_DDL), k)
-        return {
-            k: {
-                (r["src"], r["dst"])
-                for r in spark.read.parquet(
-                    os.path.join(base, "matches", f"batch_id={k}")
-                ).collect()
-            }
-            for k in range(len(chunks))
-        }
-
     banded_dir = str(tmp_path / "banded")
-    flat = run(str(tmp_path / "flat"), banded=False)
-    assert run(banded_dir, banded=True) == flat
+    sink = IncrementalDedup(banded_dir, cfg)
+    for k, chunk in enumerate(chunks):
+        sink.process_batch(spark.createDataFrame(chunk, INPUT_SCHEMA_DDL), k)
+    want = _reference_matches(spark, chunks, cfg)
+    assert _sink_matches(spark, banded_dir, len(chunks)) == want
     # not vacuous: the last batch has matches and probes index buckets
     # above the cap
     last = len(chunks) - 1
-    assert flat[last]
+    assert want[last]
     bi = spark.read.parquet(os.path.join(banded_dir, "band_index"))
     probed = bi.where(F.col("batch_id") == last).select("band_hash").distinct()
     biggest = (
@@ -451,65 +433,6 @@ def test_process_batch_leaves_caller_cache_alone(spark, tmp_path):
     assert plain.storageLevel == StorageLevel.NONE
 
 
-def test_band_index_id_pushdown_equivalent(spark, tmp_path):
-    """The verify-side matched-id fetch must be identical through both
-    physical shapes: the In(image_id, …) filter pushed into the signature
-    scan (small match sets — row-group pruning at scale) and the left-semi
-    fallback above the cap (no driver-side id set).  cap=0 forces every
-    batch through the fallback; the explicit large cap forces every batch
-    through the isin path (the production default tracks the parquet
-    In-pushdown threshold, above which Spark would push only a min/max
-    range — the semantics are identical either way, which is what this
-    pins)."""
-    corpus = generate_corpus(160, seed=13)
-    rows = corpus_to_rows(corpus)
-    chunks = [rows[i * 40 : (i + 1) * 40] for i in range(4)]
-
-    def run(base, cap):
-        sink = IncrementalDedup(base, CFG, band_index=True, id_pushdown_cap=cap)
-        for k, chunk in enumerate(chunks):
-            sink.process_batch(spark.createDataFrame(chunk, INPUT_SCHEMA_DDL), k)
-        return {
-            k: {
-                (r["src"], r["dst"])
-                for r in spark.read.parquet(
-                    os.path.join(base, "matches", f"batch_id={k}")
-                ).collect()
-            }
-            for k in range(len(chunks))
-        }
-
-    from pyspark.sql import functions as F
-
-    pushed = run(str(tmp_path / "pushed"), cap=100_000)
-    semi = run(str(tmp_path / "semi"), cap=0)
-    assert pushed == semi
-    assert any(pushed[k] for k in pushed)
-    # the pushdown really reaches the parquet scan: an isin over the
-    # signature table shows up as a pushed In/InSet filter, not a
-    # post-scan Filter only
-    sig = spark.read.parquet(os.path.join(str(tmp_path / "pushed"), "signatures"))
-    some_ids = [r["image_id"] for r in sig.select("image_id").limit(3).collect()]
-    plan = (
-        sig.where(F.col("image_id").isin(some_ids))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PushedFilters: [In(image_id" in plan, plan[:2000]
-
-
-def test_band_index_disables_slice_cache(tmp_path):
-    """band_index=True never reads the per-batch signature-slice cache, so
-    cache_index must be forced off when both are passed — otherwise every
-    micro-batch pins a slice that is never consumed (unbounded executor
-    storage-memory growth over the stream's lifetime)."""
-    sink = IncrementalDedup(str(tmp_path), CFG, cache_index=True, band_index=True)
-    assert sink.cache_index is False and sink.bindex is not None
-    flat = IncrementalDedup(str(tmp_path), CFG, cache_index=True)
-    assert flat.cache_index is True and flat.bindex is None
-
-
 def test_incremental_dedup_rejects_min_store(tmp_path):
     """min_store_shingles would filter intra-batch but not the accumulated
     index — match output would depend on arrival batching; must refuse."""
@@ -518,22 +441,36 @@ def test_incremental_dedup_rejects_min_store(tmp_path):
 
 
 def test_streaming_recovers_from_uncommitted_first_write(spark, tmp_path):
-    """A signatures dir holding only a _temporary subtree (crash mid-write
-    of the first batch) must read as 'no index yet', not throw
-    UNABLE_TO_INFER_SCHEMA on every replay."""
+    """Signature and band-index dirs holding only a _temporary subtree (crash
+    mid-write of the first batch) must read as 'no index yet', not throw
+    UNABLE_TO_INFER_SCHEMA on every replay, and the replay commits."""
     from mhap_spark.streaming import _has_committed_data
 
     base = str(tmp_path / "dedup")
-    sig = os.path.join(base, "signatures", "batch_id=0", "_temporary", "0")
-    os.makedirs(sig)
-    with open(os.path.join(sig, "task_000"), "w") as f:
-        f.write("junk")
-    assert not _has_committed_data(os.path.join(base, "signatures"))
+    for sub in ("signatures", "band_index"):
+        tmp = os.path.join(base, sub, "batch_id=0", "_temporary", "0")
+        os.makedirs(tmp)
+        with open(os.path.join(tmp, "task_000"), "w") as f:
+            f.write("junk")
+        assert not _has_committed_data(os.path.join(base, sub))
     sink = IncrementalDedup(base, CFG)
-    assert sink._indexed(spark, 0) is None  # replay sees a fresh index
-    # a committed write flips it
-    spark.range(3).write.parquet(os.path.join(base, "signatures", "batch_id=1"))
-    assert _has_committed_data(os.path.join(base, "signatures"))
+    b = spark.createDataFrame(
+        corpus_to_rows(generate_corpus(40, seed=9)), INPUT_SCHEMA_DDL
+    )
+    # the replay sees a fresh index
+    assert sink.bindex.probe(compute_signatures(b, CFG, None), CFG, 0) is None
+    sink.process_batch(b, 0)
+    for sub in ("signatures", "band_index", "matches"):
+        assert _has_committed_data(os.path.join(base, sub)), sub
+
+
+def test_incremental_dedup_rejects_band_index_off(tmp_path):
+    """The band index is the only cross-batch path: band_index=False is
+    refused at construction, before anything is written."""
+    base = str(tmp_path / "d")
+    with pytest.raises(ValueError, match="band_index=False"):
+        IncrementalDedup(base, CFG, band_index=False)
+    assert not os.path.exists(base)
 
 
 def test_incremental_dedup_rejects_star_mode(tmp_path):
@@ -552,16 +489,15 @@ def test_keep_manifest_rejects_recurring_ids(spark, tmp_path):
     """keep_manifest's documented precondition (image_id unique across the
     stream) must fail loudly — an id recurring in a later batch would
     silently mis-orient that pair's drop decision — and before any write,
-    so the rejected batch leaves nothing on disk (flat and band index)."""
+    so the rejected batch leaves nothing on disk."""
     corpus = generate_corpus(60, seed=9)
     rows = corpus_to_rows(corpus)
     df = spark.createDataFrame(rows, INPUT_SCHEMA_DDL)
-    for banded in (False, True):
-        base = str(tmp_path / f"d{int(banded)}")
-        sink = IncrementalDedup(base, CFG, keep_manifest=True, band_index=banded)
-        sink.process_batch(df, 0)
-        with pytest.raises(ValueError, match="keep_manifest precondition"):
-            sink.process_batch(df, 1)  # same ids again in a later batch
-        for sub in ("matches", "keep", "signatures", "band_index"):
-            assert not os.path.exists(os.path.join(base, sub, "batch_id=1")), sub
-        assert os.path.isdir(os.path.join(base, "keep", "batch_id=0"))
+    base = str(tmp_path / "d")
+    sink = IncrementalDedup(base, CFG, keep_manifest=True)
+    sink.process_batch(df, 0)
+    with pytest.raises(ValueError, match="keep_manifest precondition"):
+        sink.process_batch(df, 1)  # same ids again in a later batch
+    for sub in ("matches", "keep", "signatures", "band_index"):
+        assert not os.path.exists(os.path.join(base, sub, "batch_id=1")), sub
+    assert os.path.isdir(os.path.join(base, "keep", "batch_id=0"))
