@@ -56,11 +56,11 @@ def _funnel_exprs(cfg: MhapConfig, is_hub=None) -> list:
 
     ``candidate_pairs_generated`` counts emitted edges exactly: C(n,2) per
     eligible bucket in pairs mode, n−1 per bucket in star mode — where
-    star-salt counts oversize buckets too (salted emission still produces
-    exactly n−1 edges per bucket: members minus sub-hubs, plus sub-hub
-    chain links; the global min is always its own sub-bucket's hub).
+    oversize buckets count too (salted emission still produces exactly n−1
+    edges per bucket: members minus sub-hubs, plus sub-hub chain links; the
+    global min is always its own sub-bucket's hub).
     ``n_buckets_capped`` counts over-cap buckets in every mode — dropped in
-    pairs/star-drop, salted in star-salt."""
+    pairs mode, salted in star mode."""
     if is_hub is None:
         is_hub = F.lit(True)
     star = cfg.candidate_mode == "star"
@@ -71,7 +71,7 @@ def _funnel_exprs(cfg: MhapConfig, is_hub=None) -> list:
     )
     counted = (
         F.col("bucket_size") >= 2
-        if star and cfg.oversize_star == "salt"
+        if star
         else F.col("bucket_size").between(2, cfg.max_bucket_size)
     )
     return [
@@ -133,13 +133,12 @@ def _pairs_star(
     bucket whose hub verifies against its members (near-identical rows).
     src < dst holds by construction (src is the bucket minimum).
 
-    Buckets larger than the cap (cfg.oversize_star == "salt", default):
-    members are salted into ceil(size/cap) sub-buckets by crc32(image_id);
-    each sub-bucket emits (sub-hub → member) edges and the sub-hubs chain to
-    the bucket's global min — still exactly size−1 edges (the global min is
-    always its own sub-bucket's hub), with no task ever holding more than
-    ~cap·n_bands rows of one key.  A 10^12-row corpus' boilerplate
-    mega-clusters (size ≫ cap in EVERY band) stay connected instead of
+    Buckets larger than the cap: members are salted into ceil(size/cap)
+    sub-buckets by crc32(image_id); each sub-bucket emits (sub-hub → member)
+    edges and the sub-hubs chain to the bucket's global min — still exactly
+    size−1 edges (the global min is always its own sub-bucket's hub), with
+    no task ever holding more than ~cap·n_bands rows of one key.  A
+    10^12-row corpus' boilerplate mega-clusters (size ≫ cap in EVERY band) stay connected instead of
     silently fragmenting under the old drop-only behavior.  The emitted
     ``oversize`` flag lets the vote gate relax to 1 for these edges
     (see candidate_pairs); salt assignment is crc32 so the numpy oracle
@@ -173,18 +172,6 @@ def _pairs_star(
         sized = sized.observe(
             funnel_obs, *_funnel_exprs(cfg, F.col("image_id") == F.col("src"))
         )
-    if cfg.oversize_star != "salt":
-        return (
-            sized.where(
-                F.col("bucket_size").between(2, cfg.max_bucket_size)
-                & (F.col("image_id") != F.col("src"))
-            )
-            .select(
-                "src", F.col("image_id").alias("dst"),
-                F.lit(False).alias("oversize"),
-            )
-        )
-
     # Salt path, fused into the SAME chain: every row emits AT MOST ONE edge
     # (normal member → hub edge; oversize member → sub-hub edge; oversize
     # sub-hub row → chain edge to the bucket min), so the three former

@@ -54,27 +54,12 @@ class MhapConfig:
     #            O(n²), sufficient for CLUSTER output (connectivity is preserved
     #            through verified hubs) — the web-scale mode; a 500-dup bucket
     #            emits 499 edges instead of 124,750
+    # buckets larger than max_bucket_size are dropped in pairs mode (C(n,2)
+    # emission is quadratic) and salted into sub-buckets in star mode, so a
+    # mega-cluster stays connected (candidates._pairs_star)
     candidate_mode: str = "pairs"
     star_min_votes: int = 2          # vote gate for star edges (bands where the
                                      # edge's hub is that bucket's min)
-    # star-mode handling of buckets LARGER than max_bucket_size:
-    #  "salt" (default) — salted sub-bucket emission: members hash into
-    #        ceil(size/cap) sub-buckets by crc32(image_id); each sub-bucket
-    #        emits (sub-hub → member) star edges and sub-hubs chain to the
-    #        bucket's global min, so a mega-cluster (boilerplate captions,
-    #        the NORMAL case at 10^12 rows) stays connected — exactly
-    #        size−1 edges total, every task bounded by ~cap rows.  Oversize
-    #        edges bypass the vote gate (sub-bucket membership can jitter
-    #        across bands as bucket sizes change n_salt, splitting votes);
-    #        stage-2 verify remains the real filter and the edge volume is
-    #        linear either way.
-    #  "drop" — pre-round-4 behavior: oversize buckets emit nothing (noise
-    #        suppression analog, mhap/sketch/FrequencyCounts.java:171-186);
-    #        a cluster larger than cap × (minority-bucket fan-out) can then
-    #        FRAGMENT — measured in tests/test_star_mode.py.
-    # Pairs mode always drops oversize buckets: C(n,2) emission on a
-    # mega-bucket is quadratic and no salting fixes that.
-    oversize_star: str = "salt"
     num_bands: int = 0               # bands used for bucketing; 0 = all
                                      # (num_hashes/rows_per_band).  Subsampling
                                      # bands cuts the candidate shuffle linearly;

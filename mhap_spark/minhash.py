@@ -106,7 +106,6 @@ def batch_minhash(
     weights: np.ndarray,
     row_starts: np.ndarray,
     num_hashes: int,
-    block_keys_base: int | None = None,
 ) -> np.ndarray:
     """Weighted MinHash over a whole batch — cache-blocked by ROWS.
 
@@ -138,8 +137,7 @@ def batch_minhash(
         # The pre-round-5 loop silently treated weight-0 keys as
         # never-contributing — reject instead of silently changing that.
         raise ValueError("batch_minhash requires weights >= 1 for every key")
-    base = _BLOCK_KEYS_BASE if block_keys_base is None else block_keys_base
-    target = base * max(1, -(-max_w // 4))  # ceil(max_w/4)
+    target = _BLOCK_KEYS_BASE * max(1, -(-max_w // 4))  # ceil(max_w/4)
     if n_keys <= target:
         return _minhash_block(rows, keys, weights, row_starts, num_hashes)
     sig = np.empty((n_rows, num_hashes), dtype=np.int32)
@@ -313,10 +311,6 @@ def compute_signatures(
     k_bottom = cfg.ordered_sketch_size
     num_hashes = cfg.num_hashes
     rpb = cfg.rows_per_band
-    # captured at plan-build time so the closure carries it to executors
-    # (module-global lookup inside the worker would re-import the default —
-    # this is what lets bench A/Bs toggle blocking from the driver)
-    blk = _BLOCK_KEYS_BASE
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -325,9 +319,7 @@ def compute_signatures(
             )
             rows, keys, tfs, row_starts = distinct_per_row(flat, offs)
             weights = batch_weights(keys, tfs, cfg, freq)
-            sig = batch_minhash(
-                rows, keys, weights, row_starts, num_hashes, block_keys_base=blk
-            )
+            sig = batch_minhash(rows, keys, weights, row_starts, num_hashes)
             bands = band_hashes(sig, rpb, cfg.num_bands)
             keys_signed = keys.view(np.int64)
             n = len(pdf)

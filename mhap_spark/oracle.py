@@ -231,7 +231,7 @@ def find_pairs(
             if len(bucket) < 2:
                 continue
             oversize = len(bucket) > cfg.max_bucket_size
-            if oversize and not (star and cfg.oversize_star == "salt"):
+            if oversize and not star:
                 continue
             if star:
                 # loop vars named `row`/`member`, NOT `r` — `r` above is

@@ -90,8 +90,8 @@ def run_pipeline(
             # downstream action — otherwise its ~10 concurrent AQE
             # stage-jobs first-compute the same cache blocks and serialize
             # on per-block locks while occupying every task slot with
-            # waiters (tools/action_probe.py, round 5: the ten-job wave ran
-            # 34 s at 32c for ~10.5 s of kernel work)
+            # waiters (measured in round 5: the ten-job wave ran 34 s at 32c
+            # for ~10.5 s of kernel work)
             signatures.count()
 
     # --- stage B: candidate + verified pairs --------------------------------
@@ -102,12 +102,10 @@ def run_pipeline(
     else:
         t1 = time.time()
         funnel_obs = Observation()
-        # purity of the oversize votes≥1 relaxation (star+salt only): count
+        # purity of the oversize votes≥1 relaxation (star mode only): count
         # oversize-relaxed edges entering verify vs surviving it — both ride
         # the pairs materialization as Observations, zero extra jobs
-        track_purity = (
-            cfg.candidate_mode == "star" and cfg.oversize_star == "salt"
-        )
+        track_purity = cfg.candidate_mode == "star"
         cands = candidate_pairs(
             signatures, cfg, funnel_obs=funnel_obs,
             keep_oversize_flag=track_purity,

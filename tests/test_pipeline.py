@@ -218,6 +218,23 @@ def test_config_hash_ignores_execution_only_knobs():
     assert cfg.config_hash() != cfg.with_overrides(num_hashes=cfg.num_hashes + 1).config_hash()
 
 
+def test_pair_recall_counts_planted_pairs():
+    """bench._pair_recall backs perfbench's gated pair_recall: it scores
+    planted intra-cluster pairs only."""
+    from bench import _pair_recall
+
+    ids = ["a", "b", "c", "s1", "s2"]
+    truth = [0, 0, 0, 1, 2]  # one 3-member cluster, two planted singletons
+    # the cluster split 2 + 1 keeps one of its three pairs; the singletons
+    # share the engine cluster of a and b and of c without adding pairs
+    split = {"a": "X", "b": "X", "c": "Y", "s1": "X", "s2": "Y"}
+    assert _pair_recall(split, truth, ids) == pytest.approx(1 / 3)
+    whole = {i: "X" for i in ids}
+    assert _pair_recall(whole, truth, ids) == 1.0
+    # no planted pairs at all: nothing to miss
+    assert _pair_recall({"a": "X", "b": "X"}, [0, 1], ["a", "b"]) == 1.0
+
+
 def test_default_cores_follows_host(monkeypatch):
     """Without a numeric SPARK_GRAFT_CPUS, build_session and bench.py size
     local mode to the host's CPU count; a numeric value still wins."""

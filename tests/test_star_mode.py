@@ -127,9 +127,9 @@ def mega_df(spark, mega_corpus):
 
 
 def test_mega_cluster_salted_candidates_match_oracle(spark, mega_corpus, mega_df):
-    """Salted sub-bucket emission (oversize_star='salt') is bit-exact against
-    the numpy oracle — votes included — on a corpus where the hot cluster
-    exceeds the bucket cap in every band."""
+    """Salted sub-bucket emission (star mode's oversize path) is bit-exact
+    against the numpy oracle — votes included — on a corpus where the hot
+    cluster exceeds the bucket cap in every band."""
     freq = FreqTable.from_df(df_ratio_table(mega_df, CFG_MEGA), CFG_MEGA)
     sig_df = compute_signatures(mega_df, CFG_MEGA, freq)
     got = {
@@ -157,11 +157,10 @@ def test_mega_cluster_salted_candidates_match_oracle(spark, mega_corpus, mega_df
     assert got == want
 
 
-def test_mega_cluster_recall_salt_vs_drop(spark, mega_corpus, mega_df):
-    """The whole point of the salted path: with buckets actually dropping,
-    the planted mega-cluster must still resolve to ONE cluster with recall
-    ≥ 0.99; the old drop-only behavior measurably fragments it (this is the
-    documented failure mode, kept as a pinned negative)."""
+def test_mega_cluster_recall_salted(spark, mega_corpus, mega_df):
+    """The whole point of the salted path: with buckets over the cap, the
+    planted mega-cluster must still resolve to ONE cluster with recall
+    ≥ 0.99."""
     truth = truth_pairs(mega_corpus["true_cluster"], mega_corpus["image_id"])
     mega_ids = [
         i
@@ -172,20 +171,10 @@ def test_mega_cluster_recall_salt_vs_drop(spark, mega_corpus, mega_df):
     out = run_pipeline(spark, mega_df, CFG_MEGA)
     cl = {r["image_id"]: r["cluster_id"] for r in out["clusters"].collect()}
     recall = sum(1 for a, b in truth if cl[a] == cl[b]) / len(truth)
-    assert recall >= 0.99, f"salt-mode recall {recall:.3f}"
+    assert recall >= 0.99, f"salted recall {recall:.3f}"
     assert len({cl[i] for i in mega_ids}) == 1, "mega-cluster fragmented"
     out["signatures"].unpersist()
     out["pairs"].unpersist()
-
-    drop = run_pipeline(
-        spark, mega_df, CFG_MEGA.with_overrides(oversize_star="drop")
-    )
-    cl_d = {r["image_id"]: r["cluster_id"] for r in drop["clusters"].collect()}
-    recall_d = sum(1 for a, b in truth if cl_d[a] == cl_d[b]) / len(truth)
-    assert recall_d < recall, "drop mode unexpectedly matched salt mode"
-    assert len({cl_d[i] for i in mega_ids}) > 1
-    drop["signatures"].unpersist()
-    drop["pairs"].unpersist()
 
 
 def test_mega_cluster_funnel_accounts_for_salted_buckets(spark, mega_corpus, mega_df):
