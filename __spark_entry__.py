@@ -543,12 +543,13 @@ def _synth_df(spark, n=600):
 
 def _q_mhap_signatures(spark, sf_dir):
     """Per-row VALUE digests of the core sketch kernel: xor-folds of the
-    slot signature, bottom-k sketch, band hashes, and packed bit-sketch.
-    Hash-checked (round-4): the oracle side is a VALUES literal computed by
-    the independent single-node numpy oracle (oracle.py) over the identical
-    seeded corpus — the engine's Arrow kernel is compared value-for-value
-    by the driver gate, not just row-counted.  A change to ANY slot of ANY
-    row flips its xor digest."""
+    bottom-k sketch and the band hashes.  Hash-checked (round-4): the
+    oracle side is a VALUES literal computed by the independent single-node
+    numpy oracle (oracle.py) over the identical seeded corpus — the
+    engine's Arrow kernel is compared value-for-value by the driver gate,
+    not just row-counted.  At this config (one slot per band, all bands)
+    each band hash is an injective map of its slot value, so a change to
+    ANY slot of ANY row flips its ``bands_xor`` digest."""
     from mhap_spark.freq import FreqTable, df_ratio_table
     from mhap_spark.minhash import compute_signatures
 
@@ -560,11 +561,8 @@ def _q_mhap_signatures(spark, sf_dir):
     return sigs.select(
         "image_id",
         "n_shingles",
-        F.size("sig").alias("sig_len"),
-        xf(F.col("sig").cast("array<long>")).alias("sig_xor"),
         xf("bottomk").alias("bottomk_xor"),
         xf("bands").alias("bands_xor"),
-        xf("bitsig").alias("bitsig_xor"),
     )
 
 
@@ -579,7 +577,7 @@ def _mhap_signatures_oracle_sql(n: int = 600) -> str:
     values rather than the computer — the engine⇄oracle independence is the
     same."""
     from mhap_spark import oracle
-    from mhap_spark.minhash import band_hashes, pack_bitsig
+    from mhap_spark.minhash import band_hashes
     from mhap_spark.synth import generate_corpus
 
     cfg = MhapConfig(num_hashes=128)
@@ -603,36 +601,21 @@ def _mhap_signatures_oracle_sql(n: int = 600) -> str:
     rows = []
     for img, sh in zip(corpus["image_id"], shingle_sets):
         sig = oracle.weighted_minhash(sh, cfg, freq)
-        # banding/packing are deterministic per-row transforms of the
-        # (independently computed) oracle sig; reusing the numpy helpers
-        # here checks Spark executed them correctly on every row
+        # banding is a deterministic per-row transform of the
+        # (independently computed) oracle sig; reusing the numpy helper
+        # here checks the engine's slots and Spark's banding on every row
         bands = band_hashes(
             np.asarray(sig, dtype=np.int32).reshape(1, -1),
             cfg.rows_per_band,
             cfg.num_bands,
         )[0]
         bottomk = oracle.bottom_k(sh, cfg.ordered_sketch_size)
-        bitsig = pack_bitsig(np.asarray(sig, dtype=np.int32).reshape(1, -1))[0]
-        rows.append(
-            (
-                img,
-                len(sh),
-                len(sig),
-                xor64(np.asarray(sig, dtype=np.int64).tolist()),
-                xor64(bottomk.tolist()),
-                xor64(bands.tolist()),
-                xor64(bitsig.tolist()),
-            )
-        )
-    values = ",\n".join(
-        f"('{r[0]}', {r[1]}, {r[2]}, {r[3]}, {r[4]}, {r[5]}, {r[6]})" for r in rows
-    )
+        rows.append((img, len(sh), xor64(bottomk.tolist()), xor64(bands.tolist())))
+    values = ",\n".join(f"('{r[0]}', {r[1]}, {r[2]}, {r[3]})" for r in rows)
     return (
-        "SELECT image_id, n_shingles, sig_len, sig_xor, bottomk_xor, "
-        "bands_xor, bitsig_xor FROM (VALUES\n"
+        "SELECT image_id, n_shingles, bottomk_xor, bands_xor FROM (VALUES\n"
         + values
-        + "\n) AS t(image_id, n_shingles, sig_len, sig_xor, bottomk_xor, "
-        "bands_xor, bitsig_xor)"
+        + "\n) AS t(image_id, n_shingles, bottomk_xor, bands_xor)"
     )
 
 

@@ -50,26 +50,10 @@ SIGNATURE_SCHEMA = StructType(
     [
         StructField("image_id", StringType()),
         StructField("n_shingles", IntegerType()),
-        StructField("sig", ArrayType(IntegerType())),
         StructField("bottomk", ArrayType(LongType())),
         StructField("bands", ArrayType(LongType())),
-        StructField("bitsig", ArrayType(LongType())),
     ]
 )
-
-
-def pack_bitsig(sig: np.ndarray) -> np.ndarray:
-    """(n, num_hashes) int32 signatures → (n, ceil(h/64)) int64: each slot's
-    LSB packed little-endian into 64-bit words — the one-bit MinHash sketch
-    (mhap/sketch/MinHashBitSketch.java:31-56), enabling a bit_count(xor)
-    Hamming prefilter before the wide bottom-k join."""
-    n, h = sig.shape
-    pad = (-h) % 64
-    bits = (sig & 1).astype(np.uint8)
-    if pad:
-        bits = np.concatenate([bits, np.zeros((n, pad), dtype=np.uint8)], axis=1)
-    packed = np.packbits(bits, axis=1, bitorder="little")
-    return np.ascontiguousarray(packed).view(np.uint64).view(np.int64)
 
 
 def batch_weights(
@@ -305,9 +289,11 @@ def compute_signatures(
     df: DataFrame, cfg: MhapConfig, freq: FreqTable | None
 ) -> DataFrame:
     """input (image_id, caption, phash, …) → signatures DataFrame
-    (image_id, n_shingles, sig, bottomk, bands).  One mapInPandas pass;
-    the frequency table rides along as a task-local closure (broadcast by
-    Spark's task serializer once per executor)."""
+    (image_id, n_shingles, bottomk, bands).  One mapInPandas pass; the
+    frequency table rides along as a task-local closure (broadcast by
+    Spark's task serializer once per executor).  The slot matrix exists
+    only inside the kernel, where the bands are derived from it: every
+    consumer reads ``bands``, ``bottomk`` or ``n_shingles``."""
     k_bottom = cfg.ordered_sketch_size
     num_hashes = cfg.num_hashes
     rpb = cfg.rows_per_band
@@ -331,10 +317,8 @@ def compute_signatures(
                 {
                     "image_id": pdf["image_id"],
                     "n_shingles": np.diff(offs).astype(np.int32),
-                    "sig": list(sig),
                     "bottomk": bottoms,
                     "bands": list(bands),
-                    "bitsig": list(pack_bitsig(sig)),
                 }
             )
 

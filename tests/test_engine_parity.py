@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from mhap_spark import oracle
 from mhap_spark.config import MhapConfig
 from mhap_spark.freq import FreqTable, df_ratio_table
-from mhap_spark.minhash import compute_signatures
+from mhap_spark.minhash import band_hashes, compute_signatures
 from mhap_spark.candidates import candidate_pairs
 from mhap_spark.verify import jaccard_to_identity_col, verified_pairs
 from mhap_spark.cluster import connected_components
@@ -65,13 +65,25 @@ def test_freq_table_matches_oracle(spark, input_df, oracle_state):
     assert np.allclose(got, want, atol=1e-12)
 
 
+def _oracle_bands(sig: np.ndarray, cfg: MhapConfig) -> np.ndarray:
+    return band_hashes(
+        np.asarray(sig, dtype=np.int32).reshape(1, -1), cfg.rows_per_band, cfg.num_bands
+    )[0]
+
+
 def test_signatures_match_oracle_bitexact(corpus, oracle_state, engine_sigs):
+    """The signature table is exactly (image_id, n_shingles, bottomk, bands).
+    With one slot per band and all bands kept, band_hashes maps each slot
+    value injectively, so equal bands means every oracle slot is equal."""
     _, _, sigs_o, bottoms_o = oracle_state
-    _, pdf = engine_sigs
+    sig_df, pdf = engine_sigs
+    assert sig_df.columns == ["image_id", "n_shingles", "bottomk", "bands"]
+    assert CFG.rows_per_band == 1 and CFG.band_count() == CFG.num_hashes
     assert len(pdf) == N_ROWS
     for i, img in enumerate(corpus["image_id"]):
         row = pdf.loc[img]
-        assert np.array_equal(np.asarray(row["sig"], dtype=np.int32), sigs_o[i]), img
+        got_bands = np.asarray(row["bands"], dtype=np.int64)
+        assert np.array_equal(got_bands, _oracle_bands(sigs_o[i], CFG)), img
         got_bk = np.asarray(row["bottomk"], dtype=np.int64).view(np.uint64)
         assert np.array_equal(got_bk, bottoms_o[i]), img
 
@@ -269,7 +281,23 @@ def test_freq_edge_configs_no_crash(spark, input_df):
         cfg = MhapConfig(num_hashes=32, **over)
         freq = FreqTable.compute(input_df, cfg)
         out = _sigs(input_df, cfg, freq)
-        assert out.where(F.size("sig") == cfg.num_hashes).count() == out.count()
+        assert out.where(F.size("bands") == cfg.band_count()).count() == out.count()
+
+
+def test_min_shingles_load_filter(spark):
+    """Explicit min-length load filter (MhapMain min-store-length analog):
+    rows below the distinct-shingle floor are dropped at sketch time."""
+    rows = [
+        ("long01", b"", 8, 8, "png", "a reasonably long caption with plenty of text", 0),
+        ("tiny01", b"", 8, 8, "png", "tiny", 0),  # < k chars -> 0 shingles
+    ]
+    df = spark.createDataFrame(rows, INPUT_SCHEMA_DDL)
+    base = MhapConfig(num_hashes=64, use_phash_shingles=False)
+    all_rows = {r["image_id"] for r in compute_signatures(df, base, None).collect()}
+    assert all_rows == {"long01", "tiny01"}
+    filt = base.with_overrides(min_shingles=5)
+    kept = {r["image_id"] for r in compute_signatures(df, filt, None).collect()}
+    assert kept == {"long01"}
 
 
 @pytest.mark.parametrize(
@@ -346,7 +374,8 @@ def test_trailing_empty_rows_batch_boundary(spark):
 
     # end to end: zero-shingle rows (empty caption + null phash) at the tail
     # of a single-partition batch; non-degenerate rows must stay bit-exact
-    # with the per-row oracle, degenerate rows get the zeroed signature
+    # with the per-row oracle, degenerate rows get the bands of the zeroed
+    # signature
     cfg = MhapConfig(num_hashes=64)
     rows_in = [
         ("a", None, 0, 0, "raw", "a sunny beach with palm trees", 12345),
@@ -359,11 +388,12 @@ def test_trailing_empty_rows_batch_boundary(spark):
     cap_only = cfg.with_overrides(use_phash_shingles=False)
     want_a = oracle.weighted_minhash(oracle.row_shingles(rows_in[0][5], 12345, cfg), cfg, None)
     want_b = oracle.weighted_minhash(oracle.row_shingles(rows_in[1][5], 0, cap_only), cfg, None)
-    assert np.array_equal(np.array(got.loc["a", "sig"], dtype=np.int32), want_a)
-    assert np.array_equal(np.array(got.loc["b", "sig"], dtype=np.int32), want_b)
+    assert np.array_equal(np.array(got.loc["a", "bands"]), _oracle_bands(want_a, cfg))
+    assert np.array_equal(np.array(got.loc["b", "bands"]), _oracle_bands(want_b, cfg))
+    zero_bands = _oracle_bands(np.zeros(cfg.num_hashes, dtype=np.int32), cfg)
     for rid in ("empty1", "empty2"):
         assert got.loc[rid, "n_shingles"] == 0
-        assert not any(got.loc[rid, "sig"])
+        assert np.array_equal(np.array(got.loc[rid, "bands"]), zero_bands)
     # the oracle mirrors the zeroed degenerate signature (no raise)
     assert not oracle.weighted_minhash(np.empty(0, dtype=np.uint64), cfg, None).any()
 

@@ -378,6 +378,65 @@ def test_band_index_rejects_prefix_partitioned_layout(spark, tmp_path):
     assert not os.path.exists(os.path.join(base, "signatures"))
 
 
+def test_wide_signature_schema_still_read(spark, tmp_path):
+    """Signature tables written before the narrow schema carry two more
+    columns, ``sig`` (the slots) and ``bitsig`` (the packed one-bit sketch),
+    under the same config hash.  Every consumer selects the columns it reads,
+    so a wide checkpoint A resumes to the fresh run's pairs and clusters,
+    and a stream whose earlier batches are wide keeps the reference's
+    matches while later batches append narrow ones."""
+    from mhap_spark.checkpoint import CheckpointStore
+    from mhap_spark.pipeline import run_pipeline
+    from mhap_spark.streaming import BandIndex
+
+    def widen(sigs):
+        return sigs.select(
+            "image_id",
+            "n_shingles",
+            F.array_repeat(F.lit(7), CFG.num_hashes).alias("sig"),
+            "bottomk",
+            "bands",
+            F.array_repeat(F.lit(7).cast("long"), CFG.num_hashes // 64).alias("bitsig"),
+        )
+
+    rows = corpus_to_rows(generate_corpus(120, seed=13))
+    chunks = [rows[i * 40 : (i + 1) * 40] for i in range(3)]
+
+    # (a) checkpoint A in the wide schema, resumed with an empty input
+    fresh = run_pipeline(spark, spark.createDataFrame(rows, INPUT_SCHEMA_DDL), CFG)
+    store = CheckpointStore(str(tmp_path / "ckpt"))
+    store.write(widen(fresh["signatures"]), "signatures", CFG.config_hash())
+    assert "bitsig" in store.read(spark, "signatures").columns
+    resumed = run_pipeline(
+        spark, spark.createDataFrame([], INPUT_SCHEMA_DDL), CFG, store=store
+    )
+    for stage in ("pairs", "clusters"):
+        want = {tuple(r) for r in fresh[stage].collect()}
+        assert {tuple(r) for r in resumed[stage].collect()} == want and want
+    fresh["signatures"].unpersist()
+    fresh["pairs"].unpersist()
+
+    # (b) a stream dir whose batch 0 a wide-schema sink wrote (signatures
+    # and band index); batch 2 reads a signature table mixing both schemas
+    base = str(tmp_path / "stream")
+    sigs0 = compute_signatures(
+        spark.createDataFrame(chunks[0], INPUT_SCHEMA_DDL), CFG, None
+    ).persist()
+    widen(sigs0).write.parquet(os.path.join(base, "signatures", "batch_id=0"))
+    BandIndex(os.path.join(base, "band_index")).append(sigs0, 0)
+    sigs0.unpersist()
+    sink = IncrementalDedup(base, CFG, keep_manifest=True)
+    for k in (1, 2):
+        sink.process_batch(spark.createDataFrame(chunks[k], INPUT_SCHEMA_DDL), k)
+    want = _reference_matches(spark, chunks, CFG)
+    for k in (1, 2):
+        got = spark.read.parquet(os.path.join(base, "matches", f"batch_id={k}"))
+        assert {(r["src"], r["dst"]) for r in got.collect()} == want[k]
+    # not vacuous: later batches verify matches against the wide batch
+    ids0 = {r[0] for r in chunks[0]}
+    assert any(dst in ids0 for k in (1, 2) for _, dst in want[k])
+
+
 def test_band_index_capped_bucket_adversary(spark, tmp_path):
     """A planted cluster larger than max_bucket_size makes index-side buckets
     that the probe must drop exactly as probe_candidates does: every index

@@ -47,8 +47,10 @@ def planted_star_edges(n_edges: int, seed: int = 7):
 
 
 def main() -> None:
+    from mhap_spark.session import default_cores
+
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cores", type=int, default=32)
+    ap.add_argument("--cores", type=int, default=default_cores())
     ap.add_argument("--edges", type=int, default=900_000)
     ap.add_argument("--no-aqe", action="store_true")
     ap.add_argument("--driver-finish", type=int, default=0,

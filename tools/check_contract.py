@@ -57,7 +57,7 @@ def main() -> int:
     from mhap_spark.session import build_session
     import __spark_entry__ as entrymod
 
-    spark = build_session("contract_check", master="local[16]")
+    spark = build_session("contract_check")
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"

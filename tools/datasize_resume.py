@@ -20,7 +20,8 @@ pins the protocol at 2k rows; this tool exercises it on a multi-minute run:
 Emits one JSON line; the orchestrator itself never starts a JVM except
 for the final read-back verification session.
 
-Usage: python tools/datasize_resume.py [--rows 3000000] [--cores 32]
+Usage: python tools/datasize_resume.py [--rows 3000000] [--cores N]
+(``--cores`` defaults to the host's core count, ``session.default_cores()``)
 """
 
 from __future__ import annotations
@@ -91,9 +92,11 @@ def _manifest(ckpt: str) -> dict:
 
 
 def main() -> None:
+    from mhap_spark.session import default_cores
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=3_000_000)
-    ap.add_argument("--cores", type=int, default=32)
+    ap.add_argument("--cores", type=int, default=default_cores())
     ap.add_argument("--keep", action="store_true", help="keep the checkpoint dir")
     args = ap.parse_args()
 
@@ -176,7 +179,7 @@ def main() -> None:
 
     from mhap_spark.checkpoint import CheckpointStore
 
-    spark = build_session("resume_verify", master="local[8]")
+    spark = build_session("resume_verify")
     # resolve through the store — stages live in manifest-pointed VERSION
     # subdirs since the round-5 versioned layout, not flat parquet dirs
     clusters = CheckpointStore(ckpt).read(spark, "clusters")
