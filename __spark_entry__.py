@@ -550,12 +550,12 @@ def _q_mhap_signatures(spark, sf_dir):
     not just row-counted.  At this config (one slot per band, all bands)
     each band hash is an injective map of its slot value, so a change to
     ANY slot of ANY row flips its ``bands_xor`` digest."""
-    from mhap_spark.freq import FreqTable, df_ratio_table
+    from mhap_spark.freq import FreqTable
     from mhap_spark.minhash import compute_signatures
 
     cfg = MhapConfig(num_hashes=128)
     df = _synth_df(spark)
-    freq = FreqTable.from_df(df_ratio_table(df, cfg), cfg)
+    freq = FreqTable.compute(df, cfg)
     sigs = compute_signatures(df, cfg, freq)
     xf = lambda c: F.aggregate(c, F.lit(0).cast("long"), lambda a, x: a.bitwiseXOR(x))
     return sigs.select(

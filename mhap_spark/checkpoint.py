@@ -96,9 +96,7 @@ class CheckpointStore:
         return os.path.exists(self._stage_data_path(entry, stage))
 
     # -- IO -----------------------------------------------------------------
-    def write(
-        self, df: DataFrame, stage: str, config_hash: str, partition_lineage: bool = True
-    ) -> DataFrame:
+    def write(self, df: DataFrame, stage: str, config_hash: str) -> DataFrame:
         """Materialize a stage.  Records row count and per-partition lineage
         (partition id → rows) in the manifest; returns the re-read DataFrame
         so downstream plans read the checkpoint, not the producing lineage.
@@ -149,18 +147,15 @@ class CheckpointStore:
                 path = os.path.join(self.base_dir, stage, version)
                 df.write.mode("overwrite").parquet(path)
                 out = spark.read.parquet(path)
-            if partition_lineage:
-                lineage_df = out.groupBy(F.spark_partition_id().alias("part_id")).agg(
-                    F.count(F.lit(1)).alias("rows")
-                )
-                lineage = {
-                    str(r["part_id"]): int(r["rows"]) for r in lineage_df.collect()
-                }
-            else:
-                lineage = None
+            lineage_df = out.groupBy(F.spark_partition_id().alias("part_id")).agg(
+                F.count(F.lit(1)).alias("rows")
+            )
+            lineage = {
+                str(r["part_id"]): int(r["rows"]) for r in lineage_df.collect()
+            }
             entry = {
                 "config_hash": config_hash,
-                "rows": sum(lineage.values()) if lineage else out.count(),
+                "rows": sum(lineage.values()),
                 "partitions": lineage,
                 "run_id": self.run_id,
                 "written_at": time.time(),

@@ -13,6 +13,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+# large/small-star rounds per convergence check in connected_components
+CHECK_EVERY = 2
+# edges per shuffle partition of the connected_components loop
+TARGET_ROWS_PER_TASK = 250_000
+
 
 def _large_star(edges: DataFrame, width: int, hints: bool = True) -> DataFrame:
     """For each node u: m = min(N(u) ∪ {u}); emit (v, m) for v in N(u), v > u.
@@ -188,7 +193,6 @@ def dedup_keep_from_pairs(
 
 def connected_components(
     pairs: DataFrame, vertices: DataFrame, max_iters: int = 50,
-    check_every: int = 2, target_rows_per_task: int = 250_000,
     driver_finish_edges: int = 0, no_broadcast_hints: bool = True,
 ) -> DataFrame:
     """pairs(src,dst) + vertices(image_id) → (image_id, cluster_id string).
@@ -196,12 +200,12 @@ def connected_components(
     cluster_id = minimum member id of the component (FIXTURES.md F4);
     singletons map to themselves.
 
-    ``check_every`` large/small-star rounds run per convergence check: each
-    check is a driver action (the ONE job that materializes the lazy
+    ``CHECK_EVERY`` (2) large/small-star rounds run per convergence check:
+    each check is a driver action (the ONE job that materializes the lazy
     localCheckpoint AND tests the fixpoint), so batching rounds halves the
     fixed driver latency of the CC loop — the dominant Amdahl term at small
     inputs (BENCH/BASELINE.md round-1 decomposition).  Cost: at most
-    check_every−1 extra no-op rounds after the true fixpoint.
+    CHECK_EVERY−1 extra no-op rounds after the true fixpoint.
 
     The loop's shuffle width ADAPTS to the edge set: the verified-pair edge
     set is orders of magnitude smaller than the corpus and shrinks every
@@ -213,8 +217,8 @@ def connected_components(
     deduped edge set at full session width (the one genuinely corpus-scale
     shuffle here) and yields its count, so EVERY superstep — including the
     first batch, where star-shaped dup components do most of their
-    converging — runs at ceil(n / target_rows_per_task) partitions, capped
-    at the session value.  Deliberately NO floor at the core count: these
+    converging — runs at ceil(n / TARGET_ROWS_PER_TASK) partitions
+    (250,000 edges each), capped at the session value.  Deliberately NO floor at the core count: these
     rounds are task-launch-latency-bound, so a 912k-edge set is better
     served by 4 partitions than by one per core (measured — a
     defaultParallelism floor left cc anti-scaling 14.4 s @ 8c → 20.0 s
@@ -245,12 +249,11 @@ def connected_components(
     data.  Default 0 = off, so microbenches and parity tests measure the
     pure loop unless asked.
     """
-    check_every = max(1, check_every)
     spark = pairs.sparkSession
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     def width(n_edges: int) -> int:
-        return min(session_parts, max(1, -(-n_edges // max(target_rows_per_task, 1))))
+        return min(session_parts, max(1, -(-n_edges // TARGET_ROWS_PER_TASK)))
 
     edges = pairs.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
     # lazy localCheckpoint + pre-loop checksum: one job that materializes the
@@ -264,8 +267,8 @@ def connected_components(
     elif prev[0] > 0:
         converged = False
         w = width(prev[0])
-        for _ in range(0, max_iters, check_every):
-            for _r in range(check_every):
+        for _ in range(0, max_iters, CHECK_EVERY):
+            for _r in range(CHECK_EVERY):
                 edges = _small_star(
                     _large_star(edges, w, no_broadcast_hints), w, no_broadcast_hints
                 )

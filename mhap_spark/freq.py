@@ -3,6 +3,11 @@ reference's external k-mer frequency file (mhap/sketch/FrequencyCounts.java:63-2
 the reference outsources this count to Jellyfish, we compute it with one
 groupBy, SURVEY.md §2.4).
 
+``FreqTable.compute`` is the one way to build it, for the pipeline,
+perfbench, the contract query and the parity tests alike: it persists
+``shingle_counts``, derives the cutoff-bounded ratio table from them
+with ``df_ratio_table``, collects it and releases the cache.
+
 The retained table (df_ratio ≥ filter_cutoff) is small by construction —
 total ratio mass is bounded by avg-shingles-per-doc, so at cutoff c there are
 at most (avg_shingles/c) entries, and in practice only genuinely hot shingles
@@ -74,34 +79,6 @@ def distinct_shingle_df(df: DataFrame, cfg: MhapConfig) -> DataFrame:
     return shingle_input(df).mapInPandas(gen, schema)
 
 
-def sampled_doc_count(df: DataFrame, cfg: MhapConfig) -> int:
-    """Number of documents in the deterministic df-estimation sample
-    (standalone helper — the pipeline path gets this from the marker rows of
-    distinct_shingle_df in the same job).
-
-    Counts sampled ids only — no shingling: the full kernel here would run
-    the whole Arrow shingle scan just to throw the shingles away (round-2
-    ADVICE fix)."""
-    if cfg.freq_sample_mod <= 1:
-        return df.count()
-
-    from pyspark.sql.types import LongType as _Long, StructField as _SF, StructType as _ST
-
-    def cnt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"n": [len(sample_rows(pdf, cfg.freq_sample_mod))]}
-            )
-
-    out = (
-        df.select("image_id")
-        .mapInPandas(cnt, _ST([_SF("n", _Long())]))
-        .agg(F.sum("n"))
-        .collect()
-    )
-    return int(out[0][0] or 0)
-
-
 def shingle_counts(df: DataFrame, cfg: MhapConfig) -> DataFrame:
     """(shingle_hash, is_marker, df_count, doc_sum) — the one aggregation the
     df table needs.  Map-side combinable (partial agg), so hot shingles don't
@@ -113,30 +90,17 @@ def shingle_counts(df: DataFrame, cfg: MhapConfig) -> DataFrame:
     )
 
 
-def df_ratio_table(
-    df: DataFrame, cfg: MhapConfig, counts: DataFrame | None = None
-) -> DataFrame:
-    """(shingle_hash long, df_ratio double) with df_ratio ≥ filter_cutoff.
+def df_ratio_table(counts: DataFrame, cfg: MhapConfig) -> DataFrame:
+    """(shingle_hash long, df_ratio double) with df_ratio ≥ filter_cutoff,
+    from the persisted ``shingle_counts`` of the corpus (FreqTable.compute
+    builds and persists them).
 
     ONE pass over the input: shingle rows and per-batch document-count
     markers share the mapInPandas scan and the (shingle_hash, is_marker)
-    shuffle; the marker aggregate is broadcast back as the ratio denominator
-    (no second scan of the corpus for the count — round-1 VERDICT fix).
-    A caller-supplied ``counts`` must already be persisted (FreqTable.compute,
-    the only such caller, persists it): the eager ``n_docs`` collect below
-    and the returned ratio plan each read it, so an unpersisted ``counts``
-    would run the scan and kernel twice.  When
-    self-built (counts=None) the counts are persisted here for the same
-    reason — otherwise the marker branch and the ratio branch would each
-    re-run the full scan + Arrow kernel (round-2 ADVICE fix); the retained
-    cache is the aggregated shingle vocabulary (bounded, spillable), and
-    the pipeline paths always pass ``counts`` explicitly.  With
+    shuffle, so the denominator needs no second scan of the corpus.  With
     freq_sample_mod > 1 the ratio is estimated on the deterministic
     hash-sample (denominator = sampled doc count), mirroring how a 10^12-row
     corpus-stats pass is actually run."""
-    self_built = counts is None
-    if self_built:
-        counts = shingle_counts(df, cfg).persist()
     # ONE small driver collect instead of a broadcast-join of the one-row
     # marker aggregate (round-6 optimization): the crossJoin(broadcast(n_docs))
     # form cost a separate broadcast-build job plus AQE stage-jobs every run
@@ -149,7 +113,7 @@ def df_ratio_table(
         F.sum("doc_sum").alias("n_docs")
     ).collect()[0]
     n_docs = int(n_docs_row["n_docs"] or 0)
-    ratio = (
+    return (
         counts.where(~F.col("is_marker"))
         .select(
             "shingle_hash",
@@ -157,15 +121,6 @@ def df_ratio_table(
         )
         .filter(F.col("df_ratio") >= F.lit(cfg.filter_cutoff))
     )
-    if self_built:
-        # materialize the (cutoff-bounded) ratio table off the cached counts,
-        # then release the cache — a standalone call no longer leaks a cached
-        # vocabulary table for the session lifetime (round-3 ADVICE fix);
-        # localCheckpoint also cuts the lineage so the returned plan never
-        # re-runs the corpus scan
-        ratio = ratio.localCheckpoint(eager=True)
-        counts.unpersist()
-    return ratio
 
 
 def histogram_stats(
@@ -259,15 +214,15 @@ class FreqTable:
 
     @classmethod
     def compute(cls, input_df: DataFrame, cfg: MhapConfig) -> "FreqTable":
-        """One-job corpus-stats pass: persist the (small, aggregated) shingle
-        counts so the marker branch and the ratio branch share one execution
-        of the scan + Arrow kernel, collect the cutoff-bounded table, then
-        release the cache.  At 10^12 rows the counts table is the shingle
-        vocabulary — still far smaller than the corpus, and spillable
-        (MEMORY_AND_DISK default)."""
+        """The engine's one df-table builder: persist the (small, aggregated)
+        shingle counts so the marker branch and the ratio branch of
+        df_ratio_table share one execution of the scan + Arrow kernel,
+        collect the cutoff-bounded table, then release the cache.  At 10^12
+        rows the counts table is the shingle vocabulary — still far smaller
+        than the corpus, and spillable (MEMORY_AND_DISK default)."""
         counts = shingle_counts(input_df, cfg).persist()
         try:
-            return cls.from_df(df_ratio_table(input_df, cfg, counts=counts), cfg)
+            return cls.from_df(df_ratio_table(counts, cfg), cfg)
         finally:
             counts.unpersist()
 

@@ -21,28 +21,45 @@ import os
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
 from mhap_spark.candidates import candidate_pairs
 from mhap_spark.config import MhapConfig
 from mhap_spark.freq import FreqTable
-from mhap_spark.minhash import compute_signatures
+from mhap_spark.minhash import SIGNATURE_SCHEMA, compute_signatures
 from mhap_spark.verify import verified_pairs
 
 
-def _has_committed_data(path: str) -> bool:
-    """True iff ``path`` holds at least one COMMITTED parquet part file.
+_BATCH_ID = StructField("batch_id", IntegerType())
+_SIGNATURE_HISTORY = StructType(SIGNATURE_SCHEMA.fields + [_BATCH_ID])
+_INDEX_HISTORY = StructType(
+    [
+        StructField("image_id", StringType()),
+        StructField("band_hash", LongType()),
+        _BATCH_ID,
+    ]
+)
 
-    A crash mid-write of the very first batch leaves the directory holding
-    only an uncommitted ``_temporary`` subtree; ``os.path.exists`` alone
-    then sends every foreachBatch replay into ``spark.read.parquet`` →
-    UNABLE_TO_INFER_SCHEMA, an unrecoverable restart loop.  Walking for a
-    real part file treats that state as "no data yet", letting the replay
-    rewrite the batch cleanly."""
-    for root, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if d != "_temporary"]
-        if any(f.startswith("part-") for f in files):
-            return True
-    return False
+
+def _read_history(
+    spark: SparkSession, path: str, schema: StructType, batch_id: int
+) -> DataFrame:
+    """Rows of the ``batch_id=N`` table at ``path`` from batches strictly
+    earlier than ``batch_id`` — the one way the sink reads its history.
+
+    The schema is given, not inferred, so a history with no committed part
+    file (a new stream, or a crash mid-write of the first batch that left
+    only a ``_temporary`` subtree) reads as an empty frame instead of
+    raising UNABLE_TO_INFER_SCHEMA, without walking the directory tree.
+    Only the schema's columns are read, so signature batches written in the
+    earlier wide schema still read.  The ``batch_id`` filter prunes
+    partitions."""
+    os.makedirs(path, exist_ok=True)
+    return (
+        spark.read.schema(schema)
+        .parquet(path)
+        .where(F.col("batch_id") < F.lit(batch_id))
+    )
 
 
 class BandIndex:
@@ -89,21 +106,14 @@ class BandIndex:
             "overwrite"
         ).parquet(os.path.join(self.path, f"batch_id={batch_id}"))
 
-    def probe(
-        self, probe_sigs: DataFrame, cfg: MhapConfig, batch_id: int
-    ) -> DataFrame | None:
+    def probe(self, probe_sigs: DataFrame, cfg: MhapConfig, batch_id: int) -> DataFrame:
         """(probe_id, index_id, votes ≥ gate) against batches strictly
         earlier than ``batch_id`` — same semantics as
-        candidates.probe_candidates on the accumulated signatures."""
-        spark = probe_sigs.sparkSession
-        if not _has_committed_data(self.path):
-            return None
-        idx = (
-            spark.read.option("basePath", self.path)
-            .parquet(self.path)
-            .where(F.col("batch_id") < F.lit(batch_id))
-            .select("band_hash", F.col("image_id").alias("index_id"))
-        )
+        candidates.probe_candidates on the accumulated signatures.  An
+        empty index gives an empty frame."""
+        idx = _read_history(
+            probe_sigs.sparkSession, self.path, _INDEX_HISTORY, batch_id
+        ).select("band_hash", F.col("image_id").alias("index_id"))
         probe = probe_sigs.select(
             F.col("image_id").alias("probe_id"),
             F.explode("bands").alias("band_hash"),
@@ -254,7 +264,7 @@ class IncrementalDedup:
         try:
             n_rows = batch_df.count()
             batch_ids = batch_df.select("image_id")
-            if self.keep_manifest and _has_committed_data(self.sig_path):
+            if self.keep_manifest:
                 # the keep manifest's documented precondition — image_id
                 # unique across the stream's lifetime — must fail LOUDLY: an
                 # id recurring in a later batch would be classified as an
@@ -262,11 +272,9 @@ class IncrementalDedup:
                 # mis-oriented, silently violating first-arrival-wins.
                 # Checked before any write, so a rejected batch leaves
                 # nothing on disk.
-                earlier_ids = (
-                    spark.read.parquet(self.sig_path)
-                    .where(F.col("batch_id") < F.lit(batch_id))
-                    .select("image_id")
-                )
+                earlier_ids = _read_history(
+                    spark, self.sig_path, _SIGNATURE_HISTORY, batch_id
+                ).select("image_id")
                 n_recur = batch_ids.join(earlier_ids, "image_id", "left_semi").count()
                 if n_recur:
                     raise ValueError(
@@ -295,22 +303,18 @@ class IncrementalDedup:
             # so the wide bottom-k rows of unmatched index entries never
             # move and no id set is held on the driver
             found = self.bindex.probe(sigs, self.cfg, batch_id)
-            if found is not None:
-                cands = cands.unionByName(
-                    found.select(
-                        F.col("probe_id").alias("src"),
-                        F.col("index_id").alias("dst"),
-                        "votes",
-                    )
+            cands = cands.unionByName(
+                found.select(
+                    F.col("probe_id").alias("src"),
+                    F.col("index_id").alias("dst"),
+                    "votes",
                 )
-                matched_ids = found.select(
-                    F.col("index_id").alias("image_id")
-                ).distinct()
-                indexed = spark.read.parquet(self.sig_path).where(
-                    F.col("batch_id") < F.lit(batch_id)
-                )
-                hit = indexed.join(matched_ids, "image_id", "left_semi")
-                both = both.unionByName(hit.select("image_id", "bottomk"))
+            )
+            matched_ids = found.select(F.col("index_id").alias("image_id")).distinct()
+            hit = _read_history(
+                spark, self.sig_path, _SIGNATURE_HISTORY, batch_id
+            ).join(matched_ids, "image_id", "left_semi")
+            both = both.unionByName(hit.select("image_id", "bottomk"))
 
             matches = verified_pairs(cands, both, self.cfg)
             matches.write.mode("overwrite").parquet(
@@ -357,17 +361,16 @@ class IncrementalDedup:
             if owned:
                 batch_df.unpersist()
 
-    def start(self, stream_df: DataFrame, trigger_available_now: bool = True):
-        writer = (
+    def start(self, stream_df: DataFrame):
+        return (
             stream_df.writeStream.foreachBatch(self.process_batch)
             .option(
                 "checkpointLocation", os.path.join(self.base_dir, "_stream_checkpoint")
             )
             .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
         )
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
 
 def read_image_stream(

@@ -198,31 +198,3 @@ INPUT_SCHEMA_DDL = (
     "image_id string, bytes binary, w int, h int, fmt string, "
     "caption string, phash long"
 )
-
-
-def write_corpus_parquet(corpus: dict, out_dir: str) -> None:
-    """Write images + truth tables as parquet via pyarrow (no Spark needed)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    images = pa.table(
-        {
-            "image_id": pa.array(corpus["image_id"], pa.string()),
-            "bytes": pa.array(corpus["bytes"], pa.binary()),
-            "w": pa.array(corpus["w"], pa.int32()),
-            "h": pa.array(corpus["h"], pa.int32()),
-            "fmt": pa.array(corpus["fmt"], pa.string()),
-            "caption": pa.array(corpus["caption"], pa.string()),
-            "phash": pa.array(corpus["phash"], pa.int64()),
-        }
-    )
-    pq.write_table(images, os.path.join(out_dir, "images.parquet"))
-    truth = pa.table(
-        {
-            "image_id": pa.array(corpus["image_id"], pa.string()),
-            "true_cluster": pa.array(corpus["true_cluster"], pa.int64()),
-        }
-    )
-    pq.write_table(truth, os.path.join(out_dir, "truth.parquet"))

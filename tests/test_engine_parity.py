@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from mhap_spark import oracle
 from mhap_spark.config import MhapConfig
-from mhap_spark.freq import FreqTable, df_ratio_table
+from mhap_spark.freq import FreqTable
 from mhap_spark.minhash import band_hashes, compute_signatures
 from mhap_spark.candidates import candidate_pairs
 from mhap_spark.verify import jaccard_to_identity_col, verified_pairs
@@ -45,7 +45,7 @@ def oracle_state(corpus):
 
 @pytest.fixture(scope="module")
 def engine_sigs(spark, input_df):
-    freq = FreqTable.from_df(df_ratio_table(input_df, CFG), CFG)
+    freq = FreqTable.compute(input_df, CFG)
     df = compute_signatures(input_df, CFG, freq)
     pdf = df.toPandas().set_index("image_id").sort_index()
     return df, pdf
@@ -53,7 +53,7 @@ def engine_sigs(spark, input_df):
 
 def test_freq_table_matches_oracle(spark, input_df, oracle_state):
     shingle_sets, freq_o, _, _ = oracle_state
-    t = FreqTable.from_df(df_ratio_table(input_df, CFG), CFG)
+    t = FreqTable.compute(input_df, CFG)
     engine = dict(zip((int(k) for k in t.keys), t.ratios))
     assert engine.keys() == freq_o.map.keys()
     for k, v in freq_o.map.items():
@@ -317,7 +317,7 @@ def test_lsh_banding_r_gt_1_matches_oracle(spark, corpus, input_df, oracle_state
     so the module oracle state is reused."""
     cfg = CFG.with_overrides(**over)
     _, _, sigs_o, bottoms_o = oracle_state
-    freq = FreqTable.from_df(df_ratio_table(input_df, cfg), cfg)
+    freq = FreqTable.compute(input_df, cfg)
     sig_df = compute_signatures(input_df, cfg, freq)
 
     got = {

@@ -499,28 +499,54 @@ def test_incremental_dedup_rejects_min_store(tmp_path):
         IncrementalDedup(str(tmp_path), CFG.with_overrides(min_store_shingles=10))
 
 
-def test_streaming_recovers_from_uncommitted_first_write(spark, tmp_path):
-    """Signature and band-index dirs holding only a _temporary subtree (crash
-    mid-write of the first batch) must read as 'no index yet', not throw
-    UNABLE_TO_INFER_SCHEMA on every replay, and the replay commits."""
-    from mhap_spark.streaming import _has_committed_data
+def _has_part_files(path):
+    """True iff ``path`` holds a committed parquet part file outside any
+    ``_temporary`` subtree."""
+    for _root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if d != "_temporary"]
+        if any(f.startswith("part-") for f in files):
+            return True
+    return False
 
-    base = str(tmp_path / "dedup")
+
+def _plant_uncommitted(base, batch_id):
+    """Leave signatures/ and band_index/ as a crash mid-write of
+    ``batch_id`` does: only a ``_temporary`` subtree under batch_id=N."""
     for sub in ("signatures", "band_index"):
-        tmp = os.path.join(base, sub, "batch_id=0", "_temporary", "0")
+        tmp = os.path.join(base, sub, f"batch_id={batch_id}", "_temporary", "0")
         os.makedirs(tmp)
         with open(os.path.join(tmp, "task_000"), "w") as f:
             f.write("junk")
-        assert not _has_committed_data(os.path.join(base, sub))
-    sink = IncrementalDedup(base, CFG)
-    b = spark.createDataFrame(
-        corpus_to_rows(generate_corpus(40, seed=9)), INPUT_SCHEMA_DDL
-    )
-    # the replay sees a fresh index
-    assert sink.bindex.probe(compute_signatures(b, CFG, None), CFG, 0) is None
-    sink.process_batch(b, 0)
+
+
+def test_streaming_recovers_from_uncommitted_first_write(spark, tmp_path):
+    """Signature and band-index dirs holding only a _temporary subtree (crash
+    mid-write of the first batch) must read as an empty history, not throw
+    UNABLE_TO_INFER_SCHEMA on every replay, and the replay commits.  The
+    same crash in batch 1, beside the committed batch 0, must leave the
+    replay reading batch 0 as its history and writing the reference's
+    matches."""
+    rows = corpus_to_rows(generate_corpus(120, seed=13))
+    chunks = [rows[:60], rows[60:]]
+    base = str(tmp_path / "dedup")
+    _plant_uncommitted(base, 0)
+    for sub in ("signatures", "band_index"):
+        assert not _has_part_files(os.path.join(base, sub))
+    sink = IncrementalDedup(base, CFG, keep_manifest=True)
+    b0 = spark.createDataFrame(chunks[0], INPUT_SCHEMA_DDL)
+    # the replay sees an empty index
+    assert sink.bindex.probe(compute_signatures(b0, CFG, None), CFG, 0).count() == 0
+    sink.process_batch(b0, 0)
     for sub in ("signatures", "band_index", "matches"):
-        assert _has_committed_data(os.path.join(base, sub)), sub
+        assert _has_part_files(os.path.join(base, sub)), sub
+
+    _plant_uncommitted(base, 1)
+    sink.process_batch(spark.createDataFrame(chunks[1], INPUT_SCHEMA_DDL), 1)
+    want = _reference_matches(spark, chunks, CFG)
+    assert _sink_matches(spark, base, len(chunks)) == want
+    # not vacuous: batch 1 matches rows of batch 0
+    ids0 = {r[0] for r in chunks[0]}
+    assert any(dst in ids0 for _, dst in want[1])
 
 
 def test_incremental_dedup_rejects_band_index_off(tmp_path):

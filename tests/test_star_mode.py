@@ -6,7 +6,7 @@ import pytest
 from mhap_spark import oracle
 from mhap_spark.candidates import candidate_pairs
 from mhap_spark.config import MhapConfig
-from mhap_spark.freq import FreqTable, df_ratio_table
+from mhap_spark.freq import FreqTable
 from mhap_spark.minhash import compute_signatures
 from mhap_spark.pipeline import run_pipeline
 from mhap_spark.synth import INPUT_SCHEMA_DDL, corpus_to_rows, generate_corpus, truth_pairs
@@ -29,7 +29,7 @@ def input_df(spark, corpus):
 
 
 def test_star_candidates_match_oracle(spark, corpus, input_df):
-    freq = FreqTable.from_df(df_ratio_table(input_df, CFG_STAR), CFG_STAR)
+    freq = FreqTable.compute(input_df, CFG_STAR)
     sig_df = compute_signatures(input_df, CFG_STAR, freq)
     got = {
         (r["src"], r["dst"]): r["votes"]
@@ -55,7 +55,7 @@ def test_scale_preset_matches_oracle_and_truth(spark, corpus, input_df):
     """Band subsampling + hash-sampled df estimation: engine candidates still
     equal the oracle's at the identical config, and recall holds."""
     cfg = CFG_SCALE
-    freq = FreqTable.from_df(df_ratio_table(input_df, cfg), cfg)
+    freq = FreqTable.compute(input_df, cfg)
     sig_df = compute_signatures(input_df, cfg, freq)
     got = {
         (r["src"], r["dst"]): r["votes"]
@@ -130,7 +130,7 @@ def test_mega_cluster_salted_candidates_match_oracle(spark, mega_corpus, mega_df
     """Salted sub-bucket emission (star mode's oversize path) is bit-exact
     against the numpy oracle — votes included — on a corpus where the hot
     cluster exceeds the bucket cap in every band."""
-    freq = FreqTable.from_df(df_ratio_table(mega_df, CFG_MEGA), CFG_MEGA)
+    freq = FreqTable.compute(mega_df, CFG_MEGA)
     sig_df = compute_signatures(mega_df, CFG_MEGA, freq)
     got = {
         (r["src"], r["dst"]): r["votes"]
@@ -185,7 +185,7 @@ def test_mega_cluster_funnel_accounts_for_salted_buckets(spark, mega_corpus, meg
 
     from mhap_spark.candidates import bucket_sizes, exploded_bands
 
-    freq = FreqTable.from_df(df_ratio_table(mega_df, CFG_MEGA), CFG_MEGA)
+    freq = FreqTable.compute(mega_df, CFG_MEGA)
     sig_df = compute_signatures(mega_df, CFG_MEGA, freq).persist()
     obs = Observation()
     pre_gate_edges = candidate_pairs(sig_df, CFG_MEGA, funnel_obs=obs)

@@ -168,7 +168,7 @@ def main() -> None:
     result["recomputed_stages"] = sorted(
         s for s in m if m[s]["run_id"] != run1_id
     )
-    result["pairs_partition_lineage_entries"] = len(m["pairs"]["partitions"] or {})
+    result["pairs_partition_lineage_entries"] = len(m["pairs"]["partitions"])
 
     # -- read-back verification: recall vs planted truth ----------------------
     from mhap_spark.session import build_session
