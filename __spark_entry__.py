@@ -605,9 +605,9 @@ def _mhap_signatures_oracle_sql(n: int = 600) -> str:
         # (independently computed) oracle sig; reusing the numpy helper
         # here checks the engine's slots and Spark's banding on every row
         bands = band_hashes(
-            np.asarray(sig, dtype=np.int32).reshape(1, -1),
+            np.asarray(sig[: cfg.band_count() * cfg.rows_per_band], dtype=np.int32)
+            .reshape(1, -1),
             cfg.rows_per_band,
-            cfg.num_bands,
         )[0]
         bottomk = oracle.bottom_k(sh, cfg.ordered_sketch_size)
         rows.append((img, len(sh), xor64(bottomk.tolist()), xor64(bands.tolist())))

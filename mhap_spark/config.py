@@ -14,14 +14,12 @@ import json
 from dataclasses import asdict, dataclass, field, replace
 
 
-def band_count_for(num_hashes: int, rows_per_band: int, num_bands: int) -> int:
-    """Effective LSH band count: ``num_hashes // rows_per_band`` full bands,
-    optionally subsampled to the first ``num_bands`` (> 0).  Single source of
-    truth — shared by ``MhapConfig.band_count`` and the minhash kernel's
-    ``band_hashes`` so the engine and the oracle can never disagree on which
-    bands exist."""
-    full = num_hashes // rows_per_band
-    return min(num_bands, full) if num_bands > 0 else full
+def band_count_for(num_hashes: int, rows_per_band: int) -> int:
+    """LSH band count: ``num_hashes // rows_per_band`` full bands.  Single
+    source of truth — shared by ``MhapConfig.band_count`` and the minhash
+    kernel's ``band_hashes`` so the engine and the oracle can never disagree
+    on which bands exist."""
+    return num_hashes // rows_per_band
 
 
 @dataclass(frozen=True)
@@ -33,6 +31,8 @@ class MhapConfig:
     use_phash_shingles: bool = True
 
     # --- stage 1: weighted MinHash (mhap/main/MhapMain.java:77 num-hashes=512) ---
+    # MinHash slots; the kernel steps the band_count() * rows_per_band of
+    # them that the bands fold (all of them when rows_per_band divides it)
     num_hashes: int = 512
     # tf-idf repeat down-weighting (mhap/main/MhapMain.java:69-73:
     #   repeat-weight=0.9, repeat-idf-scale=3.0, filter-cutoff=1e-5)
@@ -60,12 +60,6 @@ class MhapConfig:
     candidate_mode: str = "pairs"
     star_min_votes: int = 2          # vote gate for star edges (bands where the
                                      # edge's hub is that bucket's min)
-    num_bands: int = 0               # bands used for bucketing; 0 = all
-                                     # (num_hashes/rows_per_band).  Subsampling
-                                     # bands cuts the candidate shuffle linearly;
-                                     # with slot-agreement p, a true pair still
-                                     # collides in ~p·num_bands buckets, so the
-                                     # vote gate keeps recall
     freq_sample_mod: int = 1         # df-ratio estimation sample: keep rows with
                                      # id_hash63 % mod == 0 (1 = all rows); at
                                      # 10^12 rows the corpus-stats pass must be
@@ -126,8 +120,18 @@ class MhapConfig:
     # speed.
     no_broadcast_hints: bool = True
 
+    def __post_init__(self) -> None:
+        # a config with no bands would sketch, emit empty ``bands`` and
+        # silently yield zero candidates
+        if self.rows_per_band < 1 or self.band_count() < 1:
+            raise ValueError(
+                f"config has no LSH bands: num_hashes={self.num_hashes}, "
+                f"rows_per_band={self.rows_per_band} (need rows_per_band >= 1 "
+                "and num_hashes >= rows_per_band)"
+            )
+
     def band_count(self) -> int:
-        return band_count_for(self.num_hashes, self.rows_per_band, self.num_bands)
+        return band_count_for(self.num_hashes, self.rows_per_band)
 
     def min_band_matches(self) -> int:
         """Vote gate in band units: with r slots per band, m shared slots
@@ -150,6 +154,9 @@ class MhapConfig:
         d = asdict(self)
         for k in self._EXECUTION_ONLY_KNOBS:
             d.pop(k, None)
+        # the deleted band-subsampling knob, hashed at its old "all bands"
+        # value so a config that never set it keeps its checkpoints
+        d["num_bands"] = 0
         payload = json.dumps(d, sort_keys=True).encode()
         return hashlib.sha256(payload).hexdigest()[:16]
 
@@ -173,10 +180,10 @@ PRESET_DEFAULT = MhapConfig()
 PRESET_FAST = MhapConfig(num_hashes=256, threshold=0.80, ordered_sketch_size=1000)
 PRESET_SENSITIVE = MhapConfig(num_hashes=768, num_min_matches=2, threshold=0.73)
 # Web-scale operating point: star candidate emission (linear in bucket size),
-# 128 of 512 slots used for bucketing (4x smaller candidate shuffle), df table
-# estimated on a 25% hash-sample.
+# 128 slots = 128 bands (4x smaller candidate shuffle and 4x fewer sketch
+# steps than the default 512), df table estimated on a 25% hash-sample.
 PRESET_SCALE = MhapConfig(
-    candidate_mode="star", star_min_votes=2, num_bands=128, freq_sample_mod=4
+    num_hashes=128, candidate_mode="star", star_min_votes=2, freq_sample_mod=4
 )
 
 PRESETS = {1: PRESET_DEFAULT, 2: PRESET_FAST, 3: PRESET_SENSITIVE, 4: PRESET_SCALE}

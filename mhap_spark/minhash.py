@@ -9,7 +9,9 @@ mhap/sketch/MinHashSketch.java:51-154:
 * weight = round(tf · scaledIdf) clamped to [1, max_weight]
   (mhap/sketch/MinHashSketch.java:111-124);
 * ONE continuous XORShift stream per shingle, advanced ``weight`` steps per
-  slot (:134-153) — the stream does NOT reset between slots;
+  slot (:134-153) — the stream does NOT reset between slots, so slot ``i``
+  depends only on slots ``< i`` and the first ``n`` slots of a wider run
+  equal an ``n``-slot run;
 * per-slot minimum in Java's SIGNED long order (``x < best[word]`` on long);
 * slot stores the winning shingle's 32-bit half: even slot → low 32 bits,
   odd slot → high (:144-151);
@@ -18,6 +20,10 @@ mhap/sketch/MinHashSketch.java:51-154:
   SURVEY.md §1.2 — images have no 1-D coordinate);
 * band hashes fold ``rows_per_band`` consecutive slots per band
   (mhap/sketch/BitVectorIndex.java:129-165's banding, keyed by fmix64).
+  The kernel steps only the ``band_count() * rows_per_band`` slots the
+  bands fold; by the prefix property above these are bit-identical to the
+  leading slots of a full ``num_hashes`` run (the reference steps and
+  indexes every slot, mhap/impl/MinHashSearch.java:85-98).
 
 Everything below runs on whole Arrow batches — no per-row Python.
 """
@@ -74,8 +80,9 @@ def batch_weights(
 def _xorshift_inplace(x: np.ndarray, tmp: np.ndarray) -> None:
     """In-place xorshift_step: same three shift-xor rounds, but written
     through preallocated buffers.  The out-of-place form allocates six
-    temporaries per call; at 512 slots × every shingle in the batch that
-    allocation traffic dominated the sketch kernel (measured 2.3×)."""
+    temporaries per call; at every stepped slot × every shingle in the
+    batch that allocation traffic dominated the sketch kernel (measured
+    2.3× at 512 slots)."""
     np.left_shift(x, 21, out=tmp)
     np.bitwise_xor(x, tmp, out=x)
     np.right_shift(x, 35, out=tmp)
@@ -89,16 +96,17 @@ def batch_minhash(
     keys: np.ndarray,
     weights: np.ndarray,
     row_starts: np.ndarray,
-    num_hashes: int,
+    num_slots: int,
 ) -> np.ndarray:
     """Weighted MinHash over a whole batch — cache-blocked by ROWS.
 
     rows/keys/weights: flat per-(row,distinct-shingle) arrays (rows ascending);
     row_starts: (n_rows+1) segment offsets into them.
-    Returns (n_rows, num_hashes) int32 signature matrix.
+    Returns the (n_rows, num_slots) int32 matrix of the first ``num_slots``
+    slots; a narrower run is a column prefix of a wider one (module doc).
 
     Rows are mutually independent, so the batch is split into row groups of
-    ~``_BLOCK_KEYS_BASE`` keys and each group runs the full ``num_hashes``
+    ~``_BLOCK_KEYS_BASE`` keys and each group runs the full ``num_slots``
     slot chain on L2-resident state (a 10k-row Arrow batch carries ~1M keys
     = 8 MB of stream state; at that size every one of the ~10 elementwise
     passes per slot round-trips DRAM, and the measured single-thread cost
@@ -123,8 +131,8 @@ def batch_minhash(
         raise ValueError("batch_minhash requires weights >= 1 for every key")
     target = _BLOCK_KEYS_BASE * max(1, -(-max_w // 4))  # ceil(max_w/4)
     if n_keys <= target:
-        return _minhash_block(rows, keys, weights, row_starts, num_hashes)
-    sig = np.empty((n_rows, num_hashes), dtype=np.int32)
+        return _minhash_block(rows, keys, weights, row_starts, num_slots)
+    sig = np.empty((n_rows, num_slots), dtype=np.int32)
     lo = 0
     while lo < n_rows:
         hi = lo + 1
@@ -136,7 +144,7 @@ def batch_minhash(
             keys[a:b],
             weights[a:b],
             row_starts[lo : hi + 1] - a,
-            num_hashes,
+            num_slots,
         )
         lo = hi
     return sig
@@ -150,7 +158,7 @@ def _minhash_block(
     keys: np.ndarray,
     weights: np.ndarray,
     row_starts: np.ndarray,
-    num_hashes: int,
+    num_slots: int,
 ) -> np.ndarray:
     """One row block of :func:`batch_minhash` (semantics doc there).
 
@@ -164,7 +172,7 @@ def _minhash_block(
     """
     n_rows = len(row_starts) - 1
     n_keys = len(keys)
-    sig = np.zeros((n_rows, num_hashes), dtype=np.int32)
+    sig = np.zeros((n_rows, num_slots), dtype=np.int32)
     if n_keys == 0:
         return sig
     key_lo = (keys & np.uint64(0xFFFFFFFF)).astype(np.uint32).view(np.int32)
@@ -231,7 +239,7 @@ def _minhash_block(
     ar = np.arange(n_rows)
 
     with np.errstate(over="ignore"):
-        for word in range(num_hashes):
+        for word in range(num_slots):
             if max_w == 1:
                 # weight-1 fast path: one step for everyone, min IS the state
                 _xorshift_inplace(x, tmp)
@@ -266,17 +274,18 @@ def _minhash_block(
     return sig
 
 
-def band_hashes(sig: np.ndarray, rows_per_band: int, num_bands: int = 0) -> np.ndarray:
+def band_hashes(sig: np.ndarray, rows_per_band: int) -> np.ndarray:
     """Fold r consecutive slots per band into a 64-bit bucket key.
 
-    sig: (n, num_hashes) int32 → (n, nb) int64, nb = num_bands if >0 else
-    num_hashes//r (band subsampling = first nb bands; cuts the candidate
-    shuffle linearly, vote gate preserves recall).  fmix64-chained so a band
-    key commits to (band index, all r slot values)."""
+    sig: (n, nb·r) int32 → (n, nb) int64 — every column is folded, so a
+    caller holding a wider signature slices it to ``band_count() * r``
+    columns first (a width that is not a multiple of r fails the reshape).
+    fmix64-chained so a band key commits to (band index, all r slot
+    values)."""
     n, h = sig.shape
     r = rows_per_band
-    nb = band_count_for(h, r, num_bands)
-    u = np.ascontiguousarray(sig[:, : nb * r]).view(np.uint32).astype(np.uint64)
+    nb = band_count_for(h, r)
+    u = np.ascontiguousarray(sig).view(np.uint32).astype(np.uint64)
     u = u.reshape(n, nb, r)
     acc = np.tile((np.arange(nb, dtype=np.uint64) + np.uint64(1)) * _GOLDEN, (n, 1))
     with np.errstate(over="ignore"):
@@ -293,10 +302,13 @@ def compute_signatures(
     frequency table rides along as a task-local closure (broadcast by
     Spark's task serializer once per executor).  The slot matrix exists
     only inside the kernel, where the bands are derived from it: every
-    consumer reads ``bands``, ``bottomk`` or ``n_shingles``."""
+    consumer reads ``bands``, ``bottomk`` or ``n_shingles``.  The kernel
+    steps exactly the ``band_count() * rows_per_band`` slots the bands
+    fold — the ``num_hashes % rows_per_band`` trailing slots no band reads
+    are never stepped."""
     k_bottom = cfg.ordered_sketch_size
-    num_hashes = cfg.num_hashes
     rpb = cfg.rows_per_band
+    num_slots = cfg.band_count() * rpb
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -305,8 +317,8 @@ def compute_signatures(
             )
             rows, keys, tfs, row_starts = distinct_per_row(flat, offs)
             weights = batch_weights(keys, tfs, cfg, freq)
-            sig = batch_minhash(rows, keys, weights, row_starts, num_hashes)
-            bands = band_hashes(sig, rpb, cfg.num_bands)
+            sig = batch_minhash(rows, keys, weights, row_starts, num_slots)
+            bands = band_hashes(sig, rpb)
             keys_signed = keys.view(np.int64)
             n = len(pdf)
             bottoms = [

@@ -162,8 +162,10 @@ def minhash_doc_candidates(
         keep_ids.append(did)
     if not sigs:
         return []
+    # the engine steps only the slots its bands fold
+    n_slots = cfg.band_count() * cfg.rows_per_band
     bands = band_hashes(
-        np.asarray(sigs, dtype=np.int32), cfg.rows_per_band, cfg.num_bands
+        np.asarray(sigs, dtype=np.int32)[:, :n_slots], cfg.rows_per_band
     )  # (n, nb) int64 — band index is salted into each value
     buckets: dict[int, list[int]] = {}
     for row in range(bands.shape[0]):

@@ -66,8 +66,11 @@ def test_freq_table_matches_oracle(spark, input_df, oracle_state):
 
 
 def _oracle_bands(sig: np.ndarray, cfg: MhapConfig) -> np.ndarray:
+    """Bands of a full-width oracle signature, sliced to the slots the
+    engine steps (``band_count() * rows_per_band``)."""
+    n_slots = cfg.band_count() * cfg.rows_per_band
     return band_hashes(
-        np.asarray(sig, dtype=np.int32).reshape(1, -1), cfg.rows_per_band, cfg.num_bands
+        np.asarray(sig[:n_slots], dtype=np.int32).reshape(1, -1), cfg.rows_per_band
     )[0]
 
 
@@ -305,16 +308,16 @@ def test_min_shingles_load_filter(spark):
     [
         {"rows_per_band": 2},                      # 64 true LSH bands
         {"rows_per_band": 4, "num_min_matches": 4},  # 32 bands, gate ceil(4/4)=1
-        {"rows_per_band": 2, "num_bands": 20},     # band subsampling on top
+        {"rows_per_band": 2, "num_hashes": 40},    # 20 bands over the first 40 slots
     ],
 )
 def test_lsh_banding_r_gt_1_matches_oracle(spark, corpus, input_df, oracle_state, over):
     """True LSH banding (rows_per_band > 1, previously untested): the engine
     folds r consecutive slots into one fmix64-chained band key
     (minhash.band_hashes); the oracle buckets on the exact r-slot tuple.
-    Candidate sets, votes, and verified pairs must agree — including with
-    num_bands subsampling layered on.  Signatures are banding-independent,
-    so the module oracle state is reused."""
+    Candidate sets, votes, and verified pairs must agree — including when
+    the engine steps fewer slots than the module oracle.  A narrower sketch
+    is a slot prefix of a wider one, so the module oracle state is reused."""
     cfg = CFG.with_overrides(**over)
     _, _, sigs_o, bottoms_o = oracle_state
     freq = FreqTable.compute(input_df, cfg)
@@ -430,6 +433,69 @@ def test_row_blocked_minhash_identical():
         finally:
             mh._BLOCK_KEYS_BASE = old
         assert np.array_equal(forced, want)
+
+
+@pytest.mark.parametrize("shared_vocab", [False, True])
+def test_minhash_slot_prefix_property(shared_vocab):
+    """A narrower sketch is the column prefix of a wider one: each
+    shingle's xorshift stream never resets between slots, so slot i depends
+    only on slots < i.  compute_signatures relies on this to step only the
+    slots its bands fold.  Covers the weight-1 and weighted paths, the
+    row-blocked path (forced tiny blocks) and, with a shared vocabulary,
+    the (key, weight) stream-dedup gather path."""
+    import mhap_spark.minhash as mh
+
+    rng = np.random.default_rng(5)
+    n_rows = 150
+    counts = rng.integers(0, 40, size=n_rows)
+    counts[[0, 75, 149]] = 0
+    row_starts = np.zeros(n_rows + 1, dtype=np.int64)
+    np.cumsum(counts, out=row_starts[1:])
+    n_keys = int(row_starts[-1])
+    if shared_vocab:
+        vocab = rng.integers(1, 2**63, size=60, dtype=np.uint64)
+        keys = np.concatenate(
+            [np.sort(rng.choice(vocab, size=c, replace=False)) for c in counts]
+        )
+    else:
+        keys = rng.integers(1, 2**63, size=n_keys, dtype=np.uint64)
+    rows = np.repeat(np.arange(n_rows), counts)
+    for w in (
+        np.ones(n_keys, dtype=np.int64),
+        rng.integers(1, 5, size=n_keys, dtype=np.int64),
+    ):
+        for block_base in (mh._BLOCK_KEYS_BASE, 256):
+            old = mh._BLOCK_KEYS_BASE
+            mh._BLOCK_KEYS_BASE = block_base
+            try:
+                wide = mh.batch_minhash(rows, keys, w, row_starts, 64)
+                narrow = mh.batch_minhash(rows, keys, w, row_starts, 32)
+            finally:
+                mh._BLOCK_KEYS_BASE = old
+            assert narrow.shape == (n_rows, 32)
+            assert np.array_equal(narrow, wide[:, :32])
+
+
+@pytest.mark.parametrize(
+    "over",
+    [
+        {"rows_per_band": 3},   # 42 bands; the 2 trailing slots are never stepped
+        {"num_hashes": 32},     # 32 bands over the first 32 of the oracle's 128
+    ],
+)
+def test_engine_bands_match_truncated_oracle(input_df, corpus, oracle_state, over):
+    """The engine steps only ``band_count() * rows_per_band`` slots; its
+    bands must equal band_hashes of the full-width (128-slot) module oracle
+    signatures sliced to that many slots."""
+    cfg = CFG.with_overrides(**over)
+    _, _, sigs_o, _ = oracle_state
+    freq = FreqTable.compute(input_df, cfg)
+    pdf = compute_signatures(input_df, cfg, freq).toPandas().set_index("image_id")
+    assert len(pdf) == N_ROWS
+    for i, img in enumerate(corpus["image_id"]):
+        got = np.asarray(pdf.loc[img, "bands"], dtype=np.int64)
+        assert len(got) == cfg.band_count()
+        assert np.array_equal(got, _oracle_bands(sigs_o[i], cfg)), img
 
 
 def test_batch_minhash_rejects_zero_weights():

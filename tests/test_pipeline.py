@@ -218,6 +218,23 @@ def test_config_hash_ignores_execution_only_knobs():
     assert cfg.config_hash() != cfg.with_overrides(num_hashes=cfg.num_hashes + 1).config_hash()
 
 
+def test_config_without_bands_is_rejected():
+    """A config with no LSH band fails at construction — not late (a
+    ZeroDivisionError in band_count for rows_per_band=0) and not silently
+    (empty bands and zero candidates when num_hashes < rows_per_band)."""
+    for over in (
+        {"rows_per_band": 0},
+        {"rows_per_band": -1},
+        {"num_hashes": 3, "rows_per_band": 4},
+        {"num_hashes": 0},
+    ):
+        with pytest.raises(ValueError, match="no LSH bands"):
+            MhapConfig(**over)
+        with pytest.raises(ValueError, match="no LSH bands"):
+            MhapConfig().with_overrides(**over)
+    assert MhapConfig(num_hashes=4, rows_per_band=4).band_count() == 1
+
+
 def test_pair_recall_counts_planted_pairs():
     """bench._pair_recall backs perfbench's gated pair_recall: it scores
     planted intra-cluster pairs only."""

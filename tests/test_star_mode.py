@@ -12,10 +12,8 @@ from mhap_spark.pipeline import run_pipeline
 from mhap_spark.synth import INPUT_SCHEMA_DDL, corpus_to_rows, generate_corpus, truth_pairs
 
 CFG_STAR = MhapConfig(num_hashes=128, candidate_mode="star")
-# full scale preset shape at unit size: star + band subsampling + sampled df
-CFG_SCALE = MhapConfig(
-    num_hashes=128, candidate_mode="star", num_bands=32, freq_sample_mod=4
-)
+# full scale preset shape at unit size: star + few bands + sampled df
+CFG_SCALE = MhapConfig(num_hashes=32, candidate_mode="star", freq_sample_mod=4)
 
 
 @pytest.fixture(scope="module")
@@ -52,7 +50,7 @@ def test_star_candidates_match_oracle(spark, corpus, input_df):
 
 
 def test_scale_preset_matches_oracle_and_truth(spark, corpus, input_df):
-    """Band subsampling + hash-sampled df estimation: engine candidates still
+    """Few bands + hash-sampled df estimation: engine candidates still
     equal the oracle's at the identical config, and recall holds."""
     cfg = CFG_SCALE
     freq = FreqTable.compute(input_df, cfg)
@@ -80,7 +78,7 @@ def test_scale_preset_matches_oracle_and_truth(spark, corpus, input_df):
         )
     }
     assert got == want
-    # bands actually subsampled
+    # one band per slot, 32 slots
     first = sig_df.select("bands").first()
     assert len(first["bands"]) == 32
 
