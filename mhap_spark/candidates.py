@@ -136,9 +136,13 @@ def _pairs_star(
     Buckets larger than the cap: members are salted into ceil(size/cap)
     sub-buckets by crc32(image_id); each sub-bucket emits (sub-hub → member)
     edges and the sub-hubs chain to the bucket's global min — still exactly
-    size−1 edges (the global min is always its own sub-bucket's hub), with
-    no task ever holding more than ~cap·n_bands rows of one key.  A
-    10^12-row corpus' boilerplate mega-clusters (size ≫ cap in EVERY band) stay connected instead of
+    size−1 edges (the global min is always its own sub-bucket's hub).  What
+    the salt bounds is the fan-out of one edge source: each sub-hub is the
+    ``src`` of about ``cap`` edges into the vote groupBy, the verify ``src``
+    join and CC.  It does not split a bucket across tasks: the band rows
+    are exchanged on band_hash before the first window, so every bucket
+    lands whole in one task.  A 10^12-row corpus' boilerplate
+    mega-clusters (size ≫ cap in EVERY band) stay connected instead of
     silently fragmenting under the old drop-only behavior.  The emitted
     ``oversize`` flag lets the vote gate relax to 1 for these edges
     (see candidate_pairs); salt assignment is crc32 so the numpy oracle
@@ -152,13 +156,13 @@ def _pairs_star(
     the signature cache for each side; the wave profile measured those as
     the largest candidate-stage jobs).  WindowExec sorts and spills, never
     materializes a bucket, so the mega-bucket discipline is unchanged.  The
-    oversize path adds one shuffle of only the oversize rows on
-    (band_hash, salt), whose key cardinality is bounded by the salt
-    fan-out.  The funnel Observation moves to the window output: hub rows
-    (image_id == src, exactly one per bucket) carry the per-bucket metrics,
-    so the aggregate values are identical to the old one-row-per-bucket
-    form — pinned exact by tests/test_star_mode.py (including the oversize
-    mega adversary)."""
+    oversize path adds no exchange: the (band_hash, salt) sub-hub window
+    re-sorts all band rows inside the band_hash partitioning, whether or
+    not any bucket is oversize.  The funnel Observation moves to the
+    window output: hub rows (image_id == src, exactly one per bucket)
+    carry the per-bucket metrics, so the aggregate values are identical to
+    the old one-row-per-bucket form — pinned exact by
+    tests/test_star_mode.py (including the oversize mega adversary)."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("band_hash")

@@ -162,32 +162,12 @@ def keep_manifest(clusters: DataFrame) -> DataFrame:
     component minimum (FIXTURES.md F4), so the canonical representative is
     exactly the row whose id IS its cluster_id — one codegen'd comparison,
     no extra shuffle.  ``filter(keep)`` = deduplicated corpus;
-    ``filter(~keep)`` = drop manifest with cluster provenance."""
+    ``filter(~keep)`` = drop manifest with cluster provenance.  Applied to
+    :func:`connected_components`, it is source-agnostic: any duplicate-pair
+    producer (MinHash bands, SimHash, embedding cosine, ANN candidates)
+    yields a dedup keep manifest."""
     return clusters.withColumn(
         "keep", F.col("image_id") == F.col("cluster_id")
-    )
-
-
-def dedup_keep_from_pairs(
-    pairs: DataFrame,
-    vertices: DataFrame,
-    max_iters: int = 50,
-    driver_finish_edges: int = 0,
-    no_broadcast_hints: bool = True,
-) -> DataFrame:
-    """pairs(src,dst) + vertices(image_id) → (image_id, cluster_id, keep):
-    connected components plus the canonical-representative decision, in one
-    call.  Source-agnostic — any duplicate-pair producer (MinHash bands,
-    SimHash, embedding cosine, ANN candidates) composes with this to yield
-    a dedup keep manifest."""
-    return keep_manifest(
-        connected_components(
-            pairs,
-            vertices,
-            max_iters=max_iters,
-            driver_finish_edges=driver_finish_edges,
-            no_broadcast_hints=no_broadcast_hints,
-        )
     )
 
 

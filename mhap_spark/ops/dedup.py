@@ -181,7 +181,7 @@ def minhash_dedup_keep(
     extra shuffle beyond the cluster join itself.  Min-id ordering is
     BINARY string order on both the engine and oracle sides (Spark and
     Python compare code points identically for the ASCII ids here)."""
-    from mhap_spark.cluster import dedup_keep_from_pairs
+    from mhap_spark.cluster import connected_components, keep_manifest
 
     if cfg is None:
         cfg = _doc_cfg(df)
@@ -190,12 +190,14 @@ def minhash_dedup_keep(
         F.col("src_doc").alias("src"), F.col("dst_doc").alias("dst")
     )
     verts = df.select(F.col(id_col).cast("string").alias("image_id"))
-    return dedup_keep_from_pairs(
-        edges,
-        verts,
-        max_iters=cfg.cc_max_iters,
-        driver_finish_edges=cfg.cc_driver_finish_edges,
-        no_broadcast_hints=cfg.no_broadcast_hints,
+    return keep_manifest(
+        connected_components(
+            edges,
+            verts,
+            max_iters=cfg.cc_max_iters,
+            driver_finish_edges=cfg.cc_driver_finish_edges,
+            no_broadcast_hints=cfg.no_broadcast_hints,
+        )
     ).select(F.col("image_id").alias(id_col), "cluster_id", "keep")
 
 

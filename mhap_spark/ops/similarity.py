@@ -151,16 +151,16 @@ def embedding_dedup_keep(
     Pair source here is the exact blocked baseline
     (:func:`embedding_near_dup_pairs`, oracle-checkable); at web scale
     feed :func:`lsh_bucketed_neighbors` / :func:`ivf_neighbors` pairs into
-    ``cluster.dedup_keep_from_pairs`` instead — the clustering and keep
-    decision are source-agnostic.
+    ``cluster.keep_manifest(cluster.connected_components(...))`` instead —
+    the clustering and keep decision are source-agnostic.
 
     ``no_broadcast_hints`` defaults False HERE (deliberately inverted from
-    ``dedup_keep_from_pairs``'s scale-safe True): this entry point is
+    ``connected_components``'s scale-safe True): this entry point is
     bounded to exact-baseline corpora by construction, where free
-    broadcasts are the right plan.  The ANN-fed path above goes through
-    ``dedup_keep_from_pairs`` directly and keeps its corpus-scale
+    broadcasts are the right plan.  The ANN-fed path above calls
+    ``connected_components`` directly and keeps its corpus-scale
     default."""
-    from mhap_spark.cluster import dedup_keep_from_pairs
+    from mhap_spark.cluster import connected_components, keep_manifest
 
     pairs = embedding_near_dup_pairs(
         df,
@@ -171,11 +171,13 @@ def embedding_dedup_keep(
         max_block_size=max_block_size,
     )
     verts = df.select(F.col(id_col).alias("image_id"))
-    return dedup_keep_from_pairs(
-        pairs,
-        verts,
-        driver_finish_edges=driver_finish_edges,
-        no_broadcast_hints=no_broadcast_hints,
+    return keep_manifest(
+        connected_components(
+            pairs,
+            verts,
+            driver_finish_edges=driver_finish_edges,
+            no_broadcast_hints=no_broadcast_hints,
+        )
     ).select(F.col("image_id").alias(id_col), "cluster_id", "keep")
 
 

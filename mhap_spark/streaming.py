@@ -3,9 +3,10 @@
 The reference is strictly batch (SURVEY.md §2.10); its closest feature is the
 ``-q`` mode that streams query files against an indexed set
 (mhap/main/MhapMain.java:511-541).  This module expresses that incrementally:
-new rows arrive as a stream, each micro-batch is sketched, probed against the
-band index of every earlier batch, and appended to it — so duplicate
-detection runs continuously as data lands.
+new rows arrive as a stream, each micro-batch is sketched, appended to the
+band index, and probed against it — one plan finds the pairs within the
+batch and the pairs against every earlier batch — so duplicate detection
+runs continuously as data lands.
 
 ``foreachBatch`` is the right tool (not stateful streaming operators): the
 probe is a batch join against a large, growing table — exactly what
@@ -23,7 +24,6 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
-from mhap_spark.candidates import candidate_pairs
 from mhap_spark.config import MhapConfig
 from mhap_spark.freq import FreqTable
 from mhap_spark.minhash import SIGNATURE_SCHEMA, compute_signatures
@@ -44,8 +44,8 @@ _INDEX_HISTORY = StructType(
 def _read_history(
     spark: SparkSession, path: str, schema: StructType, batch_id: int
 ) -> DataFrame:
-    """Rows of the ``batch_id=N`` table at ``path`` from batches strictly
-    earlier than ``batch_id`` — the one way the sink reads its history.
+    """Rows of the ``batch_id=N`` table at ``path`` from batches up to and
+    including ``batch_id`` — the one way the sink reads its history.
 
     The schema is given, not inferred, so a history with no committed part
     file (a new stream, or a crash mid-write of the first batch that left
@@ -58,7 +58,7 @@ def _read_history(
     return (
         spark.read.schema(schema)
         .parquet(path)
-        .where(F.col("batch_id") < F.lit(batch_id))
+        .where(F.col("batch_id") <= F.lit(batch_id))
     )
 
 
@@ -107,15 +107,21 @@ class BandIndex:
         ).parquet(os.path.join(self.path, f"batch_id={batch_id}"))
 
     def probe(self, probe_sigs: DataFrame, cfg: MhapConfig, batch_id: int) -> DataFrame:
-        """(probe_id, index_id, votes ≥ gate) against batches strictly
-        earlier than ``batch_id`` — same semantics as
-        candidates.probe_candidates on the accumulated signatures.  An
-        empty index gives an empty frame."""
+        """(src, dst, votes ≥ gate) of batch ``batch_id`` after its append:
+        src < dst within the batch (what candidates.candidate_pairs finds
+        on its signatures), and src in the batch with dst earlier (what
+        candidates.probe_candidates finds against the earlier signatures).
+        Bucket sizes are counted per (band_hash, cur), so each side keeps
+        its own cap."""
         idx = _read_history(
             probe_sigs.sparkSession, self.path, _INDEX_HISTORY, batch_id
-        ).select("band_hash", F.col("image_id").alias("index_id"))
+        ).select(
+            "band_hash",
+            F.col("image_id").alias("dst"),
+            (F.col("batch_id") == F.lit(batch_id)).alias("cur"),
+        )
         probe = probe_sigs.select(
-            F.col("image_id").alias("probe_id"),
+            F.col("image_id").alias("src"),
             F.explode("bands").alias("band_hash"),
         )
         keys = probe.select("band_hash").distinct()
@@ -123,7 +129,7 @@ class BandIndex:
         # the (unbounded) index — collision rows only survive
         relevant = idx.join(F.broadcast(keys), ["band_hash"]).persist()
         try:
-            sizes = relevant.groupBy("band_hash").agg(
+            sizes = relevant.groupBy("band_hash", "cur").agg(
                 F.count(F.lit(1)).alias("bucket_size")
             )
             # sizes is bounded by the probed band count (tiny for lookup
@@ -132,13 +138,18 @@ class BandIndex:
             sizes_ok = sizes.where(F.col("bucket_size") <= cfg.max_bucket_size)
             if cfg.no_broadcast_hints:
                 sizes_ok = sizes_ok.hint("shuffle_hash")
-            ok = relevant.join(sizes_ok, ["band_hash"])
+            ok = relevant.join(sizes_ok, ["band_hash", "cur"])
             out = (
                 ok.join(F.broadcast(probe), ["band_hash"])
-                .where(F.col("probe_id") != F.col("index_id"))
-                .groupBy("probe_id", "index_id")
+                .where(
+                    F.when(F.col("cur"), F.col("src") < F.col("dst")).otherwise(
+                        F.col("src") != F.col("dst")
+                    )
+                )
+                .groupBy("src", "dst", "cur")
                 .agg(F.count(F.lit(1)).alias("votes"))
                 .filter(F.col("votes") >= F.lit(cfg.min_band_matches()))
+                .select("src", "dst", "votes")
             )
             # materialize through the persisted collision set so the caller
             # can consume it repeatedly without re-scanning the index
@@ -149,7 +160,8 @@ class BandIndex:
 
 
 class IncrementalDedup:
-    """foreachBatch sink: sketch → probe vs the band index → append.
+    """foreachBatch sink: sketch → append to the band index → one probe →
+    verify.
 
     Directory layout under ``base_dir``: ``signatures/batch_id=N/``
     (accumulated signature table, one partition dir per micro-batch),
@@ -158,12 +170,10 @@ class IncrementalDedup:
     ``keep/batch_id=N/`` (with ``keep_manifest``), ``_stream_checkpoint/``
     (Spark streaming offsets).
 
-    Duplicate coverage is complete: pairs WITHIN a micro-batch are found by
-    running the batch's own signatures through stage-1 candidate
-    generation, and pairs ACROSS batches by probing the band index of all
-    earlier batches — union of both feeds one verify pass.  The signature
-    table is the source of truth for the verify arrays, semi-joined down to
-    the index ids the probe matched.
+    Duplicate coverage is complete: the batch is appended before it is
+    probed, so one ``BandIndex.probe`` finds the pairs WITHIN the
+    micro-batch and ACROSS batches.  Verify reads every bottom-k array from
+    the signature table, semi-joined to the candidates' ids.
 
     Each micro-batch is read and sketched once.  ``process_batch`` persists
     the batch (unless the caller already cached it, in which case it is
@@ -171,14 +181,15 @@ class IncrementalDedup:
     ``ceil(rows / spark.sql.execution.arrow.maxRecordsPerBatch)``
     coalesced partitions, so a small batch is one full Arrow batch in one
     task instead of many near-empty ones.  The recurrence guard and the
-    keep manifest read the batch's ids from the same cache, and the band
-    index is written from the persisted signatures.
+    keep manifest read the batch's ids from the same cache, and the writes
+    and the probe read the persisted signatures.
 
     Writes are idempotent under foreachBatch retries: every batch overwrites
     its own ``batch_id=N`` partition directory, so a replayed batch replaces
-    its previous (possibly partial) output instead of appending duplicates,
-    and the probe and verify read only batches strictly earlier than the
-    current one.
+    its previous (possibly partial) output instead of appending duplicates.
+    A batch that fails after its append is replayed over its own
+    partitions, which the replay rewrites before it probes; the recurrence
+    guard reads only earlier batches.
 
     ``band_index`` is accepted for compatibility with callers that still
     pass it; the band index is the only cross-batch path, so only ``True``
@@ -200,11 +211,10 @@ class IncrementalDedup:
         if cfg.candidate_mode == "star":
             # star emission is hub-mediated: members connect only THROUGH the
             # bucket hub, and the transitive edges are closed by the batch
-            # pipeline's CC stage — which this sink does not run.  Accepting
-            # it silently would make per-batch match output depend on arrival
-            # batching (intra-batch hub edges at star_min_votes vs cross-batch
-            # probe pairs at min_band_matches()), violating the documented
-            # complete-coverage contract.  Same loud-rejection discipline as
+            # pipeline's CC stage — which this sink does not run.  The sink's
+            # one probe emits every pair at min_band_matches(), so accepting
+            # a star config would silently ignore its hub emission, salting
+            # and star_min_votes gate.  Same loud-rejection discipline as
             # candidates.candidate_pairs' min_store+star check.
             raise ValueError(
                 "IncrementalDedup requires candidate_mode='pairs': star-mode "
@@ -212,18 +222,16 @@ class IncrementalDedup:
                 "which the streaming sink does not run"
             )
         if cfg.min_store_shingles > 0:
-            # the asymmetric store filter is a batch-index concept: applying
-            # it intra-batch but probing the UNFILTERED band index
-            # cross-batch would report a (short, short) duplicate iff the
-            # two rows arrived in different micro-batches — output depending
-            # on arrival batching, the same contract violation star mode is
-            # rejected for.  Implementing it needs an n_shingles filter on
-            # the index side of the probe; until then, reject loudly.
+            # the asymmetric store filter keeps short rows out of the stored
+            # side of the probe; the band index stores every row and carries
+            # no n_shingles, so the one probe would report the (short,
+            # short) pairs candidate_pairs skips.  Implementing it needs an
+            # n_shingles filter on the index side of the probe; until then,
+            # reject loudly.
             raise ValueError(
                 "IncrementalDedup does not support min_store_shingles: the "
-                "store filter would apply intra-batch but not to the "
-                "accumulated index, making match output depend on arrival "
-                "batching"
+                "band index stores every row, so the probe cannot leave "
+                "short rows out of the stored side"
             )
         self.base_dir = base_dir
         self.cfg = cfg
@@ -273,7 +281,7 @@ class IncrementalDedup:
                 # Checked before any write, so a rejected batch leaves
                 # nothing on disk.
                 earlier_ids = _read_history(
-                    spark, self.sig_path, _SIGNATURE_HISTORY, batch_id
+                    spark, self.sig_path, _SIGNATURE_HISTORY, batch_id - 1
                 ).select("image_id")
                 n_recur = batch_ids.join(earlier_ids, "image_id", "left_semi").count()
                 if n_recur:
@@ -293,30 +301,22 @@ class IncrementalDedup:
             sigs = compute_signatures(
                 batch_df.coalesce(n_parts), self.cfg, self.freq
             ).persist()
-
-            # intra-batch duplicates: stage 1 over the batch's own signatures
-            cands = candidate_pairs(sigs, self.cfg)
-            both = sigs.select("image_id", "bottomk")
-            # cross-batch duplicates via the band index: the index side is
-            # scanned, never shuffled (see BandIndex.probe); verify arrays
-            # come from the signature table semi-joined to the matched ids,
-            # so the wide bottom-k rows of unmatched index entries never
-            # move and no id set is held on the driver
-            found = self.bindex.probe(sigs, self.cfg, batch_id)
-            cands = cands.unionByName(
-                found.select(
-                    F.col("probe_id").alias("src"),
-                    F.col("index_id").alias("dst"),
-                    "votes",
-                )
+            # append first, so one probe and one sketch source cover the
+            # batch itself and every earlier batch
+            sigs.write.mode("overwrite").parquet(
+                os.path.join(self.sig_path, f"batch_id={batch_id}")
             )
-            matched_ids = found.select(F.col("index_id").alias("image_id")).distinct()
-            hit = _read_history(
+            self.bindex.append(sigs, batch_id)
+            # verify arrays come from the signature table semi-joined to the
+            # candidates' ids: unmatched bottom-k rows never move, and no id
+            # set is held on the driver
+            cands = self.bindex.probe(sigs, self.cfg, batch_id)
+            named = cands.select(F.explode(F.array("src", "dst")).alias("image_id"))
+            sketches = _read_history(
                 spark, self.sig_path, _SIGNATURE_HISTORY, batch_id
-            ).join(matched_ids, "image_id", "left_semi")
-            both = both.unionByName(hit.select("image_id", "bottomk"))
+            ).join(named, "image_id", "left_semi")
 
-            matches = verified_pairs(cands, both, self.cfg)
+            matches = verified_pairs(cands, sketches, self.cfg)
             matches.write.mode("overwrite").parquet(
                 os.path.join(self.match_path, f"batch_id={batch_id}")
             )
@@ -351,10 +351,6 @@ class IncrementalDedup:
                 keep.write.mode("overwrite").parquet(
                     os.path.join(self.keep_path, f"batch_id={batch_id}")
                 )
-            sigs.write.mode("overwrite").parquet(
-                os.path.join(self.sig_path, f"batch_id={batch_id}")
-            )
-            self.bindex.append(sigs, batch_id)
         finally:
             if sigs is not None:
                 sigs.unpersist()

@@ -280,40 +280,53 @@ def test_windowed_event_counts_with_watermark(spark, tmp_path):
     assert len(got) >= len(want) - 3 * n_types
 
 
-def _reference_matches(spark, chunks, cfg):
-    """Per-batch matches the sink must write, computed without the band
-    index: stage 1 on the batch's own signatures plus probe_candidates
-    against the signatures of every earlier batch, then one verify."""
-    earlier, out, cached = None, {}, []
-    for k, chunk in enumerate(chunks):
-        sigs = compute_signatures(
-            spark.createDataFrame(chunk, INPUT_SCHEMA_DDL), cfg, None
-        ).persist()
-        cached.append(sigs)
-        cands = candidate_pairs(sigs, cfg)
-        both = sigs
-        if earlier is not None:
-            cands = cands.unionByName(
-                probe_candidates(sigs, earlier, cfg).select(
-                    F.col("probe_id").alias("src"),
-                    F.col("index_id").alias("dst"),
-                    "votes",
+def _reference_feeds(spark, chunks, cfg):
+    """Per batch k, computed without the band index: ``(k, sigs, cands,
+    both)`` with the batch's signatures, the candidates the sink must
+    verify — stage 1 on the batch's own signatures plus probe_candidates
+    against the signatures of every earlier batch — and the signatures of
+    batches up to k."""
+    earlier, cached = None, []
+    try:
+        for k, chunk in enumerate(chunks):
+            sigs = compute_signatures(
+                spark.createDataFrame(chunk, INPUT_SCHEMA_DDL), cfg, None
+            ).persist()
+            cached.append(sigs)
+            cands = candidate_pairs(sigs, cfg)
+            both = sigs
+            if earlier is not None:
+                cands = cands.unionByName(
+                    probe_candidates(sigs, earlier, cfg).select(
+                        F.col("probe_id").alias("src"),
+                        F.col("index_id").alias("dst"),
+                        "votes",
+                    )
                 )
-            )
-            both = sigs.unionByName(earlier)
-        out[k] = {
-            (r["src"], r["dst"]) for r in verified_pairs(cands, both, cfg).collect()
-        }
-        earlier = both
-    for sigs in cached:
-        sigs.unpersist()
-    return out
+                both = sigs.unionByName(earlier)
+            yield k, sigs, cands, both
+            earlier = both
+    finally:
+        for sigs in cached:
+            sigs.unpersist()
 
 
-def _sink_matches(spark, base, k_batches):
+def _reference_matches(spark, chunks, cfg, cols=("src", "dst")):
+    """Per-batch matches the sink must write: one verify of each batch's
+    reference candidates, as tuples of ``cols``."""
     return {
         k: {
-            (r["src"], r["dst"])
+            tuple(r[c] for c in cols)
+            for r in verified_pairs(cands, both, cfg).collect()
+        }
+        for k, _, cands, both in _reference_feeds(spark, chunks, cfg)
+    }
+
+
+def _sink_matches(spark, base, k_batches, cols=("src", "dst")):
+    return {
+        k: {
+            tuple(r[c] for c in cols)
             for r in spark.read.parquet(
                 os.path.join(base, "matches", f"batch_id={k}")
             ).collect()
@@ -322,11 +335,18 @@ def _sink_matches(spark, base, k_batches):
     }
 
 
-def test_streaming_band_index_equivalent(spark, tmp_path):
+def test_streaming_band_index_equivalent(spark, tmp_path, monkeypatch):
     """The band-index sink must write the reference's per-batch matches
     through a fresh sink in mid-stream, a replayed batch, a replayed first
-    batch on a fresh directory, and a crash after commit followed by a
-    fresh-sink replay (each batch overwrites its own batch_id=N dirs)."""
+    batch on a fresh directory, a crash after commit followed by a
+    fresh-sink replay, and a crash between the batch's append and its
+    matches write followed by a fresh-sink replay (each batch overwrites
+    its own batch_id=N dirs)."""
+    from mhap_spark import streaming
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("verify crashed")
+
     corpus = generate_corpus(160, seed=13)
     rows = corpus_to_rows(corpus)
     chunks = [rows[i * 40 : (i + 1) * 40] for i in range(4)]
@@ -339,6 +359,17 @@ def test_streaming_band_index_equivalent(spark, tmp_path):
         bdf = spark.createDataFrame(chunk, INPUT_SCHEMA_DDL)
         if k == 2:  # driver restart: fresh sink object
             sink = IncrementalDedup(base, CFG, keep_manifest=True)
+            # crash AFTER the batch's signatures and band rows are written
+            # but before its matches: the replay probes over the batch's
+            # own partitions and must not pair its rows with a stale copy
+            with monkeypatch.context() as m:
+                m.setattr(streaming, "verified_pairs", crash)
+                with pytest.raises(RuntimeError, match="verify crashed"):
+                    sink.process_batch(bdf, k)
+            for sub in ("signatures", "band_index"):
+                assert _has_part_files(os.path.join(base, sub, "batch_id=2")), sub
+            assert not os.path.exists(os.path.join(base, "matches", "batch_id=2"))
+            sink = IncrementalDedup(base, CFG, keep_manifest=True)
         sink.process_batch(bdf, k)
         if k in (0, 3):
             sink.process_batch(bdf, k)  # foreachBatch replay
@@ -348,8 +379,11 @@ def test_streaming_band_index_equivalent(spark, tmp_path):
             # replays the SAME batch over its own stale partitions
             sink = IncrementalDedup(base, CFG, keep_manifest=True)
             sink.process_batch(bdf, k)
-    want = _reference_matches(spark, chunks, CFG)
-    assert _sink_matches(spark, base, len(chunks)) == want
+    # votes too: a replay whose probe met a stale copy of the batch's own
+    # band rows would count their shared bands twice
+    cols = ("src", "dst", "votes")
+    want = _reference_matches(spark, chunks, CFG, cols)
+    assert _sink_matches(spark, base, len(chunks), cols) == want
     assert any(want[k] for k in want)  # the comparison is not vacuous
     # compact layout: part files directly under batch_id=N, no subdirectories
     bi = os.path.join(base, "band_index", "batch_id=0")
@@ -441,7 +475,9 @@ def test_band_index_capped_bucket_adversary(spark, tmp_path):
     """A planted cluster larger than max_bucket_size makes index-side buckets
     that the probe must drop exactly as probe_candidates does: every index
     row of a probed band survives the broadcast semi-join, so the capped
-    bucket sizes are the true ones."""
+    bucket sizes are the true ones.  The probe's candidate set, votes
+    included, must equal the reference's for every batch, so a vote or cap
+    difference on a pair that then fails verify still shows."""
     import numpy as np
 
     cfg = CFG.with_overrides(max_bucket_size=8)
@@ -453,8 +489,11 @@ def test_band_index_capped_bucket_adversary(spark, tmp_path):
 
     banded_dir = str(tmp_path / "banded")
     sink = IncrementalDedup(banded_dir, cfg)
-    for k, chunk in enumerate(chunks):
+    for (k, sigs, cands, _), chunk in zip(_reference_feeds(spark, chunks, cfg), chunks):
         sink.process_batch(spark.createDataFrame(chunk, INPUT_SCHEMA_DDL), k)
+        got = sorted(tuple(r) for r in sink.bindex.probe(sigs, cfg, k).collect())
+        assert got == sorted(tuple(r) for r in cands.collect()), k
+        assert got, k
     want = _reference_matches(spark, chunks, cfg)
     assert _sink_matches(spark, banded_dir, len(chunks)) == want
     # not vacuous: the last batch has matches and probes index buckets
