@@ -129,7 +129,7 @@ def _q_supplier_vote_pairs(spark, sf_dir):
     # one groupBy-collect_set + double explode instead of the former
     # distinct + self-equi-join (round-6 optimization, guide §2.4): the
     # shared-key pair enumeration is the same inverted-index pattern as
-    # candidates._pairs_grouped_onepass — the old plan scanned lineitem twice,
+    # candidates.capped_bucket_pairs — the old plan scanned lineitem twice,
     # ran the (l_suppkey, l_partkey) distinct twice, and broadcast one
     # 160k-row side; this plan is one scan, one exchange on l_partkey
     # (collect_set dedupes suppliers per part — exactly the old distinct),

@@ -9,15 +9,18 @@ HAVING filter.  Pair-order dedup (``src < dst``, :199-219) is a predicate.
 Skew handling (north rule "salted repartition + hash-join + groupBy with
 explicit skew mitigation for hot bands"):
 
-* a window count sizes every bucket BEFORE any list is collected, so a
-  mega-bucket can never materialize;
+* one window over the bucket key (:func:`sized_buckets`) sizes every
+  bucket BEFORE any list is collected, so a mega-bucket can never
+  materialize;
 * buckets larger than ``max_bucket_size`` are dropped (pairs mode) or
   salted (star mode) and counted in the funnel metrics — the scale analog
   of the reference's popular-k-mer noise suppression
   (mhap/sketch/FrequencyCounts.java:171-186);
-* both modes emit from one window over the band_hash exchange: pairs mode
-  collects each eligible bucket and double-explodes it, star mode emits
-  linear hub edges.
+* pairs mode, substring and SimHash blocking share one emitter,
+  :func:`capped_bucket_pairs`; its ``stored`` flag is the reference's
+  ``--min-store-length`` (MhapMain.java:79), so the cap counts stored
+  rows and one bucket emits at most rows × cap pairs; star mode shares
+  the sizing window and emits linear hub edges.
 """
 
 from __future__ import annotations
@@ -25,7 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from mhap_spark.config import MhapConfig
-from mhap_spark.hints import scaled
 
 
 def exploded_bands(signatures: DataFrame) -> DataFrame:
@@ -51,8 +53,9 @@ def _funnel_exprs(cfg: MhapConfig, is_hub=None) -> list:
 
     ``is_hub`` selects exactly one row per bucket: over one-row-per-bucket
     input (``bucket_sizes``) it is omitted (every row counts); over the
-    window output of the pairs/star plans it is ``image_id == bucket min``,
-    so the aggregates equal the one-row-per-bucket values.
+    window output of the pairs/star plans it is ``image_id == hub`` (the
+    minimum stored id, see sized_buckets), so the aggregates equal the
+    one-row-per-bucket values.
 
     ``candidate_pairs_generated`` counts emitted edges exactly: C(n,2) per
     eligible bucket in pairs mode, n−1 per bucket in star mode — where
@@ -87,46 +90,74 @@ def _funnel_exprs(cfg: MhapConfig, is_hub=None) -> list:
     ]
 
 
-def _pairs_grouped_onepass(
-    bands: DataFrame, cfg: MhapConfig, funnel_obs: Observation | None = None
+def sized_buckets(
+    rows: DataFrame, keys: list[str], id_col: str, stored=None, funnel=None
 ) -> DataFrame:
-    """Pairs-mode emission: bucket sizing via a window count over the SAME
-    exchange the collect_list groupBy uses, so the upstream plan (for an
-    unpersisted signature source, the whole Arrow sketch kernel) is
-    evaluated once.  The mega-bucket discipline holds: the count is
-    computed without collecting any list (WindowExec sorts, spills, and
-    never materializes a bucket), over-cap buckets are filtered BEFORE
-    collect_list, and the groupBy reuses the window's hash partitioning so
-    no second exchange appears.  Pairs are emitted by a double explode
-    inside whole-stage codegen.
-
-    ``funnel_obs`` rides the window output the way star mode's does: the
-    bucket min is added to the same window only when metrics are requested,
-    and hub rows (image_id == min, one per bucket) carry the per-bucket
-    sums — pinned exact against ``bucket_sizes`` by tests/test_engine_parity.py."""
+    """``rows`` plus, from ONE window over the bucket key: ``bucket_size``
+    (stored rows — what the cap is checked against), ``n_rows`` and
+    ``hub`` (the minimum stored id, so ``id_col == hub`` picks one row per
+    bucket).  ``stored`` is a boolean column over ``rows``, every row when
+    None; ``funnel`` = ``(Observation, exprs)`` rides this output."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy("band_hash")
-    sized = bands.withColumn("bucket_size", F.count(F.lit(1)).over(w))
-    if funnel_obs is not None:
-        sized = sized.withColumn("hub", F.min("image_id").over(w)).observe(
-            funnel_obs, *_funnel_exprs(cfg, F.col("image_id") == F.col("hub"))
-        )
-    grouped = (
-        sized.where(F.col("bucket_size").between(2, cfg.max_bucket_size))
-        .groupBy("band_hash")
-        .agg(F.collect_list("image_id").alias("ids"))
+    # a bare column when every row is stored: a CASE here would be
+    # projected below the key exchange and shuffle every id twice
+    sid = F.col(id_col) if stored is None else F.when(stored, F.col(id_col))
+    w = Window.partitionBy(*keys)
+    sized = rows.select(
+        "*",
+        F.count(sid).over(w).alias("bucket_size"),
+        F.count(F.lit(1)).over(w).alias("n_rows"),
+        F.min(sid).over(w).alias("hub"),
     )
-    return (
-        grouped.select(F.explode("ids").alias("src"), "ids")
-        .select("src", F.explode("ids").alias("dst"))
-        .where(F.col("src") < F.col("dst"))
-    )
+    return sized if funnel is None else sized.observe(funnel[0], *funnel[1])
 
 
-def _pairs_star(
-    bands: DataFrame, cfg: MhapConfig, funnel_obs: Observation | None = None
+def capped_bucket_pairs(
+    rows: DataFrame, keys: list[str], id_col: str, cap: int,
+    stored=None, carry: tuple[str, ...] = (), funnel=None,
 ) -> DataFrame:
+    """``(src, dst, l, r)``, src < dst, once per shared capped bucket;
+    ``l``/``r`` are the members: structs ``(id, *carry, stored)``, or bare
+    ids when there is nothing to carry.
+
+    A bucket with ≥ 2 rows and 1..``cap`` stored rows collects its members
+    (the rest are dropped before any list forms); each member pairs with
+    each stored member, keeping ``l != r`` and ``(not l.stored or l < r)``.
+    So each unordered pair with a stored side appears once, and a bucket
+    emits at most rows × cap pairs.  The groupBy reuses the window's hash
+    partitioning: one exchange on the key.  With every row stored the
+    flag is left out and the test is ``l < r`` alone — on 10k rows and 4
+    cores the constant flag, its list filter and least/greatest cost
+    about 20 % of the emission."""
+    sized = sized_buckets(rows, keys, id_col, stored, funnel)
+    fields = list(carry) + ([] if stored is None else [stored.alias("stored")])
+    member = F.struct(F.col(id_col).alias("id"), *fields) if fields else F.col(id_col)
+    members = (
+        sized.where(
+            (F.col("n_rows") >= 2) & F.col("bucket_size").between(1, cap)
+        )
+        .groupBy(*keys)
+        .agg(F.collect_list(member).alias("ms"))
+    )
+    l, r = F.col("l"), F.col("r")
+    lid, rid = (l["id"], r["id"]) if fields else (l, r)
+    if stored is None:
+        rs, keep, src, dst = F.col("ms"), lid < rid, lid, rid
+    else:
+        rs = F.filter("ms", lambda m: m["stored"])
+        keep = (lid != rid) & (~l["stored"] | (lid < rid))
+        src, dst = F.least(lid, rid), F.greatest(lid, rid)
+    return (
+        members.select("ms", rs.alias("rs"))
+        .select(F.explode("ms").alias("l"), "rs")
+        .select("l", F.explode("rs").alias("r"))
+        .where(keep)
+        .select(src.alias("src"), dst.alias("dst"), "l", "r")
+    )
+
+
+def _pairs_star(bands: DataFrame, cfg: MhapConfig, funnel=None) -> DataFrame:
     """Star emission: one (bucket-min → member) edge per bucket member —
     O(n) per bucket.  Connectivity within a bucket is preserved through the
     hub, so the downstream connected-components output is unchanged for any
@@ -165,17 +196,7 @@ def _pairs_star(
     tests/test_star_mode.py (including the oversize mega adversary)."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy("band_hash")
-    sized = bands.select(
-        "band_hash",
-        "image_id",
-        F.count(F.lit(1)).over(w).alias("bucket_size"),
-        F.min("image_id").over(w).alias("src"),
-    )
-    if funnel_obs is not None:
-        sized = sized.observe(
-            funnel_obs, *_funnel_exprs(cfg, F.col("image_id") == F.col("src"))
-        )
+    sized = sized_buckets(bands, ["band_hash"], "image_id", funnel=funnel)
     # Salt path, fused into the SAME chain: every row emits AT MOST ONE edge
     # (normal member → hub edge; oversize member → sub-hub edge; oversize
     # sub-hub row → chain edge to the bucket min), so the three former
@@ -204,13 +225,13 @@ def _pairs_star(
     is_subhub = F.col("image_id") == F.col("sub_hub")
     keep = F.when(
         over,
-        F.when(is_subhub, F.col("sub_hub") != F.col("src")).otherwise(F.lit(True)),
+        F.when(is_subhub, F.col("sub_hub") != F.col("hub")).otherwise(F.lit(True)),
     ).otherwise(
-        (F.col("bucket_size") >= 2) & (F.col("image_id") != F.col("src"))
+        (F.col("bucket_size") >= 2) & (F.col("image_id") != F.col("hub"))
     )
     return sub.where(keep).select(
         F.when(over & ~is_subhub, F.col("sub_hub"))
-        .otherwise(F.col("src"))
+        .otherwise(F.col("hub"))
         .alias("src"),
         F.when(over & is_subhub, F.col("sub_hub"))
         .otherwise(F.col("image_id"))
@@ -219,53 +240,18 @@ def _pairs_star(
     )
 
 
-def probe_candidates(
-    probe_sigs: DataFrame, indexed_sigs: DataFrame, cfg: MhapConfig,
-    funnel_obs: Observation | None = None,
-) -> DataFrame:
-    """Two-table mode — the reference's ``-q`` usage (stream query sequences
-    against an indexed set, mhap/main/MhapMain.java:511-541;
-    ``findMatches(toSelf=false)`` mhap/impl/MinHashSearch.java:200): probe rows
-    are matched against the indexed table with no pair-order pruning.
-
-    Returns (probe_id, index_id, votes ≥ gate).  The indexed side's bucket
-    sizes are capped exactly like the pairs-mode path.
-
-    ``funnel_obs`` (optional) rides the INDEX side's bucket sizes — in probe
-    mode ``candidate_pairs_generated`` therefore counts both-stored bucket
-    pairs (the symmetric-index formula), a lower bound on probe candidates;
-    the bucket counts/cap/max metrics are exact for the index."""
-    probe = exploded_bands(probe_sigs).withColumnRenamed("image_id", "probe_id")
-    index = exploded_bands(indexed_sigs).withColumnRenamed("image_id", "index_id")
-    sizes = bucket_sizes(index)
-    if funnel_obs is not None:
-        sizes = sizes.observe(funnel_obs, *_funnel_exprs(cfg))
-    index_ok = index.join(
-        scaled(sizes.where(F.col("bucket_size") <= cfg.max_bucket_size), cfg),
-        ["band_hash"],
-    )
-    return (
-        probe.join(scaled(index_ok, cfg), ["band_hash"])
-        .where(F.col("probe_id") != F.col("index_id"))
-        .groupBy("probe_id", "index_id")
-        .agg(F.count(F.lit(1)).alias("votes"))
-        .filter(F.col("votes") >= F.lit(cfg.min_band_matches()))
-    )
-
-
 def candidate_pairs(
     signatures: DataFrame,
     cfg: MhapConfig,
     funnel_obs: Observation | None = None,
-    keep_oversize_flag: bool = False,
 ) -> DataFrame:
-    """signatures → (src, dst, votes) with src < dst, votes ≥ gate.
+    """signatures → (src, dst, votes, ...) with src < dst, votes ≥ gate.
 
     mode "pairs": votes = number of shared bands (shared slots when
     rows_per_band=1 — exactly the reference's vote semantics,
     mhap/impl/MinHashSearch.java:161-204), gate = min_band_matches.
     mode "star": linear-cost emission for cluster workloads; gate =
-    star_min_votes.
+    star_min_votes; adds ``any_oversize``.
 
     ``funnel_obs``: optional Observation — the bucket-funnel metrics
     (n_buckets, capped, max size, candidates generated) are then computed as
@@ -274,49 +260,32 @@ def candidate_pairs(
 
     With cfg.min_store_shingles > 0 (the reference's --min-store-length,
     mhap/main/MhapMain.java:79): rows below the threshold probe the index
-    but are not stored in it — implemented as the asymmetric probe join
-    (probe side = everyone, index side = stored rows only) with unordered
-    canonicalization.  A both-stored pair is found from either direction
-    with identical votes (same shared-band set), so groupBy-max dedup is
-    exact; a (short, long) pair is found only via the long row's index
-    entry; (short, short) pairs are skipped — exactly the reference's
-    index-size/recall trade.  Star mode has no probe/store asymmetry
-    (hub emission), so combining them is rejected loudly.
+    but are not stored in it — the ``stored`` flag of the one pairs window,
+    so a bucket's cap and funnel count its stored rows only; a (short,
+    long) pair is found through the long row, (short, short) pairs are
+    skipped — exactly the reference's index-size/recall trade.  Star mode
+    has no probe/store asymmetry (hub emission), so combining them is
+    rejected loudly.
     """
-    if cfg.min_store_shingles > 0:
-        if cfg.candidate_mode == "star":
+    funnel = None
+    if funnel_obs is not None:
+        funnel = (funnel_obs, _funnel_exprs(cfg, F.col("image_id") == F.col("hub")))
+    if cfg.candidate_mode == "star":
+        if cfg.min_store_shingles > 0:
             raise ValueError(
                 "min_store_shingles applies to pairs candidate mode; "
                 "star-mode hub emission has no probe/store asymmetry"
             )
-        stored = signatures.where(
-            F.col("n_shingles") >= F.lit(cfg.min_store_shingles)
-        )
-        found = probe_candidates(signatures, stored, cfg, funnel_obs=funnel_obs)
-        return (
-            found.select(
-                F.least("probe_id", "index_id").alias("src"),
-                F.greatest("probe_id", "index_id").alias("dst"),
-                "votes",
-            )
-            .groupBy("src", "dst")
-            .agg(F.max("votes").alias("votes"))
-        )
-    bands = exploded_bands(signatures)
-    if cfg.candidate_mode == "star":
-        pairs = _pairs_star(bands, cfg, funnel_obs=funnel_obs)
+        pairs = _pairs_star(exploded_bands(signatures), cfg, funnel=funnel)
         gate = cfg.star_min_votes
         # edges that EVER came out of an oversize (salted) bucket pass at
         # votes ≥ 1: sub-bucket membership jitters across bands when bucket
         # sizes change n_salt, so the vote gate would split an edge's votes
         # and fragment the mega-cluster; stage-2 verify is the real filter
         # for these (volume stays linear — size−1 edges per bucket).
-        # ``keep_oversize_flag`` carries the flag downstream so the pipeline
-        # can measure the purity of the votes≥1 relaxation (how many
-        # oversize-relaxed edges survive verify).
-        cols = ["src", "dst", "votes"] + (
-            ["any_oversize"] if keep_oversize_flag else []
-        )
+        # ``any_oversize`` rides downstream so the pipeline can measure the
+        # purity of the votes≥1 relaxation (how many oversize-relaxed edges
+        # survive verify).
         return (
             pairs.groupBy("src", "dst")
             .agg(
@@ -327,9 +296,17 @@ def candidate_pairs(
                 F.col("votes")
                 >= F.when(F.col("any_oversize"), F.lit(1)).otherwise(F.lit(gate))
             )
-            .select(*cols)
         )
-    pairs = _pairs_grouped_onepass(bands, cfg, funnel_obs=funnel_obs)
+    stored = None
+    if cfg.min_store_shingles > 0:
+        stored = F.col("n_shingles") >= F.lit(cfg.min_store_shingles)
+    bands = signatures.select(
+        "image_id", "n_shingles", F.explode("bands").alias("band_hash")
+    )
+    pairs = capped_bucket_pairs(
+        bands, ["band_hash"], "image_id", cfg.max_bucket_size,
+        stored=stored, funnel=funnel,
+    )
     return (
         pairs.groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("votes"))

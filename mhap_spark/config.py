@@ -86,8 +86,10 @@ class MhapConfig:
     # in the band index but still PROBE it, so a
     # (short, long) pair is found via the long row's index entry while
     # (short, short) pairs are skipped — the reference's asymmetric
-    # index-size/recall trade.  0 disables (symmetric index).  Pairs
-    # mode only; star mode's hub emission has no probe/store asymmetry.
+    # index-size/recall trade.  It is the ``stored`` flag of the one pairs
+    # window (candidates.capped_bucket_pairs), so the bucket cap counts
+    # stored rows only.  0 disables (symmetric index).  Pairs mode only;
+    # star mode's hub emission has no probe/store asymmetry.
     min_store_shingles: int = 0
 
     # --- clustering ---

@@ -271,26 +271,15 @@ def substring_dup_pairs(
     A global suffix array cannot shard; winnowed k-gram fingerprints can:
     any pair sharing an exact run of ≥ window + k − 1 characters shares a
     fingerprint (see winnow), so the pair join on the fingerprint hash is
-    an exact blocking for long-substring duplication.  Same bucket-cap
-    discipline as every other pair generator; votes = number of shared
-    fingerprints (monotone in shared-substring length)."""
-    from pyspark.sql import Window
+    an exact blocking for long-substring duplication.  Pairs come from
+    candidates.capped_bucket_pairs, the MinHash band buckets' emitter;
+    votes = number of shared fingerprints (monotone in shared-substring
+    length)."""
+    from mhap_spark.candidates import capped_bucket_pairs
 
-    # one-pass bucket-capped pair emission (round-6, guide §2.4): the former
-    # sizes-join + fingerprint self-join evaluated the winnowing kernel FOUR
-    # times (plan audit: 4 MapInPandas nodes) — the window count rides the
-    # same exchange as the collect_list groupBy, over-cap fingerprints are
-    # dropped before any list materializes, and the kernel runs once.
     fps = winnowed_fingerprints(df, k=k, window=window, id_col=id_col, text_col=text_col)
-    w = Window.partitionBy("fp")
-    ok = fps.withColumn("bs", F.count(F.lit(1)).over(w)).where(
-        F.col("bs").between(2, max_bucket_size)
-    )
-    grouped = ok.groupBy("fp").agg(F.collect_list("doc_id").alias("ids"))
     return (
-        grouped.select(F.explode("ids").alias("src"), "ids")
-        .select("src", F.explode("ids").alias("dst"))
-        .where(F.col("src") < F.col("dst"))
+        capped_bucket_pairs(fps, ["fp"], "doc_id", max_bucket_size)
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("n_shared_fp"))
         .where(F.col("n_shared_fp") >= F.lit(min_shared))
@@ -354,9 +343,9 @@ def simhash_pairs_from_sketches(
     any pair differing in ≤ max_hamming bits shares at least one chunk
     verbatim — pigeonhole over max_hamming+1 buckets — making blocking recall
     exactly 1.0 (up to the bucket cap).  Exact Hamming via bit_count(xor)
-    JVM-side.  Chunk buckets above ``max_bucket_size`` are dropped (counted
-    in a pre-pass before any join) — same noise-suppression shape as the
-    MinHash band buckets."""
+    JVM-side.  Pairs come from candidates.capped_bucket_pairs, the MinHash
+    band buckets' emitter: chunk buckets above ``max_bucket_size`` are
+    dropped before any list forms."""
     n_chunks = max_hamming + 1
     if not 1 <= n_chunks <= 64:
         raise ValueError(f"max_hamming must be in [0, 63], got {max_hamming}")
@@ -377,26 +366,16 @@ def simhash_pairs_from_sketches(
             )
         ).alias("c"),
     ).select("doc_id", "simhash", "c.chunk_idx", "c.chunk_val")
-    from pyspark.sql import Window
+    from mhap_spark.candidates import capped_bucket_pairs
 
-    # one-pass bucket-capped pair emission (round-6, guide §2.4; same shape
-    # as substring_dup_pairs): window count + filter + collect_list of
-    # (doc_id, simhash) structs on ONE exchange — the former sizes-join +
-    # chunk self-join evaluated the SimHash kernel four times.
-    w = Window.partitionBy("chunk_idx", "chunk_val")
-    ok = chunks.withColumn("bs", F.count(F.lit(1)).over(w)).where(
-        F.col("bs").between(2, max_bucket_size)
-    )
-    grouped = ok.groupBy("chunk_idx", "chunk_val").agg(
-        F.collect_list(F.struct("doc_id", "simhash")).alias("ms")
-    )
     return (
-        grouped.select(F.explode("ms").alias("l"), "ms")
-        .select("l", F.explode("ms").alias("r"))
-        .where(F.col("l.doc_id") < F.col("r.doc_id"))
+        capped_bucket_pairs(
+            chunks, ["chunk_idx", "chunk_val"], "doc_id", max_bucket_size,
+            carry=("simhash",),
+        )
         .select(
-            F.col("l.doc_id").alias("src"),
-            F.col("r.doc_id").alias("dst"),
+            "src",
+            "dst",
             F.bit_count(F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))).alias(
                 "hamming"
             ),

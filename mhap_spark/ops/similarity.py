@@ -101,8 +101,8 @@ def embedding_near_dup_pairs(
     correct and oracle-checkable, but O(block²) — at web scale use
     :func:`lsh_bucketed_neighbors` or :func:`ivf_neighbors`, whose candidate
     sets are bucketed and capped.  As a guard, blocks larger than
-    ``max_block_size`` are dropped via a count pre-pass (same cap discipline
-    as candidates.bucket_sizes) so one hot label can never go quadratic."""
+    ``max_block_size`` are dropped by a window count before any block forms
+    (same cap discipline as candidates.sized_buckets) so one hot label can never go quadratic."""
     from pyspark.sql import Window
 
     # Round-6 physical rewrite (same output, pinned bit-exact — see
@@ -444,7 +444,7 @@ def lsh_bucketed_neighbors(
     * bucket sizes are a window count on the bucket exchange and buckets
       above ``max_bucket_size`` are dropped BEFORE any pair is formed — a
       hot bucket (all-zeros embeddings, shard-level dup runs) can never go
-      quadratic (same cap discipline as candidates.bucket_sizes);
+      quadratic (same cap discipline as candidates.sized_buckets);
     * each surviving bucket is scored as one block by the vectorized
       ``_block_cos_pairs_pdf`` kernel; vectors cross the shuffle once per
       (row, table) with the bucket code, and no vectors are joined back;

@@ -102,29 +102,23 @@ def run_pipeline(
     else:
         t1 = time.time()
         funnel_obs = Observation()
-        # purity of the oversize votes≥1 relaxation (star mode only): count
-        # oversize-relaxed edges entering verify vs surviving it — both ride
-        # the pairs materialization as Observations, zero extra jobs
-        track_purity = cfg.candidate_mode == "star"
-        cands = candidate_pairs(
-            signatures, cfg, funnel_obs=funnel_obs,
-            keep_oversize_flag=track_purity,
-        )
-        if track_purity:
-            obs_in, obs_out = Observation(), Observation()
+        cands = candidate_pairs(signatures, cfg, funnel_obs=funnel_obs)
+        if cfg.candidate_mode == "star":
+            # purity of the oversize votes≥1 relaxation: count oversize-
+            # relaxed edges entering verify vs surviving it — both ride the
+            # pairs materialization as Observations, zero extra jobs
+            purity_obs = (Observation(), Observation())
             oversize_count = F.coalesce(
                 F.sum(F.col("any_oversize").cast("long")), F.lit(0)
             )
             cands = cands.observe(
-                obs_in, oversize_count.alias("oversize_edges_to_verify")
+                purity_obs[0], oversize_count.alias("oversize_edges_to_verify")
             )
-            pairs = verified_pairs(cands, signatures, cfg)
+        pairs = verified_pairs(cands, signatures, cfg)
+        if purity_obs is not None:
             pairs = pairs.observe(
-                obs_out, oversize_count.alias("oversize_edges_verified")
+                purity_obs[1], oversize_count.alias("oversize_edges_verified")
             ).drop("any_oversize")
-            purity_obs = (obs_in, obs_out)
-        else:
-            pairs = verified_pairs(cands, signatures, cfg)
         if store is None:
             pairs = pairs.persist()  # consumed by CC and by the caller
         if store is not None:

@@ -109,8 +109,9 @@ class BandIndex:
     def probe(self, probe_sigs: DataFrame, cfg: MhapConfig, batch_id: int) -> DataFrame:
         """(src, dst, votes ≥ gate) of batch ``batch_id`` after its append:
         src < dst within the batch (what candidates.candidate_pairs finds
-        on its signatures), and src in the batch with dst earlier (what
-        candidates.probe_candidates finds against the earlier signatures).
+        on its signatures), and src in the batch with dst earlier — every
+        (batch row, earlier row) pair sharing ≥ gate bands whose earlier-
+        side bucket holds at most ``max_bucket_size`` earlier rows.
         Bucket sizes are counted per (band_hash, cur), so each side keeps
         its own cap."""
         idx = _read_history(

@@ -67,9 +67,10 @@ def jaccard_to_identity_col(jaccard, k: int):
 def verified_pairs(
     candidates: DataFrame, signatures: DataFrame, cfg: MhapConfig
 ) -> DataFrame:
-    """(src, dst, votes) ⋈ bottomk×2 → (src, dst, votes, jaccard, score) with
-    score ≥ threshold.  Two shuffle joins against the (much wider) signature
-    table; Catalyst prunes signatures to (image_id, bottomk) at the scan.
+    """(src, dst, votes, ...) ⋈ bottomk×2 → (src, dst, votes, jaccard, score,
+    ...) with score ≥ threshold.  Two shuffle joins against the (much wider)
+    signature table; Catalyst prunes signatures to (image_id, bottomk) at
+    the scan.
     Shuffle compression tames the array redundancy: sorted small-magnitude
     int64 arrays compress ~10× under lz4.
 
@@ -117,10 +118,10 @@ def verified_pairs(
     gate = (F.col("score") >= F.lit(cfg.threshold)) & (
         F.col("jaccard") >= F.lit(cfg.min_jaccard)
     )
-    # the star-mode oversize flag (candidates.keep_oversize_flag) rides
-    # through so the pipeline's purity Observation can count which
+    # candidate columns after (src, dst, votes) ride through — star mode's
+    # any_oversize lets the pipeline's purity Observation count which
     # vote-gate-relaxed edges actually survive verification
-    extra = ["any_oversize"] if "any_oversize" in candidates.columns else []
+    extra = [c for c in candidates.columns if c not in ("src", "dst", "votes")]
     return scored.filter(gate).select(
         "src", "dst", "votes", "jaccard", "score", *extra
     )

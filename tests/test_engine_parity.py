@@ -108,24 +108,84 @@ def test_candidates_match_oracle(spark, corpus, oracle_state, engine_sigs):
 @pytest.mark.parametrize("cap", [512, 4])
 def test_pairs_mode_funnel_is_exact(spark, engine_sigs, cap):
     """The pairs-mode funnel Observation rides the single window plan: hub
-    rows (image_id == bucket min) carry the per-bucket sums, so every metric
-    equals the one-row-per-bucket aggregate over ``bucket_sizes`` — with and
-    without over-cap buckets — and requesting it leaves the pairs unchanged."""
+    rows (image_id == minimum stored id) carry the per-bucket sums, so every
+    metric equals the one-row-per-bucket aggregate over ``bucket_sizes`` of
+    the stored rows' bands — with and without over-cap buckets, with and
+    without the store filter — and requesting it leaves the pairs
+    unchanged."""
     from pyspark.sql import Observation
 
     from mhap_spark.candidates import _funnel_exprs, bucket_sizes, exploded_bands
 
-    sig_df, _ = engine_sigs
-    cfg = CFG.with_overrides(max_bucket_size=cap)
-    obs = Observation()
-    with_obs = {tuple(r) for r in candidate_pairs(sig_df, cfg, funnel_obs=obs).collect()}
-    funnel = dict(obs.get)
-    want = bucket_sizes(exploded_bands(sig_df)).agg(*_funnel_exprs(cfg)).first().asDict()
-    assert funnel == want
-    assert want["candidate_pairs_generated"] > 0
-    if cap < CFG.max_bucket_size:
-        assert want["n_buckets_capped"] > 0, "fixture must produce over-cap buckets"
-    assert with_obs == {tuple(r) for r in candidate_pairs(sig_df, cfg).collect()}
+    sig_df, pdf = engine_sigs
+    for store in (0, int(pdf["n_shingles"].median())):
+        cfg = CFG.with_overrides(max_bucket_size=cap, min_store_shingles=store)
+        obs = Observation()
+        with_obs = {
+            tuple(r) for r in candidate_pairs(sig_df, cfg, funnel_obs=obs).collect()
+        }
+        funnel = dict(obs.get)
+        stored = sig_df.where(F.col("n_shingles") >= F.lit(store))
+        want = (
+            bucket_sizes(exploded_bands(stored)).agg(*_funnel_exprs(cfg)).first().asDict()
+        )
+        assert funnel == want, store
+        assert want["candidate_pairs_generated"] > 0
+        if cap < CFG.max_bucket_size:
+            assert want["n_buckets_capped"] > 0, "fixture must produce over-cap buckets"
+        assert with_obs == {tuple(r) for r in candidate_pairs(sig_df, cfg).collect()}
+
+
+def _plan_nodes(df) -> dict:
+    """Operator counts of ``df``'s physical plan (before execution)."""
+    import re
+    from collections import Counter
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    seen = Counter()
+    for line in plan.splitlines():
+        m = re.match(r"^[\s:+\-|*()\d]*(\w+)", line)
+        if not m:
+            continue
+        name = m.group(1)
+        if name == "Exchange" and "hashpartitioning" in line:
+            name = "HashExchange"
+        seen["Join" if name.endswith("Join") else name] += 1
+    return {k: seen[k] for k in ("MapInPandas", "Window", "HashExchange", "Join")}
+
+
+def test_capped_bucket_plans(spark, input_df):
+    """Every capped-bucket pair generator plans as ONE kernel pass, one
+    window over the bucket key, two hash exchanges (the bucket key, then
+    the pair aggregate) and no join — the store filter included, whose
+    former two-table probe join ran the sketch kernel three times over an
+    unpersisted source.  Star mode keeps its two windows (bucket, then
+    salted sub-bucket) on the same two exchanges."""
+    from mhap_spark.config import PRESET_SCALE
+    from mhap_spark.ops.dedup import (
+        minhash_lsh_doc_pairs,
+        simhash_near_dup_pairs,
+        substring_dup_pairs,
+    )
+
+    sigs = compute_signatures(input_df, CFG, None)  # unpersisted source
+    docs = input_df.select(
+        F.col("image_id").alias("doc_id"), F.col("caption").alias("text")
+    )
+    one_pass = {"MapInPandas": 1, "Window": 1, "HashExchange": 2, "Join": 0}
+    plans = {
+        "pairs": candidate_pairs(sigs, CFG),
+        "pairs_store": candidate_pairs(sigs, CFG.with_overrides(min_store_shingles=50)),
+        "minhash_lsh_doc_pairs": minhash_lsh_doc_pairs(docs),
+        "substring_dup_pairs": substring_dup_pairs(docs),
+        "simhash_near_dup_pairs": simhash_near_dup_pairs(docs),
+    }
+    for name, df in plans.items():
+        assert _plan_nodes(df) == one_pass, name
+    star = candidate_pairs(compute_signatures(input_df, PRESET_SCALE, None), PRESET_SCALE)
+    assert _plan_nodes(star) == {
+        "MapInPandas": 1, "Window": 2, "HashExchange": 2, "Join": 0
+    }
 
 
 def test_verified_pairs_match_oracle(spark, corpus, oracle_state, engine_sigs):

@@ -5,10 +5,16 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
-from mhap_spark.candidates import candidate_pairs, probe_candidates
+from mhap_spark.candidates import (
+    _funnel_exprs,
+    bucket_sizes,
+    candidate_pairs,
+    exploded_bands,
+)
 from mhap_spark.config import MhapConfig
+from mhap_spark.hints import scaled
 from mhap_spark.minhash import compute_signatures
 from mhap_spark.streaming import IncrementalDedup, read_image_stream
 from mhap_spark.synth import INPUT_SCHEMA_DDL, corpus_to_rows, generate_corpus
@@ -20,6 +26,40 @@ CFG = MhapConfig(num_hashes=128, min_jaccard=0.2)
 def _df(spark, corpus, lo, hi):
     rows = corpus_to_rows(corpus)[lo:hi]
     return spark.createDataFrame(rows, INPUT_SCHEMA_DDL)
+
+
+def probe_candidates(
+    probe_sigs: DataFrame, indexed_sigs: DataFrame, cfg: MhapConfig,
+    funnel_obs: Observation | None = None,
+) -> DataFrame:
+    """Two-table mode — the reference's ``-q`` usage (stream query sequences
+    against an indexed set, mhap/main/MhapMain.java:511-541;
+    ``findMatches(toSelf=false)`` mhap/impl/MinHashSearch.java:200): probe rows
+    are matched against the indexed table with no pair-order pruning.
+
+    Returns (probe_id, index_id, votes ≥ gate).  The indexed side's bucket
+    sizes are capped exactly like the pairs-mode path.
+
+    ``funnel_obs`` (optional) rides the INDEX side's bucket sizes — in probe
+    mode ``candidate_pairs_generated`` therefore counts both-stored bucket
+    pairs (the symmetric-index formula), a lower bound on probe candidates;
+    the bucket counts/cap/max metrics are exact for the index."""
+    probe = exploded_bands(probe_sigs).withColumnRenamed("image_id", "probe_id")
+    index = exploded_bands(indexed_sigs).withColumnRenamed("image_id", "index_id")
+    sizes = bucket_sizes(index)
+    if funnel_obs is not None:
+        sizes = sizes.observe(funnel_obs, *_funnel_exprs(cfg))
+    index_ok = index.join(
+        scaled(sizes.where(F.col("bucket_size") <= cfg.max_bucket_size), cfg),
+        ["band_hash"],
+    )
+    return (
+        probe.join(scaled(index_ok, cfg), ["band_hash"])
+        .where(F.col("probe_id") != F.col("index_id"))
+        .groupBy("probe_id", "index_id")
+        .agg(F.count(F.lit(1)).alias("votes"))
+        .filter(F.col("votes") >= F.lit(cfg.min_band_matches()))
+    )
 
 
 def test_probe_candidates_vs_self_join(spark):
@@ -99,6 +139,31 @@ def test_min_store_shingles_filter(spark):
     }
     assert got == want
     assert len(want) < len(base), "median threshold must actually drop pairs"
+
+    # under a bucket cap the stored rows alone are checked against it: the
+    # asymmetric probe join (stored rows as the index side, canonicalized
+    # with max votes) is the reference
+    cfg_cap = cfg_store.with_overrides(max_bucket_size=4)
+    stored = sigs.where(F.col("n_shingles") >= F.lit(thr))
+    want_cap = {
+        (r["src"], r["dst"]): r["votes"]
+        for r in probe_candidates(sigs, stored, cfg_cap)
+        .groupBy(
+            F.least("probe_id", "index_id").alias("src"),
+            F.greatest("probe_id", "index_id").alias("dst"),
+        )
+        .agg(F.max("votes").alias("votes"))
+        .collect()
+    }
+    got_cap = {
+        (r["src"], r["dst"]): r["votes"]
+        for r in candidate_pairs(sigs, cfg_cap).collect()
+    }
+    assert got_cap == want_cap
+    # not vacuous: buckets whose rows exceed the cap but whose stored rows
+    # do not still emit, so the filter finds more pairs than no filter does
+    n_cap_all = candidate_pairs(sigs, CFG.with_overrides(max_bucket_size=4)).count()
+    assert len(got_cap) > n_cap_all
 
     # star mode has no probe/store asymmetry — must refuse loudly
     with pytest.raises(ValueError):
@@ -283,8 +348,8 @@ def test_windowed_event_counts_with_watermark(spark, tmp_path):
 def _reference_feeds(spark, chunks, cfg):
     """Per batch k, computed without the band index: ``(k, sigs, cands,
     both)`` with the batch's signatures, the candidates the sink must
-    verify — stage 1 on the batch's own signatures plus probe_candidates
-    against the signatures of every earlier batch — and the signatures of
+    verify — stage 1 on the batch's own signatures plus the probe_candidates
+    reference against the signatures of every earlier batch — and the signatures of
     batches up to k."""
     earlier, cached = None, []
     try:
