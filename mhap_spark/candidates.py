@@ -122,36 +122,41 @@ def capped_bucket_pairs(
     ids when there is nothing to carry.
 
     A bucket with ≥ 2 rows and 1..``cap`` stored rows collects its members
-    (the rest are dropped before any list forms); each member pairs with
-    each stored member, keeping ``l != r`` and ``(not l.stored or l < r)``.
-    So each unordered pair with a stored side appears once, and a bucket
-    emits at most rows × cap pairs.  The groupBy reuses the window's hash
-    partitioning: one exchange on the key.  With every row stored the
-    flag is left out and the test is ``l < r`` alone — on 10k rows and 4
-    cores the constant flag, its list filter and least/greatest cost
-    about 20 % of the emission."""
+    and, in the same aggregate, its stored members (the rest are dropped
+    before any list forms); each member pairs with each stored member,
+    keeping ``l != r`` and ``(not l.stored or l < r)``.  So each unordered
+    pair with a stored side appears once, and a bucket emits at most
+    rows × cap pairs.  The groupBy reuses the window's hash partitioning:
+    one exchange on the key.  With every row stored the flag and the
+    second list are left out and the test is ``l < r`` alone — on 10k rows
+    and 4 cores the constant flag, a stored-member list (then a filter
+    over the members) and least/greatest cost about 20 % of the
+    emission."""
     sized = sized_buckets(rows, keys, id_col, stored, funnel)
     fields = list(carry) + ([] if stored is None else [stored.alias("stored")])
     member = F.struct(F.col(id_col).alias("id"), *fields) if fields else F.col(id_col)
+    lists = [F.collect_list(member).alias("ms")]
+    if stored is not None:
+        # collect_list skips nulls, so this keeps the stored members only
+        lists.append(F.collect_list(F.when(stored, member)).alias("rs"))
     members = (
         sized.where(
             (F.col("n_rows") >= 2) & F.col("bucket_size").between(1, cap)
         )
         .groupBy(*keys)
-        .agg(F.collect_list(member).alias("ms"))
+        .agg(*lists)
     )
     l, r = F.col("l"), F.col("r")
     lid, rid = (l["id"], r["id"]) if fields else (l, r)
     if stored is None:
-        rs, keep, src, dst = F.col("ms"), lid < rid, lid, rid
+        rs, keep, src, dst = "ms", lid < rid, lid, rid
     else:
-        rs = F.filter("ms", lambda m: m["stored"])
+        rs = "rs"
         keep = (lid != rid) & (~l["stored"] | (lid < rid))
         src, dst = F.least(lid, rid), F.greatest(lid, rid)
     return (
-        members.select("ms", rs.alias("rs"))
-        .select(F.explode("ms").alias("l"), "rs")
-        .select("l", F.explode("rs").alias("r"))
+        members.select(F.explode("ms").alias("l"), rs)
+        .select("l", F.explode(rs).alias("r"))
         .where(keep)
         .select(src.alias("src"), dst.alias("dst"), "l", "r")
     )

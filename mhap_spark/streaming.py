@@ -5,8 +5,9 @@ The reference is strictly batch (SURVEY.md §2.10); its closest feature is the
 (mhap/main/MhapMain.java:511-541).  This module expresses that incrementally:
 new rows arrive as a stream, each micro-batch is sketched, appended to the
 band index, and probed against it — one plan finds the pairs within the
-batch and the pairs against every earlier batch — so duplicate detection
-runs continuously as data lands.
+batch and the pairs against every earlier batch, and tags each pair with
+its side (``intra_batch``) — so duplicate detection runs continuously as
+data lands.
 
 ``foreachBatch`` is the right tool (not stateful streaming operators): the
 probe is a batch join against a large, growing table — exactly what
@@ -24,6 +25,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
+from mhap_spark.candidates import sized_buckets
 from mhap_spark.config import MhapConfig
 from mhap_spark.freq import FreqTable
 from mhap_spark.minhash import SIGNATURE_SCHEMA, compute_signatures
@@ -80,8 +82,9 @@ class BandIndex:
     the index scan: per-batch cost is one columnar scan of two int64
     columns plus work proportional to the collision set, not to the index.
     Bucket-size capping stays exact: every index row of a probed band
-    survives the semi-join, so sizes computed on the surviving subset equal
-    the true bucket sizes for all probed bands.
+    survives the semi-join, so one window over the surviving collision set
+    (candidates.sized_buckets, keyed on band and side) counts the true
+    bucket sizes for all probed bands.
 
     An index in the earlier layout, which split every batch into per-prefix
     partition directories (``batch_id=N/<col>=P/``), cannot take new
@@ -107,13 +110,14 @@ class BandIndex:
         ).parquet(os.path.join(self.path, f"batch_id={batch_id}"))
 
     def probe(self, probe_sigs: DataFrame, cfg: MhapConfig, batch_id: int) -> DataFrame:
-        """(src, dst, votes ≥ gate) of batch ``batch_id`` after its append:
-        src < dst within the batch (what candidates.candidate_pairs finds
-        on its signatures), and src in the batch with dst earlier — every
-        (batch row, earlier row) pair sharing ≥ gate bands whose earlier-
-        side bucket holds at most ``max_bucket_size`` earlier rows.
-        Bucket sizes are counted per (band_hash, cur), so each side keeps
-        its own cap."""
+        """(src, dst, votes ≥ gate, intra_batch) of batch ``batch_id`` after
+        its append: src < dst within the batch (what
+        candidates.candidate_pairs finds on its signatures; intra_batch
+        True), and src in the batch with dst earlier (intra_batch False) —
+        every (batch row, earlier row) pair sharing ≥ gate bands whose
+        earlier-side bucket holds at most ``max_bucket_size`` earlier rows.
+        One window over the collision set sizes the buckets per
+        (band_hash, cur), so each side keeps its own cap."""
         idx = _read_history(
             probe_sigs.sparkSession, self.path, _INDEX_HISTORY, batch_id
         ).select(
@@ -128,36 +132,25 @@ class BandIndex:
         keys = probe.select("band_hash").distinct()
         # map-side semi filter: broadcast the (bounded) probe band set, scan
         # the (unbounded) index — collision rows only survive
-        relevant = idx.join(F.broadcast(keys), ["band_hash"]).persist()
-        try:
-            sizes = relevant.groupBy("band_hash", "cur").agg(
-                F.count(F.lit(1)).alias("bucket_size")
-            )
-            # sizes is bounded by the probed band count (tiny for lookup
-            # probes) — gate the no-broadcast hint on the config like every
-            # other join side instead of forbidding the broadcast outright
-            sizes_ok = sizes.where(F.col("bucket_size") <= cfg.max_bucket_size)
-            if cfg.no_broadcast_hints:
-                sizes_ok = sizes_ok.hint("shuffle_hash")
-            ok = relevant.join(sizes_ok, ["band_hash", "cur"])
-            out = (
-                ok.join(F.broadcast(probe), ["band_hash"])
-                .where(
-                    F.when(F.col("cur"), F.col("src") < F.col("dst")).otherwise(
-                        F.col("src") != F.col("dst")
-                    )
+        relevant = idx.join(F.broadcast(keys), ["band_hash"])
+        ok = sized_buckets(relevant, ["band_hash", "cur"], "dst").where(
+            F.col("bucket_size") <= cfg.max_bucket_size
+        )
+        return (
+            ok.join(F.broadcast(probe), ["band_hash"])
+            .where(
+                F.when(F.col("cur"), F.col("src") < F.col("dst")).otherwise(
+                    F.col("src") != F.col("dst")
                 )
-                .groupBy("src", "dst", "cur")
-                .agg(F.count(F.lit(1)).alias("votes"))
-                .filter(F.col("votes") >= F.lit(cfg.min_band_matches()))
-                .select("src", "dst", "votes")
             )
-            # materialize through the persisted collision set so the caller
-            # can consume it repeatedly without re-scanning the index
-            out = out.localCheckpoint(eager=True)
-        finally:
-            relevant.unpersist()
-        return out
+            .groupBy("src", "dst", "cur")
+            .agg(F.count(F.lit(1)).alias("votes"))
+            .filter(F.col("votes") >= F.lit(cfg.min_band_matches()))
+            .select("src", "dst", "votes", F.col("cur").alias("intra_batch"))
+            # one materialization the caller reads twice (verify's id set
+            # and its candidates) without re-scanning the index
+            .localCheckpoint(eager=True)
+        )
 
 
 class IncrementalDedup:
@@ -174,7 +167,9 @@ class IncrementalDedup:
     Duplicate coverage is complete: the batch is appended before it is
     probed, so one ``BandIndex.probe`` finds the pairs WITHIN the
     micro-batch and ACROSS batches.  Verify reads every bottom-k array from
-    the signature table, semi-joined to the candidates' ids.
+    the signature table, semi-joined to the candidates' ids.  ``matches/``
+    rows are ``(src, dst, votes, jaccard, score, intra_batch)``: the probe's
+    side tag rides through verify, and the keep manifest reads it.
 
     Each micro-batch is read and sketched once.  ``process_batch`` persists
     the batch (unless the caller already cached it, in which case it is
@@ -244,19 +239,19 @@ class IncrementalDedup:
         # counterpart of cluster.keep_manifest.  A row is dropped iff it has
         # a verified match to an earlier batch (first arrival wins) or to a
         # smaller id within its own batch (ids tie-break inside a batch,
-        # where arrival order is undefined).  Production-streaming
-        # semantics: the index holds ALL seen rows — kept or dropped — so
-        # "duplicate of a dropped row" still drops (no transitive-closure
-        # canonicalization; the batch pipeline's CC keep_manifest is the
-        # closure-exact variant).  PRECONDITION: image_id is unique across
-        # the stream's lifetime (the engine's row key, and what the file
-        # source + idempotent batch_id overwrite deliver) — the
-        # dst-in-this-batch classification below reads an id recurring in a
-        # LATER batch as an intra-batch match and would mis-orient that
-        # pair's drop, so process_batch rejects such a batch before any
-        # write.  Cost: a scan of earlier batches' ids for that guard, one
-        # re-read of the batch's just-written matches partition and one
-        # tiny per-batch write — off by default.
+        # where arrival order is undefined); each match's ``intra_batch``
+        # tag, set by the probe, says which side that is.  Production-
+        # streaming semantics: the index holds ALL seen rows — kept or
+        # dropped — so "duplicate of a dropped row" still drops (no
+        # transitive-closure canonicalization; the batch pipeline's CC
+        # keep_manifest is the closure-exact variant).  PRECONDITION:
+        # image_id is unique across the stream's lifetime — it is the row
+        # key, and a recurring id gives verify's image_id joins two sketches
+        # for one id, so its pairs come out duplicated and conflicting —
+        # so process_batch rejects such a batch before any write.  Cost: a
+        # scan of earlier batches' ids for that guard, one re-read of the
+        # batch's just-written matches partition and one tiny per-batch
+        # write — off by default.
         self.keep_manifest = keep_manifest
         self.keep_path = os.path.join(base_dir, "keep")
         self.bindex = BandIndex(os.path.join(base_dir, "band_index"))
@@ -275,10 +270,10 @@ class IncrementalDedup:
             batch_ids = batch_df.select("image_id")
             if self.keep_manifest:
                 # the keep manifest's documented precondition — image_id
-                # unique across the stream's lifetime — must fail LOUDLY: an
-                # id recurring in a later batch would be classified as an
-                # intra-batch match below and its pair's drop decision
-                # mis-oriented, silently violating first-arrival-wins.
+                # unique across the stream's lifetime — must fail LOUDLY:
+                # image_id is the row key, and a recurring id would give
+                # verify's image_id joins two sketches for one id, writing
+                # duplicated, conflicting matches and keep decisions.
                 # Checked before any write, so a rejected batch leaves
                 # nothing on disk.
                 earlier_ids = _read_history(
@@ -322,30 +317,23 @@ class IncrementalDedup:
                 os.path.join(self.match_path, f"batch_id={batch_id}")
             )
             if self.keep_manifest:
-                # classify each match by whether dst is in THIS batch:
-                # pairs-mode intra-batch matches are canonical src < dst
-                # (drop dst), while cross-batch probe matches carry the
-                # probe row in src and the earlier-indexed row in dst (drop
+                # the probe tagged each pair's side: an intra-batch match is
+                # canonical src < dst (drop dst), a cross-batch match carries
+                # the batch row in src and the earlier row in dst (drop
                 # src).  Read the matches back from the partition just
                 # written — one small file scan instead of recomputing the
                 # verify plan
-                m = spark.read.parquet(
-                    os.path.join(self.match_path, f"batch_id={batch_id}")
-                )
-                dst_in_batch = batch_ids.withColumnRenamed("image_id", "dst")
                 drops = (
-                    m.join(dst_in_batch, "dst", "left_semi")
-                    .select(F.col("dst").alias("image_id"))
-                    .unionByName(
-                        m.join(dst_in_batch, "dst", "left_anti").select(
-                            F.col("src").alias("image_id")
-                        )
+                    spark.read.parquet(
+                        os.path.join(self.match_path, f"batch_id={batch_id}")
+                    )
+                    .select(
+                        F.when(F.col("intra_batch"), F.col("dst"))
+                        .otherwise(F.col("src"))
+                        .alias("image_id")
                     )
                     .distinct()
                 )
-                # one left join, not anti+union: the drops subtree (parquet
-                # re-read + classification joins) would otherwise execute
-                # twice
                 keep = batch_ids.join(
                     drops.withColumn("keep", F.lit(False)), "image_id", "left"
                 ).select("image_id", F.coalesce("keep", F.lit(True)).alias("keep"))

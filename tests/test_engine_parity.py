@@ -159,8 +159,10 @@ def test_capped_bucket_plans(spark, input_df):
     window over the bucket key, two hash exchanges (the bucket key, then
     the pair aggregate) and no join — the store filter included, whose
     former two-table probe join ran the sketch kernel three times over an
-    unpersisted source.  Star mode keeps its two windows (bucket, then
-    salted sub-bucket) on the same two exchanges."""
+    unpersisted source, and which collects its stored members in the same
+    aggregate instead of filtering the member list.  Star mode keeps its
+    two windows (bucket, then salted sub-bucket) on the same two
+    exchanges."""
     from mhap_spark.config import PRESET_SCALE
     from mhap_spark.ops.dedup import (
         minhash_lsh_doc_pairs,
@@ -182,6 +184,10 @@ def test_capped_bucket_plans(spark, input_df):
     }
     for name, df in plans.items():
         assert _plan_nodes(df) == one_pass, name
+    # the stored members are collected beside the members, not filtered
+    # out of them by a lambda over the list
+    store_plan = plans["pairs_store"]._jdf.queryExecution().executedPlan().toString()
+    assert "filter(" not in store_plan and "lambda" not in store_plan
     star = candidate_pairs(compute_signatures(input_df, PRESET_SCALE, None), PRESET_SCALE)
     assert _plan_nodes(star) == {
         "MapInPandas": 1, "Window": 2, "HashExchange": 2, "Join": 0

@@ -542,7 +542,8 @@ def test_band_index_capped_bucket_adversary(spark, tmp_path):
     row of a probed band survives the broadcast semi-join, so the capped
     bucket sizes are the true ones.  The probe's candidate set, votes
     included, must equal the reference's for every batch, so a vote or cap
-    difference on a pair that then fails verify still shows."""
+    difference on a pair that then fails verify still shows, and each
+    probe row's ``intra_batch`` tag must say whether dst is in the batch."""
     import numpy as np
 
     cfg = CFG.with_overrides(max_bucket_size=8)
@@ -556,7 +557,11 @@ def test_band_index_capped_bucket_adversary(spark, tmp_path):
     sink = IncrementalDedup(banded_dir, cfg)
     for (k, sigs, cands, _), chunk in zip(_reference_feeds(spark, chunks, cfg), chunks):
         sink.process_batch(spark.createDataFrame(chunk, INPUT_SCHEMA_DDL), k)
-        got = sorted(tuple(r) for r in sink.bindex.probe(sigs, cfg, k).collect())
+        probed = sink.bindex.probe(sigs, cfg, k).collect()
+        ids_k = {r[0] for r in chunk}
+        for r in probed:
+            assert r["intra_batch"] == (r["dst"] in ids_k), (k, r)
+        got = sorted((r["src"], r["dst"], r["votes"]) for r in probed)
         assert got == sorted(tuple(r) for r in cands.collect()), k
         assert got, k
     want = _reference_matches(spark, chunks, cfg)
@@ -623,13 +628,20 @@ def _plant_uncommitted(base, batch_id):
             f.write("junk")
 
 
-def test_streaming_recovers_from_uncommitted_first_write(spark, tmp_path):
+def _names(keys):
+    """Column names of a physical-plan key list ``a#1L, b#2``."""
+    return {k.strip().split("#")[0] for k in keys.split(",")}
+
+
+def test_streaming_recovers_from_uncommitted_first_write(spark, tmp_path, monkeypatch):
     """Signature and band-index dirs holding only a _temporary subtree (crash
     mid-write of the first batch) must read as an empty history, not throw
     UNABLE_TO_INFER_SCHEMA on every replay, and the replay commits.  The
     same crash in batch 1, beside the committed batch 0, must leave the
     replay reading batch 0 as its history and writing the reference's
-    matches."""
+    matches.  The probe over an unpersisted signature source plans its
+    bucket sizes as ONE window over (band_hash, cur): no cached collision
+    set and no sizes aggregate joined back on that key."""
     rows = corpus_to_rows(generate_corpus(120, seed=13))
     chunks = [rows[:60], rows[60:]]
     base = str(tmp_path / "dedup")
@@ -638,8 +650,30 @@ def test_streaming_recovers_from_uncommitted_first_write(spark, tmp_path):
         assert not _has_part_files(os.path.join(base, sub))
     sink = IncrementalDedup(base, CFG, keep_manifest=True)
     b0 = spark.createDataFrame(chunks[0], INPUT_SCHEMA_DDL)
-    # the replay sees an empty index
-    assert sink.bindex.probe(compute_signatures(b0, CFG, None), CFG, 0).count() == 0
+    sigs0 = compute_signatures(b0, CFG, None)
+    plans = []
+    checkpoint = type(sigs0).localCheckpoint
+
+    def planned(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(df, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(type(sigs0), "localCheckpoint", planned)
+        # the replay sees an empty index
+        assert sink.bindex.probe(sigs0, CFG, 0).count() == 0
+    (plan,) = plans
+    lines = plan.splitlines()
+    # a Window line ends with its partition keys
+    windows = [ln for ln in lines if ln.lstrip(" :+-").startswith("Window [")]
+    assert len(windows) == 1, plan
+    assert _names(windows[0].rsplit("[", 1)[1].rstrip("]")) == {"band_hash", "cur"}
+    assert "InMemoryTableScan" not in plan, plan
+    join_keys = [
+        _names(ln.split("Join [", 1)[1].split("]", 1)[0])
+        for ln in lines if "Join [" in ln
+    ]
+    assert join_keys and {"band_hash", "cur"} not in join_keys, plan
     sink.process_batch(b0, 0)
     for sub in ("signatures", "band_index", "matches"):
         assert _has_part_files(os.path.join(base, sub)), sub
