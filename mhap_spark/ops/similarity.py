@@ -103,34 +103,13 @@ def embedding_near_dup_pairs(
     sets are bucketed and capped.  As a guard, blocks larger than
     ``max_block_size`` are dropped by a window count before any block forms
     (same cap discipline as candidates.sized_buckets) so one hot label can never go quadratic."""
-    from pyspark.sql import Window
-
-    # Round-6 physical rewrite (same output, pinned bit-exact — see
-    # _block_cos_pairs_pdf): the former sizes-join + blocked self-join
-    # evaluated the scan+norm subtree three times and computed every
-    # within-block cosine through interpreted higher-order folds INSIDE the
-    # single scan task (plan audit: the BroadcastHashJoin pair generation
-    # never shuffled, so ~200k 64-dim folds ran on one core).  Now: one
-    # subtree, block sizing as a window count on the blk exchange (over-cap
-    # blocks are dropped BEFORE applyInPandas materializes a group, keeping
-    # the hot-block guard), and the pairwise cosines run vectorized per
-    # block in numpy.  The cos_sim values are the identical float64
-    # fold chain, so the ≥ min_cos gate and the 6dp rounding cannot flip.
     base = with_unit_vectors(df, vec_col).select(
         F.col(id_col).alias("id"), F.col(block_col).alias("blk"), "vec", "norm"
     )
-    wblk = Window.partitionBy("blk")
-    eligible = base.withColumn("bs", F.count(F.lit(1)).over(wblk)).where(
-        F.col("bs").between(2, max_block_size)
+    # each row sits in one block, so no pair is scored twice
+    return _capped_block_pairs(
+        base, ["blk"], min_cos, max_block_size, df.schema[id_col].dataType
     )
-
-    def block_pairs(pdf):
-        return _block_cos_pairs_pdf(pdf, min_cos)
-
-    pairs = eligible.groupBy("blk").applyInPandas(
-        block_pairs, _block_pair_schema(df.schema[id_col].dataType)
-    )
-    return pairs.select("src", "dst", F.round("cos_sim", 6).alias("cos_sim"))
 
 
 def embedding_dedup_keep(
@@ -140,8 +119,6 @@ def embedding_dedup_keep(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_block_size: int = 8192,
-    driver_finish_edges: int = 0,
-    no_broadcast_hints: bool = False,
 ) -> DataFrame:
     """Semantic (embedding-cosine) dedup keep manifest — SemDeDup-style
     (Abbas et al., 2023): near-dup pairs → connected components →
@@ -154,12 +131,12 @@ def embedding_dedup_keep(
     ``cluster.keep_manifest(cluster.connected_components(...))`` instead —
     the clustering and keep decision are source-agnostic.
 
-    ``no_broadcast_hints`` defaults False HERE (deliberately inverted from
-    ``connected_components``'s scale-safe True): this entry point is
-    bounded to exact-baseline corpora by construction, where free
-    broadcasts are the right plan.  The ANN-fed path above calls
-    ``connected_components`` directly and keeps its corpus-scale
-    default."""
+    Connected components run with broadcast hints ON
+    (``no_broadcast_hints=False``, inverted from ``connected_components``'s
+    scale-safe default): this entry point is bounded to exact-baseline
+    corpora by construction, where free broadcasts are the right plan.  The
+    ANN-fed path above calls ``connected_components`` directly and keeps its
+    corpus-scale default."""
     from mhap_spark.cluster import connected_components, keep_manifest
 
     pairs = embedding_near_dup_pairs(
@@ -172,12 +149,7 @@ def embedding_dedup_keep(
     )
     verts = df.select(F.col(id_col).alias("image_id"))
     return keep_manifest(
-        connected_components(
-            pairs,
-            verts,
-            driver_finish_edges=driver_finish_edges,
-            no_broadcast_hints=no_broadcast_hints,
-        )
+        connected_components(pairs, verts, no_broadcast_hints=False)
     ).select(F.col("image_id").alias(id_col), "cluster_id", "keep")
 
 
@@ -247,6 +219,76 @@ def _block_pair_schema(id_type):
     )
 
 
+def _capped_block_pairs(
+    rows: DataFrame, keys: list, min_cos: float, cap: int, id_type
+) -> DataFrame:
+    """The one embedding pair scorer: rows ``(id, vec, norm, *keys)`` → the
+    ``(src, dst, cos_sim)`` pairs within each block of equal ``keys``.
+
+    Block sizes are a window count on the key exchange, and blocks outside
+    2..``cap`` rows are dropped BEFORE the grouped kernel materializes any
+    group, so one hot block can never go quadratic (same cap discipline as
+    candidates.sized_buckets).  Each surviving block is scored by the
+    vectorized, bit-exact ``_block_cos_pairs_pdf`` kernel — the identical
+    float64 fold chain as the JVM expression, so neither the ≥ ``min_cos``
+    gate nor the 6-dp rounding can flip — and no vectors are joined back."""
+    sized = rows.withColumn("bs", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
+    pairs = sized.where(F.col("bs").between(2, cap)).groupBy(*keys).applyInPandas(
+        lambda pdf: _block_cos_pairs_pdf(pdf, min_cos), _block_pair_schema(id_type)
+    )
+    return pairs.select("src", "dst", F.round("cos_sim", 6).alias("cos_sim"))
+
+
+def _keyed_vectors(base: DataFrame, keys_of, id_type) -> DataFrame:
+    """``(id, vec, norm)`` → ``(id, slot, key, vec, norm)``: one row per
+    column of the ``(n, t)`` int64 key matrix ``keys_of(X)`` computed per
+    Arrow batch — the bucketing kernel of both ANN paths.
+
+    ``keys_of`` closes over its matrix (hyperplanes, centroids) as a task
+    closure broadcast, NOT as ``F.lit`` leaves in the expression tree: a
+    literal plan is ~2M nodes at dim 2048 / 64 bits and chokes analysis
+    before data size ever matters.  vec and norm (JVM-computed by
+    with_unit_vectors) pass through untouched, so vectors cross the shuffle
+    once per (row, key) instead of twice per surviving candidate — strictly
+    fewer bytes whenever candidates exceed t/2 × corpus, the regime every
+    collision-heavy corpus is in.  id keeps the caller's type: string ids
+    must not hit a LongType field."""
+    import pandas as pd
+    from pyspark.sql.types import (
+        ArrayType, DoubleType, IntegerType, LongType, StructField, StructType,
+    )
+
+    from mhap_spark.parallel import spread
+
+    schema = StructType(
+        [
+            StructField("id", id_type),
+            StructField("slot", IntegerType()),
+            StructField("key", LongType()),
+            StructField("vec", ArrayType(DoubleType())),
+            StructField("norm", DoubleType()),
+        ]
+    )
+
+    def keyed(batches):
+        for pdf in batches:
+            if not len(pdf):  # empty Arrow batch → np.array([]) is 1-D
+                continue
+            keys = keys_of(np.array(pdf["vec"].tolist(), dtype=np.float64))
+            t = keys.shape[1]
+            yield pd.DataFrame(
+                {
+                    "id": np.repeat(pdf["id"].to_numpy(), t),
+                    "slot": np.tile(np.arange(t, dtype=np.int32), len(pdf)),
+                    "key": keys.reshape(-1),
+                    "vec": np.repeat(pdf["vec"].to_numpy(), t),
+                    "norm": np.repeat(pdf["norm"].to_numpy(), t),
+                }
+            )
+
+    return spread(base).mapInPandas(keyed, schema)
+
+
 def _hyperplanes(dim: int, n_bits: int, seed: int) -> np.ndarray:
     return np.random.default_rng(seed).standard_normal((n_bits, dim))
 
@@ -314,7 +356,6 @@ def ivf_neighbors(
     vec_col: str = "embedding",
     sample_mod: int = 1,
     max_bucket_size: int = 4096,
-    centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """ANN near-dup pairs via an IVF (inverted-file) coarse quantizer — the
     second scale path next to lsh_bucketed_neighbors: vectors are assigned
@@ -323,103 +364,39 @@ def ivf_neighbors(
     candidate pairs are same-cell collisions, each scored with its exact
     cosine ≥ min_cos.
 
-    Same scale discipline as the LSH variant: cells above
-    ``max_bucket_size`` are dropped by a window count on the cell exchange,
-    and each surviving cell is scored as one block by the vectorized
-    ``_block_cos_pairs_pdf`` kernel, so no vectors are joined back.
-    The centroid matrix is a task-closure broadcast (n_centroids × dim
-    float64 — KiBs)."""
-    if centroids is None:
-        try:
-            centroids = ivf_train_centroids(
-                df, n_centroids, sample_mod=sample_mod, seed=seed,
-                id_col=id_col, vec_col=vec_col,
-            )
-        except ValueError as e:
-            if "no vectors to train" not in str(e):
-                raise  # real data errors (ragged dims etc.) must propagate
-            # empty (or all-null-embedding) input: return the typed empty
-            # pairs frame, same contract as lsh_bucketed_neighbors — a
-            # robust pipeline must not crash on an empty shard
-            return df.sparkSession.createDataFrame(
-                [], _block_pair_schema(df.schema[id_col].dataType)
-            )
-    C = np.ascontiguousarray(centroids, dtype=np.float64)
+    Same scale discipline as the LSH variant: the ``_keyed_vectors``
+    kernel keys each row by its ``n_probe`` cells, and ``_capped_block_pairs``
+    drops cells above ``max_bucket_size`` and scores each surviving cell as
+    one block.  The centroid matrix is a task-closure broadcast
+    (n_centroids × dim float64 — KiBs)."""
+    id_type = df.schema[id_col].dataType
+    try:
+        C = ivf_train_centroids(
+            df, n_centroids, sample_mod=sample_mod, seed=seed,
+            id_col=id_col, vec_col=vec_col,
+        )
+    except ValueError as e:
+        if "no vectors to train" not in str(e):
+            raise  # real data errors (ragged dims etc.) must propagate
+        # empty (or all-null-embedding) input: return the typed empty
+        # pairs frame, same contract as lsh_bucketed_neighbors — a
+        # robust pipeline must not crash on an empty shard
+        return df.sparkSession.createDataFrame([], _block_pair_schema(id_type))
     n_probe = min(n_probe, len(C))
 
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, IntegerType, StructField, StructType,
-    )
+    def nearest_cells(X):
+        sims = (X / np.linalg.norm(X, axis=1, keepdims=True)) @ C.T
+        return np.argsort(-sims, axis=1)[:, :n_probe].astype(np.int64)
 
-    # Round-6 physical rewrite (same output): the former shape computed
-    # id-only cells, self-joined them per cell, deduped, and joined the
-    # vectors back twice for an interpreted-fold rescore — the plan audit
-    # measured 4 assignment-kernel executions and ~1M interpreted 64-dim
-    # folds per query (≈2 s of the 3 s total).  Now the assignment kernel
-    # rides on with_unit_vectors output (the JVM-cast vec and JVM-fold norm
-    # pass through it untouched), cell sizing is a window count on the cell
-    # exchange, and the within-cell cosines run vectorized per cell through
-    # the bit-exact _block_cos_pairs_pdf kernel — one kernel execution, no
-    # rescore joins.  Byte trade at scale: vectors now cross the shuffle
-    # once per (row, probe) instead of twice per surviving candidate —
-    # strictly fewer bytes whenever candidates exceed n_probe/2 × corpus,
-    # the regime every collision-heavy corpus (and this one, 1M candidates
-    # from 2k rows) is in; the cell cap still bounds any one task's block.
-    # id type follows the input (same round-3 ADVICE fix as
-    # lsh_bucketed_neighbors — string ids must not hit a LongType field)
-    out_schema = StructType(
-        [
-            StructField("id", df.schema[id_col].dataType),
-            StructField("cell", IntegerType()),
-            StructField("vec", ArrayType(DoubleType())),
-            StructField("norm", DoubleType()),
-        ]
-    )
-
-    def assign(batches):
-        for pdf in batches:
-            if not len(pdf):  # empty Arrow batch → np.array([]) is 1-D
-                continue
-            X = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            norms = np.linalg.norm(X, axis=1, keepdims=True)
-            ok = norms[:, 0] > 0
-            Xn = X[ok] / norms[ok]
-            sims = Xn @ C.T
-            top = np.argsort(-sims, axis=1)[:, :n_probe]
-            yield pd.DataFrame(
-                {
-                    "id": np.repeat(pdf["id"].to_numpy()[ok], n_probe),
-                    "cell": top.ravel().astype(np.int32),
-                    "vec": np.repeat(pdf["vec"].to_numpy()[ok], n_probe),
-                    "norm": np.repeat(pdf["norm"].to_numpy()[ok], n_probe),
-                }
-            )
-
-    from mhap_spark.parallel import spread
-
-    vecs = with_unit_vectors(df, vec_col).select(
+    base = with_unit_vectors(df, vec_col).select(
         F.col(id_col).alias("id"), "vec", "norm"
     )
-    cells = spread(vecs).mapInPandas(assign, out_schema)
-    wcell = Window.partitionBy("cell")
-    ok_cells = cells.withColumn("bs", F.count(F.lit(1)).over(wcell)).where(
-        F.col("bs").between(2, max_bucket_size)
-    )
-
-    def cell_pairs(pdf):
-        return _block_cos_pairs_pdf(pdf, min_cos)
-
-    pairs = ok_cells.groupBy("cell").applyInPandas(
-        cell_pairs, _block_pair_schema(df.schema[id_col].dataType)
-    )
+    cells = _keyed_vectors(base, nearest_cells, id_type)
     # multi-probe: a pair straddling several shared cells is scored in each;
     # the values are identical (deterministic per pair), dedup keeps one
-    return (
-        pairs.dropDuplicates(["src", "dst"])
-        .select("src", "dst", F.round("cos_sim", 6).alias("cos_sim"))
-    )
+    return _capped_block_pairs(
+        cells, ["key"], min_cos, max_bucket_size, id_type
+    ).dropDuplicates(["src", "dst"])
 
 
 def lsh_bucketed_neighbors(
@@ -441,23 +418,18 @@ def lsh_bucketed_neighbors(
 
     Scale shape:
 
-    * bucket sizes are a window count on the bucket exchange and buckets
-      above ``max_bucket_size`` are dropped BEFORE any pair is formed — a
-      hot bucket (all-zeros embeddings, shard-level dup runs) can never go
-      quadratic (same cap discipline as candidates.sized_buckets);
-    * each surviving bucket is scored as one block by the vectorized
-      ``_block_cos_pairs_pdf`` kernel; vectors cross the shuffle once per
-      (row, table) with the bucket code, and no vectors are joined back;
+    * bucket codes are computed by the ``_keyed_vectors`` kernel (one
+      Arrow-batched ``sign(X @ Pᵀ)`` matmul per batch over the
+      ``n_tables × n_bits × dim`` hyperplane matrix), one row per
+      (row, table);
+    * ``_capped_block_pairs`` drops buckets above ``max_bucket_size``
+      BEFORE any pair is formed — a hot bucket (all-zeros embeddings,
+      shard-level dup runs) can never go quadratic — and scores each
+      surviving (table, bucket) as one block;
     * pass ``dim`` explicitly at scale — when None it is probed with a
       single-row driver action (fine interactively, an extra job in a
-      pipeline);
-    * bucket codes are computed in a ``mapInPandas`` kernel whose
-      ``n_tables × n_bits × dim`` hyperplane matrix rides the task closure
-      (one Arrow-batched ``sign(X @ Pᵀ)`` matmul per batch), NOT as
-      ``F.lit`` leaves in the expression tree — the literal plan was
-      ~2M nodes at dim 2048 / 64 bits and would choke analysis/codegen
-      before data size ever mattered (round-2 VERDICT fix; mirrors
-      ivf_neighbors' assign kernel)."""
+      pipeline)."""
+    id_type = df.schema[id_col].dataType
     if dim is None:
         # probe only non-null vectors: F.size(NULL) is NULL and would crash
         # the hyperplane constructor before with_unit_vectors filters the row
@@ -467,13 +439,8 @@ def lsh_bucketed_neighbors(
             .first()
         )
         if first is None:
-            return df.sparkSession.createDataFrame(
-                [], _block_pair_schema(df.schema[id_col].dataType)
-            )
+            return df.sparkSession.createDataFrame([], _block_pair_schema(id_type))
         dim = first["d"]
-    base = with_unit_vectors(df, vec_col).select(
-        F.col(id_col).alias("id"), "vec", "norm"
-    )
 
     # (n_tables·n_bits, dim) stacked plane matrix — a closure broadcast
     P = np.concatenate(
@@ -481,69 +448,15 @@ def lsh_bucketed_neighbors(
     )
     # bit weights per table row-block: bucket = Σ (1<<b) over positive dots
     weights = (np.uint64(1) << np.arange(n_bits, dtype=np.uint64)).astype(np.uint64)
-    n_tables_ = n_tables
 
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, IntegerType, LongType, StructField, StructType,
+    def sign_codes(X):
+        bits = ((X @ P.T) > 0).reshape(len(X), n_tables, -1).astype(np.uint64)
+        return (bits * weights).sum(axis=2).astype(np.uint64).view(np.int64)
+
+    base = with_unit_vectors(df, vec_col).select(
+        F.col(id_col).alias("id"), "vec", "norm"
     )
-
-    # Round-6 physical rewrite (same output; mirrors ivf_neighbors): the
-    # former id-only codes + bucket self-join + two rescore joins evaluated
-    # the hyperplane kernel four times and rescored every collision through
-    # interpreted folds; now vec/norm (JVM-computed by with_unit_vectors)
-    # pass through the code kernel, bucket sizing is a window count on the
-    # bucket exchange, and within-bucket cosines run vectorized per bucket
-    # through the bit-exact _block_cos_pairs_pdf kernel.
-    # id passes through the kernel untouched — its Arrow type must match the
-    # caller's id_col (string image_ids elsewhere in the repo), not a
-    # hardcoded long (round-3 ADVICE fix)
-    code_schema = StructType(
-        [
-            StructField("id", df.schema[id_col].dataType),
-            StructField("table_idx", IntegerType()),
-            StructField("bucket", LongType()),
-            StructField("vec", ArrayType(DoubleType())),
-            StructField("norm", DoubleType()),
-        ]
-    )
-
-    def bucket_codes(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            bits = (X @ P.T) > 0  # (n, n_tables·n_bits)
-            bits = bits.reshape(len(X), n_tables_, -1).astype(np.uint64)
-            codes = (bits * weights).sum(axis=2).astype(np.uint64)  # (n, n_tables)
-            yield pd.DataFrame(
-                {
-                    "id": np.repeat(pdf["id"].to_numpy(), n_tables_),
-                    "table_idx": np.tile(
-                        np.arange(n_tables_, dtype=np.int32), len(X)
-                    ),
-                    "bucket": codes.reshape(-1).view(np.int64),
-                    "vec": np.repeat(pdf["vec"].to_numpy(), n_tables_),
-                    "norm": np.repeat(pdf["norm"].to_numpy(), n_tables_),
-                }
-            )
-
-    from mhap_spark.parallel import spread
-
-    buckets = spread(base).mapInPandas(bucket_codes, code_schema)
-
-    wbkt = Window.partitionBy("table_idx", "bucket")
-    eligible = buckets.withColumn("bs", F.count(F.lit(1)).over(wbkt)).where(
-        F.col("bs").between(2, max_bucket_size)
-    )
-
-    def bucket_pairs(pdf):
-        return _block_cos_pairs_pdf(pdf, min_cos)
-
-    pairs = eligible.groupBy("table_idx", "bucket").applyInPandas(
-        bucket_pairs, _block_pair_schema(df.schema[id_col].dataType)
-    )
-    return (
-        pairs.dropDuplicates(["src", "dst"])
-        .select("src", "dst", F.round("cos_sim", 6).alias("cos_sim"))
-    )
+    buckets = _keyed_vectors(base, sign_codes, id_type)
+    return _capped_block_pairs(
+        buckets, ["slot", "key"], min_cos, max_bucket_size, id_type
+    ).dropDuplicates(["src", "dst"])

@@ -322,9 +322,11 @@ class IncrementalDedup:
                 # the batch row in src and the earlier row in dst (drop
                 # src).  Read the matches back from the partition just
                 # written — one small file scan instead of recomputing the
-                # verify plan
+                # verify plan.  The schema is given: the sink wrote these
+                # columns itself, and inferring them costs a footer job
                 drops = (
-                    spark.read.parquet(
+                    spark.read.schema("src string, dst string, intra_batch boolean")
+                    .parquet(
                         os.path.join(self.match_path, f"batch_id={batch_id}")
                     )
                     .select(

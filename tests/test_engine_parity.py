@@ -151,7 +151,8 @@ def _plan_nodes(df) -> dict:
         if name == "Exchange" and "hashpartitioning" in line:
             name = "HashExchange"
         seen["Join" if name.endswith("Join") else name] += 1
-    return {k: seen[k] for k in ("MapInPandas", "Window", "HashExchange", "Join")}
+    kinds = ("MapInPandas", "FlatMapGroupsInPandas", "Window", "HashExchange", "Join")
+    return {k: seen[k] for k in kinds}
 
 
 def test_capped_bucket_plans(spark, input_df):
@@ -162,19 +163,30 @@ def test_capped_bucket_plans(spark, input_df):
     unpersisted source, and which collects its stored members in the same
     aggregate instead of filtering the member list.  Star mode keeps its
     two windows (bucket, then salted sub-bucket) on the same two
-    exchanges."""
+    exchanges.  The embedding pair paths share one capped-block scorer: a
+    window over the block key and one grouped cosine kernel, behind one
+    keying kernel for the two ANN paths, whose multi-probe dedup is their
+    second exchange."""
     from mhap_spark.config import PRESET_SCALE
     from mhap_spark.ops.dedup import (
         minhash_lsh_doc_pairs,
         simhash_near_dup_pairs,
         substring_dup_pairs,
     )
+    from mhap_spark.ops.similarity import (
+        embedding_near_dup_pairs,
+        ivf_neighbors,
+        lsh_bucketed_neighbors,
+    )
 
     sigs = compute_signatures(input_df, CFG, None)  # unpersisted source
     docs = input_df.select(
         F.col("image_id").alias("doc_id"), F.col("caption").alias("text")
     )
-    one_pass = {"MapInPandas": 1, "Window": 1, "HashExchange": 2, "Join": 0}
+    one_pass = {
+        "MapInPandas": 1, "FlatMapGroupsInPandas": 0, "Window": 1,
+        "HashExchange": 2, "Join": 0,
+    }
     plans = {
         "pairs": candidate_pairs(sigs, CFG),
         "pairs_store": candidate_pairs(sigs, CFG.with_overrides(min_store_shingles=50)),
@@ -190,8 +202,30 @@ def test_capped_bucket_plans(spark, input_df):
     assert "filter(" not in store_plan and "lambda" not in store_plan
     star = candidate_pairs(compute_signatures(input_df, PRESET_SCALE, None), PRESET_SCALE)
     assert _plan_nodes(star) == {
-        "MapInPandas": 1, "Window": 2, "HashExchange": 2, "Join": 0
+        "MapInPandas": 1, "FlatMapGroupsInPandas": 0, "Window": 2,
+        "HashExchange": 2, "Join": 0,
     }
+    rng = np.random.default_rng(3)
+    vecs = spark.createDataFrame(
+        [(i, [float(x) for x in rng.standard_normal(8)], i % 3) for i in range(60)],
+        "vec_id long, embedding array<float>, label int",
+    )
+    assert _plan_nodes(embedding_near_dup_pairs(vecs, min_cos=0.5)) == {
+        "MapInPandas": 0, "FlatMapGroupsInPandas": 1, "Window": 1,
+        "HashExchange": 1, "Join": 0,
+    }
+    keyed = {
+        "MapInPandas": 1, "FlatMapGroupsInPandas": 1, "Window": 1,
+        "HashExchange": 2, "Join": 0,
+    }
+    ann = {
+        "ivf_neighbors": ivf_neighbors(vecs, n_centroids=4, min_cos=0.5),
+        "lsh_bucketed_neighbors": lsh_bucketed_neighbors(
+            vecs, n_bits=4, min_cos=0.5, dim=8
+        ),
+    }
+    for name, df in ann.items():
+        assert _plan_nodes(df) == keyed, name
 
 
 def test_verified_pairs_match_oracle(spark, corpus, oracle_state, engine_sigs):

@@ -213,19 +213,20 @@ def test_embedding_near_dup_and_lsh_recall(spark):
             vid += 1
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
     exact = {
-        (r["src"], r["dst"])
+        (r["src"], r["dst"]): r["cos_sim"]
         for r in embedding_near_dup_pairs(df, min_cos=0.95, block_col="label").collect()
     }
     assert len(exact) == 30  # 3 per base × C(3,2)=3 × 10 bases
     ann = {
-        (r["src"], r["dst"])
+        (r["src"], r["dst"]): r["cos_sim"]
         for r in lsh_bucketed_neighbors(
             df, n_bits=8, n_tables=6, min_cos=0.95
         ).collect()
     }
-    recall = len(ann & exact) / len(exact)
+    recall = len(ann.keys() & exact.keys()) / len(exact)
     assert recall >= 0.9, f"ANN recall {recall}"
-    assert ann <= exact  # rescore gate means no false accepts
+    assert ann.keys() <= exact.keys()  # rescore gate means no false accepts
+    assert all(ann[p] == exact[p] for p in ann)  # one scorer, same values
 
 
 def test_similarity_null_and_empty_robustness(spark):
@@ -300,16 +301,17 @@ def test_ivf_ann_recall(spark):
             vid += 1
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
     exact = {
-        (r["src"], r["dst"])
+        (r["src"], r["dst"]): r["cos_sim"]
         for r in embedding_near_dup_pairs(df, min_cos=0.95, block_col="label").collect()
     }
     ann = {
-        (r["src"], r["dst"])
+        (r["src"], r["dst"]): r["cos_sim"]
         for r in ivf_neighbors(df, n_centroids=8, n_probe=3, min_cos=0.95).collect()
     }
-    recall = len(ann & exact) / len(exact)
+    recall = len(ann.keys() & exact.keys()) / len(exact)
     assert recall >= 0.9, f"IVF recall {recall}"
-    assert ann <= exact  # exact-cosine rescore gate
+    assert ann.keys() <= exact.keys()  # exact-cosine rescore gate
+    assert all(ann[p] == exact[p] for p in ann)  # one scorer, same values
 
 
 def test_ivf_deterministic_across_partitionings(spark):
