@@ -24,12 +24,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from mhap_spark.config import MhapConfig, hints_default_for_rows
+from mhap_spark.ops.dedup import DOC_CFG
 
-_DOC_CFG = MhapConfig(
-    num_hashes=128,
-    rows_per_band=4,
-    num_min_matches=2,
-    use_phash_shingles=False,
+_ENTRY_CFG = DOC_CFG.with_overrides(
     min_jaccard=0.5,
     # documents tables are ≤5k rows at every test SF — far below the
     # measured 1M-row broadcast-OOM margin, so the size rule applies
@@ -52,7 +49,7 @@ def entry(spark: SparkSession) -> DataFrame:
         F.col("text").alias("caption"),
         F.lit(0).cast("long").alias("phash"),
     )
-    out = run_pipeline(spark, src, _DOC_CFG)
+    out = run_pipeline(spark, src, _ENTRY_CFG)
     return (
         out["clusters"]
         .groupBy("cluster_id")
@@ -427,13 +424,7 @@ def _q_minhash_dedup_keep(spark, sf_dir):
     pairs → clusters → decision chain end to end."""
     from mhap_spark.ops.dedup import minhash_dedup_keep
 
-    cfg = MhapConfig(
-        num_hashes=128,
-        rows_per_band=4,
-        num_min_matches=2,
-        use_phash_shingles=False,
-        no_broadcast_hints=hints_default_for_rows(500),
-    )
+    cfg = DOC_CFG.with_overrides(no_broadcast_hints=hints_default_for_rows(500))
     out = minhash_dedup_keep(_t(spark, sf_dir, "documents"), cfg=cfg)
     return out.select(
         F.col("doc_id").cast("string").alias("doc_id"), "cluster_id", "keep"
@@ -761,10 +752,7 @@ def _doc_pair_replica() -> tuple[tuple, tuple]:
     from mhap_spark import oracle_ops
 
     ids, texts = _oracle_docs()
-    cfg = MhapConfig(
-        num_hashes=128, rows_per_band=4, num_min_matches=2, use_phash_shingles=False
-    )
-    return tuple(ids), tuple(oracle_ops.minhash_doc_candidates(ids, texts, cfg))
+    return tuple(ids), tuple(oracle_ops.minhash_doc_candidates(ids, texts, DOC_CFG))
 
 
 def _minhash_doc_pairs_oracle_sql() -> str:

@@ -221,6 +221,3 @@ class CheckpointStore:
         spark.createDataFrame(
             [row], "stage string, run_id string, ts double, payload string"
         ).write.mode("append").parquet(path)
-
-    def read_metrics(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.base_dir, "_metrics"))

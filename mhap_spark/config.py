@@ -4,7 +4,11 @@ Defaults mirror the reference CLI defaults and presets
 (mhap/main/MhapMain.java:67-91 for defaults, :137-198 for the
 --settings 1/2/3 presets).  The graft recasts sequences → image+caption
 rows (BASELINE.json input_hint), so ``k`` is the caption character-shingle
-size and ``phash_ngram_bits`` the width of phash-derived bit n-grams.
+size (the phash bit n-gram width is ``hashing.PHASH_NGRAM_BITS``).
+
+A field here is a knob that a preset, a caller or a recorded measurement
+sets; a decision that nothing varies is a module constant next to the
+code it shapes.
 """
 
 from __future__ import annotations
@@ -22,12 +26,23 @@ def band_count_for(num_hashes: int, rows_per_band: int) -> int:
     return num_hashes // rows_per_band
 
 
+# Edge sets at/below this many edges run the CC finish as ONE driver
+# union-find instead of latency-bound supersteps (cluster.py
+# _driver_union_find — a bounded Arrow collect of ≈ cutoff × two short ids,
+# a few hundred MB, well under driver.maxResultSize).  The measured
+# crossover bound (tools/cc_microbench.py --driver-finish,
+# BENCH/BASELINE.md): at 8M edges the union-find still beats the superstep
+# loop 1.85× at full 32-core width, and by more at lower widths, so 8M is
+# conservative.  The distributed loop regime is unaffected: at the
+# 10^12-row design point (≈3×10^9 edges) the count sits orders of
+# magnitude above this.
+CC_DRIVER_FINISH_EDGES = 8_000_000
+
+
 @dataclass(frozen=True)
 class MhapConfig:
     # --- shingling (mhap/main/MhapMain.java:75 k=16) ---
     k: int = 16                      # caption char k-gram size
-    phash_ngram_bits: int = 16       # width of phash bit n-gram windows
-    use_caption_shingles: bool = True
     use_phash_shingles: bool = True
 
     # --- stage 1: weighted MinHash (mhap/main/MhapMain.java:77 num-hashes=512) ---
@@ -39,8 +54,6 @@ class MhapConfig:
     repeat_weight: float = 0.9       # <0 disables tf-idf (original MHAP mode)
     idf_scale: float = 3.0           # scaledIdf range [1, idf_scale]
     filter_cutoff: float = 1e-5      # df-ratio below this → treated as rare
-    idf_offset: float = 0.0          # mhap/sketch/FrequencyCounts.java:252 offset
-    max_weight: int = 32             # vectorization bound on round(tf*idf)
 
     # --- candidate generation (mhap/main/MhapMain.java:83 num-min-matches=3) ---
     rows_per_band: int = 1           # r=1 ≡ MHAP slot-exact voting; r>1 = LSH bands
@@ -94,18 +107,10 @@ class MhapConfig:
 
     # --- clustering ---
     cc_max_iters: int = 50
-    # edge sets at/below this run the CC finish as ONE driver union-find
-    # instead of latency-bound supersteps (cluster.py _driver_union_find —
-    # bounded Arrow collect ≈ cutoff × two short ids, a few hundred MB at
-    # the default, well under driver.maxResultSize).  Default = the
-    # measured crossover bound (tools/cc_microbench.py --driver-finish,
-    # BENCH/BASELINE.md round 5): at 8M edges the union-find still beats
-    # the superstep loop 1.85× at full 32-core width, and by more at
-    # lower widths — so 8M is conservative.  The distributed loop regime
-    # is unaffected: at the 10^12-row design point (≈3×10^9 edges) the
-    # count sits orders of magnitude above this.  0 disables (pure-loop
-    # mode, used by the CC microbench and loop-parity tests).
-    cc_driver_finish_edges: int = 8_000_000
+    # edge sets at/below this finish CC on the driver (CC_DRIVER_FINISH_EDGES);
+    # 0 = the pure superstep loop (CC microbench, loop-parity tests,
+    # perfbench's batch_mega_loop)
+    cc_driver_finish_edges: int = CC_DRIVER_FINISH_EDGES
 
     # --- execution ---
     # True (default): every corpus-scaled join side carries an explicit
@@ -156,9 +161,14 @@ class MhapConfig:
         d = asdict(self)
         for k in self._EXECUTION_ONLY_KNOBS:
             d.pop(k, None)
-        # the deleted band-subsampling knob, hashed at its old "all bands"
-        # value so a config that never set it keeps its checkpoints
-        d["num_bands"] = 0
+        # retired knobs, hashed at the values they always had, so every
+        # config keeps its checkpoints: band subsampling ("all bands"), and
+        # the fields that became constants (hashing.PHASH_NGRAM_BITS,
+        # minhash.MAX_WEIGHT, caption shingles always on, no idf offset)
+        d.update(
+            num_bands=0, use_caption_shingles=True, phash_ngram_bits=16,
+            idf_offset=0.0, max_weight=32,
+        )
         payload = json.dumps(d, sort_keys=True).encode()
         return hashlib.sha256(payload).hexdigest()[:16]
 

@@ -203,13 +203,12 @@ class FreqTable:
 
     scaled_idf semantics exactly mirror mhap/sketch/FrequencyCounts.java:
     present key → 1 + (idf(val) − minIdf)/scale; missing key → idf_scale
-    (:295-311); idf(f) = log(maxValue/f − offset) (:250-253);
+    (:295-311); idf(f) = log(maxValue/f) (:250-253, offset 0);
     minIdf = idf(maxValue), maxIdf = idf(filter_cutoff) (:227-228)."""
 
     keys: np.ndarray      # uint64, ascending
     ratios: np.ndarray    # float64, aligned
     cfg_idf_scale: float
-    cfg_offset: float
     filter_cutoff: float
 
     @classmethod
@@ -236,13 +235,12 @@ class FreqTable:
             keys=keys[order],
             ratios=ratios[order],
             cfg_idf_scale=cfg.idf_scale,
-            cfg_offset=cfg.idf_offset,
             filter_cutoff=cfg.filter_cutoff,
         )
 
     def _bounds(self) -> tuple[float, float, float]:
         max_value = float(self.ratios.max()) if len(self.ratios) else 1.0
-        min_idf = float(np.log(max_value / max_value - self.cfg_offset))
+        min_idf = float(np.log(max_value / max_value))
         # filter_cutoff=0 ("retain everything") has no finite idf ceiling —
         # anchor the span at the rarest OBSERVED ratio instead, so the
         # rarest retained shingle maps to the max weight (mirrored in
@@ -250,7 +248,7 @@ class FreqTable:
         cutoff = self.filter_cutoff
         if cutoff <= 0.0:
             cutoff = float(self.ratios.min()) if len(self.ratios) else 1.0
-        max_idf = float(np.log(max_value / cutoff - self.cfg_offset))
+        max_idf = float(np.log(max_value / cutoff))
         return max_value, min_idf, max_idf
 
     def scaled_idf(self, keys: np.ndarray) -> np.ndarray:
@@ -268,6 +266,6 @@ class FreqTable:
             out[hit] = 1.0
             return out
         scale = (max_idf - min_idf) / (self.cfg_idf_scale - 1.0)
-        idf = np.log(max_value / self.ratios[pos_c[hit]] - self.cfg_offset)
+        idf = np.log(max_value / self.ratios[pos_c[hit]])
         out[hit] = 1.0 + (idf - min_idf) / scale
         return out

@@ -15,7 +15,7 @@ Spec
   window of the canonicalized caption, then fmix64, then ``>> 1`` so every
   hash fits a non-negative int64 (keeps uint64 order == int64 order across
   Spark/parquet/DuckDB).
-* phash shingles: each ``phash_ngram_bits``-wide window of the 64-bit
+* phash shingles: each ``PHASH_NGRAM_BITS``-wide window of the 64-bit
   perceptual hash, salted with its bit offset and a domain constant so the
   phash shingle space cannot collide with the caption space by construction.
 * ``xorshift_step``: exact replica of the reference stream
@@ -31,6 +31,7 @@ _M2 = np.uint64(0xC4CEB9FE1A85EC53)
 _FNV_OFFSET = np.uint64(0xCBF29CE484222325)
 _FNV_PRIME = np.uint64(0x100000001B3)
 _PHASH_DOMAIN = np.uint64(0x9E3779B97F4A7C15)  # golden-ratio salt
+PHASH_NGRAM_BITS = 16  # width of the phash bit n-gram windows
 
 
 def fmix64(x: np.ndarray) -> np.ndarray:

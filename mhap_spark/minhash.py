@@ -6,7 +6,7 @@ mhap/sketch/MinHashSketch.java:51-154:
 * per-row distinct shingles with term frequencies (insertion order replaced
   by hash order — winners are decided by strict value comparisons, so order
   only breaks 2⁻⁶⁴-probability ties);
-* weight = round(tf · scaledIdf) clamped to [1, max_weight]
+* weight = round(tf · scaledIdf) clamped to [1, MAX_WEIGHT]
   (mhap/sketch/MinHashSketch.java:111-124);
 * ONE continuous XORShift stream per shingle, advanced ``weight`` steps per
   slot (:134-153) — the stream does NOT reset between slots, so slot ``i``
@@ -51,6 +51,7 @@ from mhap_spark.shingles import batch_shingles, distinct_per_row, shingle_input
 
 _INT64_MAX = np.iinfo(np.int64).max
 _GOLDEN = np.uint64(0x9E3779B97F4A7C15)
+MAX_WEIGHT = 32  # vectorization bound on round(tf*idf): xorshift steps per slot
 
 SIGNATURE_SCHEMA = StructType(
     [
@@ -74,7 +75,7 @@ def batch_weights(
         w = np.maximum(w, 1)
     else:
         w = tfs.astype(np.int64)
-    return np.minimum(w, cfg.max_weight)
+    return np.minimum(w, MAX_WEIGHT)
 
 
 def _xorshift_inplace(x: np.ndarray, tmp: np.ndarray) -> None:

@@ -101,8 +101,17 @@ def word_jaccard_pairs(
     )
 
 
+# The MinHash config of the text-dedup surface: caption-only (documents
+# have no phash), 128 slots folded into 32 bands of 4, two shared bands.
+# The driver queries, the flagship entry and their sequential replicas
+# derive theirs from this one value.
+DOC_CFG = MhapConfig(
+    num_hashes=128, rows_per_band=4, num_min_matches=2, use_phash_shingles=False
+)
+
+
 def _doc_cfg(df: DataFrame) -> MhapConfig:
-    """Pure-text document config for the MinHash dedup surface.
+    """:data:`DOC_CFG` with the broadcast-safety rule resolved.
 
     Unknown-scale entry point: resolve the broadcast-safety rule from the
     ACTUAL input size rather than assuming the small-corpus demo shape — a
@@ -112,12 +121,8 @@ def _doc_cfg(df: DataFrame) -> MhapConfig:
     the limit is hit, instead of executing the (possibly expensive derived)
     upstream plan in full a second time just to learn a number we only
     compare to 1M."""
-    return MhapConfig(
-        num_hashes=128,
-        rows_per_band=4,
-        num_min_matches=2,
-        use_phash_shingles=False,
-        no_broadcast_hints=hints_default_for_rows(df.limit(1_000_000).count()),
+    return DOC_CFG.with_overrides(
+        no_broadcast_hints=hints_default_for_rows(df.limit(1_000_000).count())
     )
 
 

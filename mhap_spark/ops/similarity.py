@@ -136,7 +136,8 @@ def embedding_dedup_keep(
     scale-safe default): this entry point is bounded to exact-baseline
     corpora by construction, where free broadcasts are the right plan.  The
     ANN-fed path above calls ``connected_components`` directly and keeps its
-    corpus-scale default."""
+    corpus-scale default.  At that bound the edge set sits far under the
+    driver-finish cutoff, so CC is one driver union-find."""
     from mhap_spark.cluster import connected_components, keep_manifest
 
     pairs = embedding_near_dup_pairs(

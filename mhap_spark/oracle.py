@@ -18,23 +18,24 @@ import numpy as np
 
 from mhap_spark.config import MhapConfig
 from mhap_spark.hashing import (
+    PHASH_NGRAM_BITS,
     caption_kgram_hashes,
     phash_ngram_hashes,
     xorshift_step,
 )
+from mhap_spark.minhash import MAX_WEIGHT
+
 
 def row_shingles(caption: str, phash: int, cfg: MhapConfig) -> np.ndarray:
     """All shingle hashes of one row (duplicates kept — tf matters)."""
-    parts = []
-    if cfg.use_caption_shingles:
-        parts.append(caption_kgram_hashes(caption, cfg.k))
+    parts = [caption_kgram_hashes(caption, cfg.k)]
     if cfg.use_phash_shingles:
         parts.append(
             phash_ngram_hashes(
-                np.array([phash], dtype=np.int64), cfg.phash_ngram_bits
+                np.array([phash], dtype=np.int64), PHASH_NGRAM_BITS
             ).ravel()
         )
-    return np.concatenate(parts) if parts else np.empty(0, dtype=np.uint64)
+    return np.concatenate(parts)
 
 
 def df_ratio_table(
@@ -86,7 +87,7 @@ class FreqFilter:
         # paths disagree in the last ulp on ~20% of inputs on this host —
         # enough to flip a floor(tf*idf + 0.5) weight at an integer boundary
         # and desynchronize the xorshift stream length
-        return float(np.log(self.max_value / freq - self.cfg.idf_offset))
+        return float(np.log(self.max_value / freq))
 
     def scaled_idf(self, h: int) -> float:
         # mhap/sketch/FrequencyCounts.java:295-311
@@ -112,7 +113,7 @@ def compute_weights(
         w = np.maximum(w, 1)
     else:
         w = tfs.astype(np.int64)
-    return np.minimum(w, cfg.max_weight)
+    return np.minimum(w, MAX_WEIGHT)
 
 
 def weighted_minhash(

@@ -14,7 +14,11 @@ import numpy as np
 import pandas as pd
 
 from mhap_spark.config import MhapConfig
-from mhap_spark.hashing import caption_kgram_hashes_batch, phash_ngram_hashes
+from mhap_spark.hashing import (
+    PHASH_NGRAM_BITS,
+    caption_kgram_hashes_batch,
+    phash_ngram_hashes,
+)
 
 
 def shingle_input(df):
@@ -55,15 +59,9 @@ def batch_shingles(
     in the source table: they contribute zero phash shingles.
     """
     n = len(captions)
-    cap_lists: list[np.ndarray]
-    if cfg.use_caption_shingles:
-        cap_lists = caption_kgram_hashes_batch(captions.tolist(), cfg.k)
-    else:
-        cap_lists = [np.empty(0, dtype=np.uint64)] * n
+    cap_lists = caption_kgram_hashes_batch(captions.tolist(), cfg.k)
     if cfg.use_phash_shingles:
-        ph = phash_ngram_hashes(
-            phashes.to_numpy(dtype=np.int64), cfg.phash_ngram_bits
-        )
+        ph = phash_ngram_hashes(phashes.to_numpy(dtype=np.int64), PHASH_NGRAM_BITS)
         if phash_null is not None:
             ph_counts = np.where(
                 phash_null.to_numpy(dtype=bool), 0, ph.shape[1]

@@ -244,14 +244,9 @@ class IncrementalDedup:
         # streaming semantics: the index holds ALL seen rows — kept or
         # dropped — so "duplicate of a dropped row" still drops (no
         # transitive-closure canonicalization; the batch pipeline's CC
-        # keep_manifest is the closure-exact variant).  PRECONDITION:
-        # image_id is unique across the stream's lifetime — it is the row
-        # key, and a recurring id gives verify's image_id joins two sketches
-        # for one id, so its pairs come out duplicated and conflicting —
-        # so process_batch rejects such a batch before any write.  Cost: a
-        # scan of earlier batches' ids for that guard, one re-read of the
-        # batch's just-written matches partition and one tiny per-batch
-        # write — off by default.
+        # keep_manifest is the closure-exact variant).  Cost: one re-read
+        # of the batch's just-written matches partition and one tiny
+        # per-batch write — off by default.
         self.keep_manifest = keep_manifest
         self.keep_path = os.path.join(base_dir, "keep")
         self.bindex = BandIndex(os.path.join(base_dir, "band_index"))
@@ -267,26 +262,22 @@ class IncrementalDedup:
         sigs = None
         try:
             n_rows = batch_df.count()
+            # image_id must be unique across the stream's lifetime: it is
+            # the row key, and a recurring id gives verify's image_id joins
+            # two sketches for one id, writing duplicated, conflicting
+            # matches (and keep decisions).  Checked before any write, so a
+            # rejected batch leaves nothing on disk.
             batch_ids = batch_df.select("image_id")
-            if self.keep_manifest:
-                # the keep manifest's documented precondition — image_id
-                # unique across the stream's lifetime — must fail LOUDLY:
-                # image_id is the row key, and a recurring id would give
-                # verify's image_id joins two sketches for one id, writing
-                # duplicated, conflicting matches and keep decisions.
-                # Checked before any write, so a rejected batch leaves
-                # nothing on disk.
-                earlier_ids = _read_history(
-                    spark, self.sig_path, _SIGNATURE_HISTORY, batch_id - 1
-                ).select("image_id")
-                n_recur = batch_ids.join(earlier_ids, "image_id", "left_semi").count()
-                if n_recur:
-                    raise ValueError(
-                        f"keep_manifest precondition violated: {n_recur} "
-                        f"image_id(s) of batch {batch_id} already appear in "
-                        "earlier batches; ids must be unique across the "
-                        "stream's lifetime for first-arrival-wins decisions"
-                    )
+            earlier_ids = _read_history(
+                spark, self.sig_path, _SIGNATURE_HISTORY, batch_id - 1
+            ).select("image_id")
+            n_recur = batch_ids.join(earlier_ids, "image_id", "left_semi").count()
+            if n_recur:
+                raise ValueError(
+                    f"recurring image_id: {n_recur} id(s) of batch {batch_id} "
+                    "already appear in earlier batches; ids must be unique "
+                    "across the stream's lifetime"
+                )
             # one sketch task per full Arrow batch: a micro-batch spread over
             # many small partitions pays the fixed per-task UDF cost on each
             # (coalesce never raises the partition count)

@@ -261,7 +261,9 @@ def test_connected_components_matches_union_find(spark):
     verts_df = spark.createDataFrame([(n,) for n in nodes], "image_id string")
     got = {
         r["image_id"]: r["cluster_id"]
-        for r in connected_components(pairs_df, verts_df).collect()
+        for r in connected_components(
+            pairs_df, verts_df, driver_finish_edges=0
+        ).collect()
     }
     want = oracle.connected_components(nodes, sorted(edges))
     assert got == want
@@ -270,7 +272,7 @@ def test_connected_components_matches_union_find(spark):
 def test_cc_driver_finish_equivalent(spark):
     """The driver union-find finish (cluster.py driver_finish_edges) must
     produce exactly the distributed fixpoint's clustering — pre-loop escape
-    (cutoff above the edge count) and the default loop compared on the same
+    (cutoff above the edge count) and the pure loop compared on the same
     random graph + a star-heavy graph (the dup-cluster shape)."""
     rng = np.random.default_rng(7)
     nodes = [f"n{i:04d}" for i in range(400)]

@@ -71,13 +71,9 @@ def test_minhash_dedup_keep_matches_replica(spark, docs):
     """Engine keep-manifest ≡ sequential union-find replica over the
     sequential pair replica, every row covered, keep ⇔ id == cluster min."""
     from mhap_spark import oracle_ops
-    from mhap_spark.config import MhapConfig
-    from mhap_spark.ops.dedup import minhash_dedup_keep
+    from mhap_spark.ops.dedup import DOC_CFG, minhash_dedup_keep
 
-    cfg = MhapConfig(
-        num_hashes=128, rows_per_band=4, num_min_matches=2,
-        use_phash_shingles=False, no_broadcast_hints=False,
-    )
+    cfg = DOC_CFG.with_overrides(no_broadcast_hints=False)
     got = {
         r["doc_id"]: (r["cluster_id"], r["keep"])
         for r in minhash_dedup_keep(docs, cfg=cfg).collect()

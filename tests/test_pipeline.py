@@ -8,7 +8,7 @@ import pytest
 
 from mhap_spark.checkpoint import CheckpointStore
 from mhap_spark.codecs import decode_image, psnr
-from mhap_spark.config import MhapConfig
+from mhap_spark.config import PRESETS, MhapConfig
 from mhap_spark.ops.multimodal import image_stats
 from mhap_spark.pipeline import run_pipeline
 from mhap_spark.synth import INPUT_SCHEMA_DDL, corpus_to_rows, generate_corpus, truth_pairs
@@ -216,6 +216,18 @@ def test_config_hash_ignores_execution_only_knobs():
     toggled = cfg.with_overrides(no_broadcast_hints=not cfg.no_broadcast_hints)
     assert cfg.config_hash() == toggled.config_hash()
     assert cfg.config_hash() != cfg.with_overrides(num_hashes=cfg.num_hashes + 1).config_hash()
+
+
+def test_preset_config_hashes_are_stable():
+    """config_hash keys every checkpoint manifest, so retiring or adding a
+    knob must not move the presets' hashes: a retired field is hashed at
+    the value it always had, and dropping that pin fails here."""
+    assert [PRESETS[i].config_hash() for i in (1, 2, 3, 4)] == [
+        "2da42ce07eadd021",
+        "83cc2e32a9aeae67",
+        "95213cf28008190a",
+        "1108e6f40780ed09",
+    ]
 
 
 def test_config_without_bands_is_rejected():

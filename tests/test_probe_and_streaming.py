@@ -708,19 +708,22 @@ def test_incremental_dedup_rejects_star_mode(tmp_path):
         IncrementalDedup(str(tmp_path), PRESET_SCALE)
 
 
-def test_keep_manifest_rejects_recurring_ids(spark, tmp_path):
-    """keep_manifest's documented precondition (image_id unique across the
-    stream) must fail loudly — an id recurring in a later batch would
-    silently mis-orient that pair's drop decision — and before any write,
-    so the rejected batch leaves nothing on disk."""
+@pytest.mark.parametrize("keep_manifest", [True, False])
+def test_keep_manifest_rejects_recurring_ids(spark, tmp_path, keep_manifest):
+    """image_id unique across the stream must fail loudly in both modes —
+    an id recurring in a later batch gives verify two sketches for one id
+    (duplicated, conflicting matches) and would mis-orient that pair's
+    drop decision — and before any write, so the rejected batch leaves
+    nothing on disk."""
     corpus = generate_corpus(60, seed=9)
     rows = corpus_to_rows(corpus)
     df = spark.createDataFrame(rows, INPUT_SCHEMA_DDL)
     base = str(tmp_path / "d")
-    sink = IncrementalDedup(base, CFG, keep_manifest=True)
+    sink = IncrementalDedup(base, CFG, keep_manifest=keep_manifest)
     sink.process_batch(df, 0)
-    with pytest.raises(ValueError, match="keep_manifest precondition"):
+    with pytest.raises(ValueError, match="recurring image_id"):
         sink.process_batch(df, 1)  # same ids again in a later batch
     for sub in ("matches", "keep", "signatures", "band_index"):
         assert not os.path.exists(os.path.join(base, sub, "batch_id=1")), sub
-    assert os.path.isdir(os.path.join(base, "keep", "batch_id=0"))
+    assert os.path.isdir(os.path.join(base, "matches", "batch_id=0"))
+    assert os.path.isdir(os.path.join(base, "keep", "batch_id=0")) == keep_manifest
